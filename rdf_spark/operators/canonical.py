@@ -82,14 +82,25 @@ def with_source_estimates(canonical: DataFrame) -> DataFrame:
     )
 
 
-def cluster_for_write(canonical: DataFrame, buckets: int = 32) -> DataFrame:
-    """Layout for materialization: hash-repartition on subject (co-
-    locates each entity's triples -> downstream entity-local joins are
-    shuffle-free with the same bucketing), then sort within partitions
-    for parquet min-max pruning on (subj, pred)."""
-    return canonical.repartition(buckets, "subj").sortWithinPartitions(
-        "subj", "pred", "obj_lex"
-    )
+def cluster_for_write(rows: DataFrame, buckets: int = 32) -> DataFrame:
+    """Layout for materialization, with ONE Exchange of its own:
+    hash-partition on subject (co-locates each entity's triples ->
+    downstream entity-local joins are shuffle-free with the same
+    bucketing), then sort within partitions for parquet min-max pruning
+    on (subj, pred).
+
+    Rows without a ``support`` column are raw triples: they are
+    canonicalized between the exchange and the sort. The triple key
+    contains ``subj``, so the subj hash partitioning already satisfies
+    the aggregate's distribution — partial and final aggregation run in
+    the same tasks and the whole canonical write plan has a single
+    Exchange, where canonicalizing first costs one for the groupBy plus
+    one for the repartition. Rows and part files are those of
+    ``cluster_for_write(canonicalize(triples))``."""
+    by_subj = rows.repartition(buckets, "subj")
+    if "support" not in rows.columns:
+        by_subj = canonicalize(by_subj)
+    return by_subj.sortWithinPartitions("subj", "pred", "obj_lex")
 
 
 def exact_duplicate_docs(triples: DataFrame, url_col: str = "url") -> DataFrame:

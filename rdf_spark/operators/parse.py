@@ -8,6 +8,8 @@ per-row Python UDFs anywhere (BASELINE.json input_hint).
 Scale design:
 - one Python parse call per document, batched via Arrow
   (spark.sql.execution.arrow.maxRecordsPerBatch sizes the batch);
+  raw html pages are extracted and parsed in the same Python pass, so
+  a crawl page crosses the Arrow boundary once;
 - parse failures become rows with ``error`` set (bad documents at web
   scale are data, not exceptions — SURVEY.md §2.3 E13);
 - the output is partition-preserving: no shuffle is introduced by
@@ -17,6 +19,7 @@ Scale design:
 from __future__ import annotations
 
 import re
+from itertools import repeat
 from typing import Iterator
 
 import pandas as pd
@@ -29,6 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources.extract import extract_blocks_from_html
 from ..terms import term_to_flat
 
 TRIPLES_SCHEMA = StructType(
@@ -161,33 +165,48 @@ def sniff_format(text: str) -> str:
 
 
 def parse_pages(pages: DataFrame, default_format: str = "turtle") -> DataFrame:
-    """pages(url, text[, format]) -> triples DataFrame.
+    """pages -> triples DataFrame, in ONE mapInPandas pass.
 
-    Runs the grammar kernels via mapInPandas (Arrow-batched). The page
-    ``url`` seeds the base IRI for relative-IRI resolution (mirrors the
-    ``cwd`` argument of the reference's EvaluateDocument,
-    /root/reference/turtle/doc.go:13-15).
+    Accepted input shapes:
 
-    ``default_format`` applies where no ``format`` column exists or
-    its value is null; pass ``"auto"`` to sniff per document
-    (:func:`sniff_format`) — the crawl-realistic mode for pages with
-    missing or wrong content types.
+    - ``(url, html, ...)`` — raw crawl pages. A frame with an ``html``
+      column is parsed from its html: inside the same Python pass each
+      page is run through :func:`extract_blocks_from_html` and every
+      embedded block straight into :func:`doc_to_rows`, so the blocks
+      never cross the Arrow boundary. The result equals
+      ``parse_pages(extract_pages(pages))`` row for row, error rows
+      included; other columns (``text``, ``lang``, ...) are ignored.
+    - ``(url, text[, format])`` — one document per row, e.g. the output
+      of :func:`extract_pages` or a text corpus. ``default_format``
+      applies where no ``format`` column exists or its value is null;
+      pass ``"auto"`` to sniff per document (:func:`sniff_format`) —
+      the crawl-realistic mode for pages with missing or wrong content
+      types.
+
+    The page ``url`` seeds the base IRI for relative-IRI resolution
+    (mirrors the ``cwd`` argument of the reference's EvaluateDocument).
     """
-    has_fmt = "format" in pages.columns
-    cols = ["url", "text"] + (["format"] if has_fmt else [])
-    src = pages.select(*cols)
+    if "html" in pages.columns:
+        src = pages.select("url", "html")
 
-    def resolve(fmt, text):
-        f = fmt if fmt is not None else default_format
-        return sniff_format(text) if f == "auto" else f
+        def documents(pdf: pd.DataFrame):
+            for url, html in zip(pdf["url"], pdf["html"]):
+                for _, fmt, text in extract_blocks_from_html(html):
+                    yield url, fmt, text
+    else:
+        has_fmt = "format" in pages.columns
+        src = pages.select("url", "text", *(["format"] if has_fmt else []))
+
+        def documents(pdf: pd.DataFrame):
+            fmts = pdf["format"] if has_fmt else repeat(None)
+            for url, text, fmt in zip(pdf["url"], pdf["text"], fmts):
+                f = fmt if fmt is not None else default_format
+                yield url, sniff_format(text) if f == "auto" else f, text
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: list[tuple] = []
-            fmts = pdf["format"] if has_fmt else None
-            for i, (url, text) in enumerate(zip(pdf["url"], pdf["text"])):
-                fmt = resolve(fmts.iloc[i] if fmts is not None else None,
-                              text)
+            for url, fmt, text in documents(pdf):
                 out.extend(doc_to_rows(url, fmt, text))
             yield pd.DataFrame(out, columns=_COLS)
 

@@ -29,40 +29,49 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.canonical import canonicalize, cluster_for_write
 from ..operators.link import link_entities
 from ..operators.parse import good_triples, parse_pages
 from ..operators.skolemize import skolemize
-from ..sources.extract import extract_pages
 
 
 def parse_stage(pages: DataFrame, from_html: bool = True,
                 text_format: str = "turtle") -> DataFrame:
     """pages -> parsed rows (good triples AND errors-as-rows; lazy).
-    The single expensive stage: extract + grammar parse. Everything
-    downstream (triple build, error accounting) derives from this one
-    DataFrame so the parse runs once per bucket. ``text_format`` names
-    the syntax of the ``text`` column when not extracting from HTML; a
-    ``format`` column on the input overrides it per row."""
+    The single expensive stage, and a single Python pass: with
+    ``from_html`` the pages' html goes straight into
+    :func:`parse_pages`, which extracts the embedded blocks and parses
+    them in the same ``mapInPandas`` (no intermediate blocks frame).
+    Everything downstream (triple build, error accounting) derives from
+    this one DataFrame so the parse runs once per bucket.
+    ``text_format`` names the syntax of the ``text`` column when not
+    extracting from HTML; a ``format`` column on the input overrides it
+    per row."""
     if from_html:
-        blocks = extract_pages(pages)
+        src = pages.select("url", "html")
     elif "format" in pages.columns:
-        blocks = pages.select("url", "format", "text")
+        src = pages.select("url", "format", "text")
     else:
-        blocks = pages.select("url", F.lit(text_format).alias("format"), "text")
-    return parse_pages(blocks)
+        src = pages.select("url", F.lit(text_format).alias("format"), "text")
+    return parse_pages(src)
+
+
+def link_stage(parsed: DataFrame,
+               dictionary: DataFrame | None = None) -> DataFrame:
+    """parsed rows -> linked raw triples (skolemize -> link)."""
+    triples = skolemize(good_triples(parsed))
+    if dictionary is not None:
+        triples = link_entities(triples, dictionary)
+    return triples
 
 
 def finish_triples(parsed: DataFrame,
                    dictionary: DataFrame | None = None) -> DataFrame:
     """parsed rows -> canonical triples (skolemize -> link -> dedupe)."""
-    triples = skolemize(good_triples(parsed))
-    if dictionary is not None:
-        triples = link_entities(triples, dictionary)
-    return canonicalize(triples)
+    return canonicalize(link_stage(parsed, dictionary))
 
 
 def build_triples(
@@ -79,6 +88,31 @@ def parse_errors(pages: DataFrame, from_html: bool = True,
                  text_format: str = "turtle") -> DataFrame:
     parsed = parse_stage(pages, from_html, text_format)
     return parsed.where(F.col("error").isNotNull()).select("url", "error")
+
+
+def bucket_write_plan(
+    pages: DataFrame,
+    dictionary: DataFrame | None = None,
+    from_html: bool = True,
+    text_format: str = "turtle",
+) -> tuple[DataFrame, list[Observation]]:
+    """One checkpoint bucket: the canonical, subj-clustered rows to
+    write, plus the Observations that fill its lineage. Writing the
+    frame is the bucket's only action — one Python pass (extract +
+    parse), one Exchange (``cluster_for_write`` on raw triples) — and the
+    counts ride along on it: ``docs_in`` on the pages, ``docs_failed``
+    (error rows) and ``raw_triples`` on the parsed rows,
+    ``triples_out`` on the rows written."""
+    obs = [Observation() for _ in range(3)]
+    pages = pages.observe(obs[0], F.count(F.lit(1)).alias("docs_in"))
+    err = F.col("error")
+    parsed = parse_stage(pages, from_html, text_format).observe(
+        obs[1],
+        F.count(F.when(err.isNotNull(), 1)).alias("docs_failed"),
+        F.count(F.when(err.isNull(), 1)).alias("raw_triples"),
+    )
+    out = cluster_for_write(link_stage(parsed, dictionary), buckets=4)
+    return out.observe(obs[2], F.count(F.lit(1)).alias("triples_out")), obs
 
 
 class PipelineRun:
@@ -125,11 +159,12 @@ class PipelineRun:
         bucketed = pages.withColumn(
             "__bucket", F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int")
         )
-        # Per bucket: ONE parse. The parsed rows (flat triple columns,
-        # far smaller than the raw HTML) are persisted and feed both the
-        # triple build and the error count; docs_in is a column-pruned
-        # count of the bucket's pages (url only, no parse) and
-        # triples_out a parquet-footer count of the written partition.
+        # Per bucket: ONE Spark action, the parquet write of
+        # bucket_write_plan — one Python pass over the pages (extract +
+        # parse fused in parse_pages) and one Exchange (hash on subj,
+        # shared by the canonical aggregate and the file layout). The
+        # lineage counts are Observations collected by that same write:
+        # no persisted parse, no side counts, no re-read of the output.
         # At real scale each bucket is an Iceberg partition-filtered
         # scan instead of the hash filter.
         for b in range(self.n_buckets):
@@ -137,25 +172,22 @@ class PipelineRun:
                 continue
             t0 = time.monotonic()
             part = bucketed.where(F.col("__bucket") == b).drop("__bucket")
-            docs_in = part.select("url").count()
-            parsed = parse_stage(part, from_html=from_html,
-                                 text_format=text_format).persist()
-            try:
-                canonical = finish_triples(parsed, dictionary)
-                out_path = os.path.join(self.data_dir, f"part={b}")
-                clustered = cluster_for_write(canonical, buckets=4)
-                clustered.write.mode("overwrite").parquet(out_path)
-                failed = parsed.where(F.col("error").isNotNull()).count()
-                triples_out = self.spark.read.parquet(out_path).count()
-            finally:
-                parsed.unpersist()
+            out, obs = bucket_write_plan(part, dictionary, from_html=from_html,
+                                         text_format=text_format)
+            out.write.mode("overwrite").parquet(
+                os.path.join(self.data_dir, f"part={b}"))
+            counts = {k: v for o in obs for k, v in o.get.items()}
             wall_ms = int((time.monotonic() - t0) * 1000)
+            triples_out = counts["triples_out"]
             lineage = {
                 "input_partition": b,
                 "job_run_id": self.run_id,
-                "docs_in": docs_in,
-                "docs_failed": failed,
+                "docs_in": counts["docs_in"],
+                "docs_failed": counts["docs_failed"],
+                "raw_triples": counts["raw_triples"],
                 "triples_out": triples_out,
+                "dedupe_ratio": (triples_out / counts["raw_triples"]
+                                 if counts["raw_triples"] else None),
                 "wall_ms": wall_ms,
             }
             with open(os.path.join(self.lineage_dir, f"{b}.json"), "w") as f:

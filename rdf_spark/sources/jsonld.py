@@ -38,7 +38,6 @@ import json
 from ..terms import (
     RDF_FIRST,
     RDF_NIL,
-    RDF_NS,
     RDF_REST,
     RDF_TYPE,
     XSD_BOOLEAN,

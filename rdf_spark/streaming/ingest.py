@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.link import link_entities
 from ..operators.parse import parse_pages
 from ..operators.skolemize import skolemize
-from ..sources.extract import extract_pages
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -44,13 +43,15 @@ def stream_triples(pages: DataFrame, dictionary: DataFrame | None = None,
                    from_html: bool = True,
                    text_format: str = "turtle") -> DataFrame:
     """pages stream -> triples stream (stateless: parse + skolemize +
-    link; parse errors kept as rows with ``error`` set)."""
+    link; parse errors kept as rows with ``error`` set). html pages go
+    straight to :func:`parse_pages`, which extracts and parses them in
+    one Python pass."""
     from pyspark.sql import functions as F
 
-    blocks = extract_pages(pages) if from_html else pages.select(
+    src = pages.select("url", "html") if from_html else pages.select(
         "url", F.lit(text_format).alias("format"), "text"
     )
-    triples = parse_pages(blocks)
+    triples = parse_pages(src)
     triples = skolemize(triples)
     if dictionary is not None:
         good = triples.where(F.col("error").isNull())
@@ -92,9 +93,10 @@ def ingest_available(
 def compact_canonical(spark: SparkSession, triples_dir: str,
                       out_dir: str) -> None:
     """Batch compaction companion: canonical (s,p,o,g) dedupe over the
-    streamed appends, clustered for write (run per closed partition)."""
-    from ..operators.canonical import canonicalize, cluster_for_write
+    streamed appends, clustered for write with one shuffle (run per
+    closed partition)."""
+    from ..operators.canonical import cluster_for_write
     from pyspark.sql import functions as F
 
     t = spark.read.parquet(triples_dir).where(F.col("error").isNull()).drop("error")
-    cluster_for_write(canonicalize(t)).write.mode("overwrite").parquet(out_dir)
+    cluster_for_write(t).write.mode("overwrite").parquet(out_dir)

@@ -2,10 +2,22 @@
 (kill between partitions, re-run, byte-equal output), idempotence,
 lineage (SURVEY.md §5.2)."""
 
-import pytest
+import datetime as dt
+import os
 
-from rdf_spark.plans.pipeline import PipelineRun, build_triples
-from rdf_spark.sources.pages import entity_dictionary, generate_pages
+import pytest
+from pyspark.sql import functions as F
+
+from rdf_spark.operators.canonical import canonicalize, cluster_for_write
+from rdf_spark.operators.parse import good_triples, parse_pages
+from rdf_spark.plans.pipeline import PipelineRun, bucket_write_plan, build_triples
+from rdf_spark.sources.extract import extract_pages
+from rdf_spark.sources.pages import (
+    PAGES_SCHEMA,
+    entity_dictionary,
+    generate_pages,
+    generate_rows,
+)
 
 
 @pytest.fixture(scope="module")
@@ -56,9 +68,10 @@ def test_rerun_is_idempotent_noop(spark, pages, tmp_path):
 
 def test_bucket_loop_parses_once_per_bucket(spark, pages, tmp_path, monkeypatch):
     """Plan regression: the bucket loop must build exactly one parse
-    plan per bucket (triples, error count and lineage all derive from
-    the one persisted parsed DataFrame — a second parse_pages call per
-    bucket doubles the dominant cost at scale)."""
+    plan per bucket (the triples written and the observed error and
+    raw-triple counts all derive from the one parsed DataFrame of the
+    bucket's single write — a second parse_pages call per bucket
+    doubles the dominant cost at scale)."""
     import rdf_spark.plans.pipeline as pl
 
     calls = []
@@ -121,3 +134,127 @@ def test_bucketed_table_finalize_star_join(spark, pages, tmp_path):
         assert _normalized(spark.table(table)) == _normalized(p.read_output())
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+# Hand-built crawl pages covering every extraction path: Turtle, JSON-LD
+# and N-Quads script blocks, microdata, RDFa, malformed blocks (alone
+# and beside a good block) and a page with no RDF at all.
+_MIXED_HTML = [
+    '<html><head><script type="text/turtle">@prefix s: <http://schema.org/> .'
+    ' <#me> s:name "Ada"@en ; s:knows [ s:name "Bob" ] .</script></head></html>',
+    '<html><script type="application/ld+json">{"@context": "http://schema.org/",'
+    ' "@id": "http://example.org/entity/e1", "@type": "Person", "name": "Eve"}'
+    '</script></html>',
+    '<html><script type="application/n-quads"><http://example.org/entity/e2>'
+    ' <http://schema.org/name> "Q" <http://g.example/1> .\n_:b <http://schema.org/age>'
+    ' "3"^^<http://www.w3.org/2001/XMLSchema#integer> .</script></html>',
+    '<html><body><div itemscope itemtype="http://schema.org/Product">'
+    '<span itemprop="name">Widget</span><a itemprop="url" href="/w">w</a>'
+    '</div></body></html>',
+    '<html><body><div vocab="http://schema.org/" typeof="Person" resource="#p">'
+    '<span property="name">Rdfa Person</span></div></body></html>',
+    '<html><script type="text/turtle">@prefix s: <http://schema.org/> . <#x> s:name'
+    ' "unterminated .</script></html>',
+    '<html><script type="application/ld+json">{"@id": </script>'
+    '<script type="text/turtle"><http://example.org/entity/e3>'
+    ' <http://schema.org/name> "ok" .</script></html>',
+    '<html><script type="application/n-quads"><a> <b> </script></html>',
+    '<html><body><p>no embedded RDF</p></body></html>',
+]
+
+
+@pytest.fixture(scope="module")
+def mixed_pages(spark):
+    """Generated Turtle pages plus the hand-built ones, cached."""
+    ts = dt.datetime(2024, 1, 1)
+    rows = list(generate_rows(40, seed=7, suite_fraction=0, bad_fraction=0))
+    rows += [(f"http://mixed.example/page/{i}", ts, html.encode(), None, "en")
+             for i, html in enumerate(_MIXED_HTML)]
+    return spark.createDataFrame(rows, PAGES_SCHEMA).cache()
+
+
+def test_fused_html_parse_equals_extract_then_parse(spark, mixed_pages):
+    """parse_pages on html pages (extract + parse in one Python pass)
+    returns exactly the rows of the two-pass extract_pages -> parse_pages
+    composition, error rows included."""
+    fused = parse_pages(mixed_pages)
+    chained = parse_pages(extract_pages(mixed_pages))
+    assert fused.exceptAll(chained).count() == 0
+    assert chained.exceptAll(fused).count() == 0
+    errors = fused.where(F.col("error").isNotNull())
+    assert errors.count() == 3
+    formats = {r.format for r in extract_pages(mixed_pages).select("format")
+               .distinct().collect()}
+    assert formats >= {"turtle", "jsonld", "nquads", "microdata", "rdfa"}
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+
+
+def _triples_side_exchanges(plan: str) -> list[str]:
+    """Exchange lines of a plan tree string, skipping every subtree
+    under a BroadcastExchange (the dictionary side of the link joins)."""
+    out, skip_below = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = None
+        if "BroadcastExchange" in line:
+            skip_below = depth
+        elif "Exchange " in line:
+            out.append(line.strip(" :+-"))
+    return out
+
+
+def test_bucket_write_has_one_subject_exchange(spark, mixed_pages):
+    """The bucket write plan shuffles the triples once: the subj hash
+    partitioning of cluster_for_write on raw triples also serves the
+    canonical aggregate. Its partitions hold the same rows as the
+    two-exchange cluster_for_write(canonicalize(...)) composition."""
+    out, _ = bucket_write_plan(mixed_pages, entity_dictionary(spark, 50))
+    exchanges = _triples_side_exchanges(
+        out._jdf.queryExecution().executedPlan().toString())
+    assert len(exchanges) == 1, exchanges
+    assert exchanges[0].startswith("Exchange hashpartitioning(subj#"), exchanges
+
+    triples = good_triples(parse_pages(mixed_pages))
+    part = F.spark_partition_id().alias("p")
+    one = cluster_for_write(triples, 4).select("*", part)
+    two = cluster_for_write(canonicalize(triples), 4).select("*", part)
+    assert one.exceptAll(two).count() == 0
+    assert two.exceptAll(one).count() == 0
+
+
+def test_bucket_is_one_action_with_observed_lineage(spark, mixed_pages, tmp_path,
+                                                    monkeypatch):
+    """Each bucket's lineage comes from Observations on its one write:
+    no count(), collect() or read-back runs inside PipelineRun.run, and
+    the observed counts equal an independent recount."""
+    run = PipelineRun(spark, str(tmp_path / "one"), n_buckets=2, run_id="a")
+    df_cls, session_cls = type(mixed_pages), type(spark)
+
+    def refuse(*_a, **_k):
+        raise AssertionError("side action inside PipelineRun.run")
+
+    with monkeypatch.context() as m:
+        m.setattr(df_cls, "count", refuse)
+        m.setattr(df_cls, "collect", refuse)
+        m.setattr(session_cls, "read", property(refuse))
+        stats = run.run(mixed_pages, entity_dictionary(spark, 50))
+    assert stats["processed"] == [0, 1]
+
+    bucket = F.pmod(F.xxhash64("url"), F.lit(2))
+    for x in run.lineage():
+        b = x["input_partition"]
+        part = mixed_pages.where(bucket == b)
+        parsed = parse_pages(extract_pages(part))
+        written = spark.read.parquet(os.path.join(run.data_dir, f"part={b}"))
+        assert x["docs_in"] == part.count()
+        assert x["docs_failed"] == parsed.where(F.col("error").isNotNull()).count()
+        assert x["raw_triples"] == parsed.where(F.col("error").isNull()).count()
+        assert x["triples_out"] == written.count()
+        assert x["dedupe_ratio"] == x["triples_out"] / x["raw_triples"]
+    lineage = run.lineage()
+    assert sum(x["docs_in"] for x in lineage) == 40 + len(_MIXED_HTML)
+    assert sum(x["docs_failed"] for x in lineage) == 3
+    assert stats["triples_out"] == sum(x["triples_out"] for x in lineage)
