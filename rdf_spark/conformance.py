@@ -60,7 +60,6 @@ def build_corpus():
     suite doc (golden as quad tuples; graph None for triple syntaxes)."""
     from .grammar import trig as trig_mod
     from .grammar import turtle as ttl
-    from .grammar.nquads import parse_document as parse_nq
     from .grammar.ntriples import parse_document as parse_nt
 
     corpus = []
@@ -80,7 +79,7 @@ def build_corpus():
         if t.test_type != "rdft:TestNQuadsPositiveSyntax":
             continue
         text = t.action_text()
-        golden = parse_nq(text, validate=True)
+        golden = parse_nt(text, validate=True, quads=True)
         corpus.append((t.base_iri, "nquads", text, golden, "nquads"))
     for t in load_manifest_regex("trig"):
         if t.test_type != "rdft:TestTrigEval":

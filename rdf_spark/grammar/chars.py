@@ -44,12 +44,25 @@ UCHAR = rf"\\u[{HEX}]{{4}}|\\U[{HEX}]{{8}}"
 # ECHAR ::= '\' [tbnrf"'\]
 ECHAR = r"\\[tbnrf\"'\\]"
 
+
+def unrolled(chars: str, escape: str) -> str:
+    """``([chars] | escape)*`` as an unrolled possessive run,
+    ``[chars]*+(?:escape[chars]*+)*+``.
+
+    The plain alternation keeps one backtrack entry per character, so a
+    long literal or IRI costs hundreds of bytes of memory per input
+    byte; the possessive form keeps none. It always takes the longest run, which
+    is the only one that can match wherever the text after the run can
+    start with neither a char of ``chars`` nor an escape (true at every
+    use here). Possessive quantifiers need Python >= 3.11."""
+    return rf"[{chars}]*+(?:(?:{escape})[{chars}]*+)*+"
+
+
 # IRIREF ::= '<' ([^#x00-#x20<>"{}|^`\] | UCHAR)* '>'
-IRI_CHAR = rf"[^\x00-\x20<>\"{{}}|^`\\]|{UCHAR}"
-IRIREF_BODY = rf"(?:{IRI_CHAR})*"
+IRIREF_BODY = unrolled(r"^\x00-\x20<>\"{}|^`\\", UCHAR)
 
 # STRING_LITERAL_QUOTE ::= '"' ([^#x22#x5C#xA#xD] | ECHAR | UCHAR)* '"'
-STRING_CHAR_DQ = rf"[^\"\\\n\r]|{ECHAR}|{UCHAR}"
+STRING_BODY_DQ = unrolled(r"^\"\\\n\r", rf"{ECHAR}|{UCHAR}")
 
 # BLANK_NODE_LABEL ::= '_:' (PN_CHARS_U | [0-9]) ((PN_CHARS | '.')* PN_CHARS)?
 BNODE_LABEL = rf"[{PN_CHARS_U}0-9](?:(?:[{PN_CHARS}.])*[{PN_CHARS}])?"
@@ -132,9 +145,10 @@ _IPRIVATE = "\uE000-\uF8FF\U000F0000-\U000FFFFD\U00100000-\U0010FFFD"
 _IUNRESERVED = rf"A-Za-z0-9\-._~{_UCSCHAR}"
 _SUB_DELIMS = r"!$&'()*+,;="
 _PCT = rf"%[{HEX}]{{2}}"
-_IPCHAR = rf"(?:[{_IUNRESERVED}{_SUB_DELIMS}:@]|{_PCT})"
-_IUSERINFO = rf"(?:[{_IUNRESERVED}{_SUB_DELIMS}:]|{_PCT})*"
-_IREG_NAME = rf"(?:[{_IUNRESERVED}{_SUB_DELIMS}]|{_PCT})*"
+# ipchar without pct-encoded, as a char-class body
+_IPCHARS = rf"{_IUNRESERVED}{_SUB_DELIMS}:@"
+_IUSERINFO = unrolled(rf"{_IUNRESERVED}{_SUB_DELIMS}:", _PCT)
+_IREG_NAME = unrolled(rf"{_IUNRESERVED}{_SUB_DELIMS}", _PCT)
 _IPV4 = r"(?:25[0-5]|2[0-4][0-9]|1[0-9]{2}|[1-9]?[0-9])(?:\.(?:25[0-5]|2[0-4][0-9]|1[0-9]{2}|[1-9]?[0-9])){3}"
 _H16 = rf"[{HEX}]{{1,4}}"
 _LS32 = rf"(?:{_H16}:{_H16}|{_IPV4})"
@@ -153,14 +167,14 @@ _IPVFUTURE = rf"v[{HEX}]+\.[{_IUNRESERVED.replace(_UCSCHAR, '')}{_SUB_DELIMS}:]+
 _IP_LITERAL = rf"\[(?:{_IPV6}|{_IPVFUTURE})\]"
 _IHOST = rf"(?:{_IP_LITERAL}|{_IPV4}|{_IREG_NAME})"
 _IAUTHORITY = rf"(?:{_IUSERINFO}@)?{_IHOST}(?::[0-9]*)?"
-_ISEGMENT = rf"{_IPCHAR}*"
-_ISEGMENT_NZ = rf"{_IPCHAR}+"
-_IPATH_ABEMPTY = rf"(?:/{_ISEGMENT})*"
-_IPATH_ABSOLUTE = rf"/(?:{_ISEGMENT_NZ}(?:/{_ISEGMENT})*)?"
-_IPATH_ROOTLESS = rf"{_ISEGMENT_NZ}(?:/{_ISEGMENT})*"
+_ISEGMENT = unrolled(_IPCHARS, _PCT)
+_ISEGMENT_NZ = rf"(?:[{_IPCHARS}]|{_PCT}){_ISEGMENT}"
+_IPATH_ABEMPTY = rf"(?:/{_ISEGMENT})*+"
+_IPATH_ABSOLUTE = rf"/(?:{_ISEGMENT_NZ}(?:/{_ISEGMENT})*+)?"
+_IPATH_ROOTLESS = rf"{_ISEGMENT_NZ}(?:/{_ISEGMENT})*+"
 _IHIER_PART = rf"(?://{_IAUTHORITY}{_IPATH_ABEMPTY}|{_IPATH_ABSOLUTE}|{_IPATH_ROOTLESS}|)"
-_IQUERY = rf"(?:[{_IUNRESERVED}{_SUB_DELIMS}:@/?{_IPRIVATE}]|{_PCT})*"
-_IFRAGMENT = rf"(?:[{_IUNRESERVED}{_SUB_DELIMS}:@/?]|{_PCT})*"
+_IQUERY = unrolled(rf"{_IPCHARS}/?{_IPRIVATE}", _PCT)
+_IFRAGMENT = unrolled(rf"{_IPCHARS}/?", _PCT)
 _ABSOLUTE_IRI_RE = re.compile(
     rf"{_SCHEME}:{_IHIER_PART}(?:\?{_IQUERY})?(?:#{_IFRAGMENT})?\Z"
 )

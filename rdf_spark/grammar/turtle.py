@@ -44,13 +44,17 @@ import re
 
 from .chars import (
     BNODE_LABEL,
+    ECHAR,
     HEX,
     IRIREF_BODY,
     LANGTAG,
     PN_CHARS,
     PN_CHARS_BASE,
     PN_CHARS_U,
+    STRING_BODY_DQ,
+    UCHAR,
     unescape_unicode,
+    unrolled,
 )
 from .ntriples import RDFSyntaxError
 from ..terms import (
@@ -82,9 +86,6 @@ class RDFEvalError(ValueError):
 
 # --- terminals --------------------------------------------------------------
 
-_ECHAR = r"\\[tbnrf\"'\\]"
-_UCHAR = rf"\\u[{HEX}]{{4}}|\\U[{HEX}]{{8}}"
-
 _IRIREF_RE = re.compile(rf"<({IRIREF_BODY})>")
 _IRIREF_FULL_RE = re.compile(rf"(?:{IRIREF_BODY})\Z")
 
@@ -108,15 +109,16 @@ _DOUBLE_RE = re.compile(
 )
 _BOOLEAN_RE = re.compile(r"true|false")
 
-_STRING_DQ_RE = re.compile(rf"\"((?:[^\"\\\n\r]|{_ECHAR}|{_UCHAR})*)\"")
-_STRING_SQ_RE = re.compile(rf"'((?:[^'\\\n\r]|{_ECHAR}|{_UCHAR})*)'")
+_STRING_DQ_RE = re.compile(rf"\"({STRING_BODY_DQ})\"")
+_STRING_BODY_SQ = unrolled(r"^'\\\n\r", rf"{ECHAR}|{UCHAR}")
+_STRING_SQ_RE = re.compile(rf"'({_STRING_BODY_SQ})'")
 # long strings: Optional('""'|'"') then (AnyBut('"','\') | ECHAR | UCHAR),
 # zero or more — content can never end with a quote (grammar quirk = spec)
 _STRING_LQ_RE = re.compile(
-    rf"\"\"\"((?:(?:\"\"|\")?(?:[^\"\\]|{_ECHAR}|{_UCHAR}))*)\"\"\"", re.DOTALL
+    rf"\"\"\"((?:(?:\"\"|\")?(?:[^\"\\]|{ECHAR}|{UCHAR}))*)\"\"\"", re.DOTALL
 )
 _STRING_LSQ_RE = re.compile(
-    rf"'''((?:(?:''|')?(?:[^'\\]|{_ECHAR}|{_UCHAR}))*)'''", re.DOTALL
+    rf"'''((?:(?:''|')?(?:[^'\\]|{ECHAR}|{UCHAR}))*)'''", re.DOTALL
 )
 
 # evaluator fast paths: inputs whose canonicalization is the identity

@@ -1,6 +1,8 @@
 """Vectorized parse operators: pages -> triples DataFrame.
 
-The per-document parser family (rdf_spark.grammar) runs inside
+The per-document parser family (rdf_spark.grammar: the one line
+grammar for N-Triples, N-Quads and their RDF-star forms, Turtle, TriG;
+plus the HTML, JSON-LD and RDF/XML sources) runs inside
 ``mapInPandas`` — Arrow batches in, exploded triple batches out; only
 flat columns cross the UDF boundary (SURVEY.md §1.3, §3.1-3.3). No
 per-row Python UDFs anywhere (BASELINE.json input_hint).
@@ -54,17 +56,26 @@ TRIPLES_SCHEMA = StructType(
 _COLS = [f.name for f in TRIPLES_SCHEMA.fields]
 
 
+# line-format name -> parse_document(quads=, star=) of the one line grammar
+_LINE_FORMATS = {
+    "ntriples": (False, False), "application/n-triples": (False, False),
+    "nquads": (True, False), "application/n-quads": (True, False),
+    "ntriples-star": (False, True), "application/n-triples-star": (False, True),
+    "nquads-star": (True, True), "application/n-quads-star": (True, True),
+}
+
+
 def parse_text(fmt: str, text: str, base: str):
     """Parse one document -> list of quads (graph None for triple
-    syntaxes). Dispatch on media-type-ish format name."""
-    if fmt in ("ntriples", "application/n-triples"):
+    syntaxes). Dispatch on media-type-ish format name; the four
+    line-based syntaxes (N-Triples, N-Quads and their RDF-star forms)
+    share the one line grammar, :func:`rdf_spark.grammar.ntriples.parse_document`."""
+    if fmt in _LINE_FORMATS:
         from ..grammar.ntriples import parse_document
 
-        return [(s, p, o, None) for s, p, o in parse_document(text)]
-    if fmt in ("nquads", "application/n-quads"):
-        from ..grammar.nquads import parse_document
-
-        return parse_document(text)
+        quads, star = _LINE_FORMATS[fmt]
+        out = parse_document(text, quads=quads, star=star)
+        return out if quads else [(s, p, o, None) for s, p, o in out]
     if fmt in ("turtle", "text/turtle"):
         from ..grammar.turtle import parse_and_evaluate
 
@@ -73,14 +84,6 @@ def parse_text(fmt: str, text: str, base: str):
         from ..grammar.trig import parse_and_evaluate
 
         return parse_and_evaluate(text)
-    if fmt in ("ntriples-star", "application/n-triples-star"):
-        from ..grammar.star import parse_document
-
-        return [(s, p, o, None) for s, p, o in parse_document(text)]
-    if fmt in ("nquads-star", "application/n-quads-star"):
-        from ..grammar.star import parse_document_nq
-
-        return parse_document_nq(text)
     if fmt in ("jsonld", "application/ld+json"):
         from ..sources.jsonld import parse_jsonld
 

@@ -5,14 +5,16 @@ Eval tests are count-checked against the golden .nq plus an
 output-reparses-as-NQ check — exactly the reference's procedure
 (trig/doc_test.go:169-176)."""
 
+from functools import partial
+
 import pytest
 
 from rdf_spark import terms as T
 from rdf_spark.grammar import trig
-from rdf_spark.grammar.nquads import parse_document as parse_nq
-from rdf_spark.grammar.ntriples import RDFSyntaxError
+from rdf_spark.grammar.ntriples import RDFSyntaxError, parse_document
 from rdf_spark.testsuite import load_manifest_regex
 
+parse_nq = partial(parse_document, quads=True)
 TESTS = load_manifest_regex("trig")
 
 

@@ -1,0 +1,51 @@
+"""Adversarial memory bound: one huge term must not blow up the parser.
+
+An 8 MB literal or IRI once cost the line grammar 110-240 bytes of RSS
+per input byte (one regex backtrack entry per character). Each case runs
+in a fresh interpreter because ``ru_maxrss`` is a high-water mark: the
+growth it shows must come from parsing this one document.
+"""
+
+import json
+import os
+import subprocess
+import sys
+
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+SIZE = 8 * 1024 * 1024
+RSS_BOUND_MB = 256
+
+_CASE = r"""
+import json, resource, sys
+from rdf_spark.operators.parse import doc_to_rows
+
+fmt, kind, size = sys.argv[1], sys.argv[2], int(sys.argv[3])
+graph = " <http://ex/g>" if fmt.startswith("nquads") else ""
+if kind == "literal":
+    big = "ab\\tc " * (size // 6)
+    doc = f'<http://ex/s> <http://ex/p> "{big}"{graph} .\n'
+else:
+    big = "http://ex/" + "a/b-c" * (size // 5)
+    doc = f"<http://ex/s> <http://ex/p> <{big}>{graph} .\n"
+before = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+rows = doc_to_rows("http://ex/doc", fmt, doc)
+after = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+print(json.dumps({"rows": len(rows), "error": rows[0][-1], "lex_len": len(rows[0][5] or ""),
+                  "grew_mb": (after - before) / 1024}))
+"""
+
+
+@pytest.mark.parametrize("kind", ["literal", "iri"])
+@pytest.mark.parametrize("fmt", ["ntriples", "nquads", "nquads-star"])
+def test_huge_term_parses_in_bounded_memory(fmt, kind):
+    env = dict(os.environ, PYTHONPATH=ROOT + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    out = subprocess.run(
+        [sys.executable, "-c", _CASE, fmt, kind, str(SIZE)],
+        capture_output=True, text=True, env=env, timeout=300, check=True,
+    )
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert res["rows"] == 1 and res["error"] is None
+    assert res["lex_len"] > SIZE * 0.8
+    assert res["grew_mb"] < RSS_BOUND_MB, res

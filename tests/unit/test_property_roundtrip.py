@@ -4,12 +4,14 @@ reference proves this with 27 hand-picked examples
 (turtle/doc_test.go:74-116); we prove it for the generated space."""
 
 import string
+from functools import partial
 
 from hypothesis import given, settings, strategies as st
 
 from rdf_spark.grammar.ntriples import parse_document
 from rdf_spark.terms import quad_str, sort_document, triple_str
-from rdf_spark.grammar.nquads import parse_document as parse_nq
+
+parse_nq = partial(parse_document, quads=True)
 
 # lexical space that survives NT escaping untouched (printable ASCII
 # minus quote/backslash — escape canonicalization itself is covered by

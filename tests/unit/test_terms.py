@@ -2,9 +2,12 @@
 equality (ported behaviors from reference ntriples/doc_test.go:44-124,
 nquads/doc_test.go:42-108)."""
 
+from functools import partial
+
 from rdf_spark.grammar.ntriples import parse_document
-from rdf_spark.grammar.nquads import parse_document as parse_nq
 from rdf_spark import terms as T
+
+parse_nq = partial(parse_document, quads=True)
 
 
 def test_serialization_roundtrip():
