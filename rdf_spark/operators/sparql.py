@@ -76,8 +76,9 @@ Semantics notes (documented contracts, mirrored by the test oracles):
   shared variable is null (OPTIONAL-sourced) is never removed — the
   spec's domain-intersection rule agrees when that is the only shared
   variable; the partially-bound MULTI-variable case diverges, and is
-  no longer silent: compiling such a query (>1 shared variable, a
-  nullable outer group) emits :class:`SparqlApproximationWarning`,
+  no longer silent: compiling such a query (>1 shared variable, an
+  outer or inner group that can bind null) emits
+  :class:`SparqlApproximationWarning`,
   and ``exact_null_semantics=True`` switches to the spec-exact
   broadcast compatibility anti-join (inner side must be
   broadcast-sized — the exact join is non-equi).  Fully-disjoint
@@ -118,7 +119,8 @@ class SparqlSyntaxError(ValueError):
 class SparqlApproximationWarning(UserWarning):
     """Emitted when a query hits a documented approximate semantics
     path (null-strict MINUS/EXISTS over multiple shared variables
-    where the outer group can bind null) and the exact flag is off."""
+    where the outer or inner group can bind null) and the exact flag
+    is off."""
 
 
 _TOKEN_RE = re.compile(
@@ -305,9 +307,6 @@ class _Parser:
         return plain.group(1) if plain else p
 
     # -- FILTER expressions -> pyspark Column ------------------------
-    def filter_expr(self) -> Column:
-        return self._or_expr()
-
     def _or_expr(self) -> Column:
         c = self._and_expr()
         while self.peek() == ("PUNCT", "||"):
@@ -382,17 +381,26 @@ class _Parser:
             raise SparqlSyntaxError("literal is not a boolean filter")
         return left  # BOUND(?x) etc. used directly as a boolean
 
-    def _vars_outside_spans(self, i0, i1, spans):
-        """Variable names whose token occurrence in [i0, i1) falls
-        outside every (a, b) aggregate-call span — the shared
-        dependency scan for SELECT expressions and HAVING/ORDER BY
-        aggregate validation."""
-        return {
+    def _agg_expr(self, parse):
+        """Run ``parse`` over one value expression that may contain
+        aggregate calls (a SELECT item, HAVING, an ORDER BY key) ->
+        (expr, new hidden __iagg items, variables occurring outside
+        every aggregate call, has_aggregate).  The outside variables
+        drive dependency analysis and non-grouped validation."""
+        i0, n0, s0 = self.i, len(self.inline_aggs), len(self._iagg_spans)
+        self._allow_inline_aggs = True
+        try:
+            expr = parse()
+        finally:
+            self._allow_inline_aggs = False
+        spans = self._iagg_spans[s0:]
+        outside = {
             self.toks[idx][1][1:]
-            for idx in range(i0, i1)
+            for idx in range(i0, self.i)
             if self.toks[idx][0] == "VAR"
             and not any(a <= idx < b for a, b in spans)
         }
+        return expr, self.inline_aggs[n0:], outside, bool(spans)
 
     def _agg_call_body(self, fn):
         """After an aggregate keyword: ``( [DISTINCT] ?v | * [;
@@ -614,29 +622,34 @@ class _Parser:
             return ("bool", val)
         raise SparqlSyntaxError(f"bad template term {val!r}")
 
+    def triples_block(self, term, pred, out) -> None:
+        """``s p o (, o)* (; p o (, o)*)* [;] [.]`` -> (s, p, o) tuples
+        appended to ``out``, reading terms with ``term`` and
+        predicates with ``pred`` — shared by WHERE groups and
+        templates (a dangling ``;`` may end the block, grammar [83])."""
+        subj = term()
+        while True:
+            p = pred()
+            while True:
+                out.append((subj, p, term()))
+                if self.peek() != ("PUNCT", ","):
+                    break
+                self.take()
+            if self.peek() != ("PUNCT", ";"):
+                break
+            self.take()
+            if self.peek() in (("PUNCT", "."), ("PUNCT", "}")):
+                break
+        if self.peek() == ("PUNCT", "."):
+            self.take()
+
     def template(self):
         """CONSTRUCT { ... } -> list of tagged (s, p, o) triples;
         supports the same ``;`` / ``,`` lists as WHERE, no paths."""
         self.expect_punct("{")
         out = []
         while self.peek() != ("PUNCT", "}"):
-            subj = self.term_tagged()
-            while True:
-                pred = self.term_tagged()
-                while True:
-                    out.append((subj, pred, self.term_tagged()))
-                    if self.peek() == ("PUNCT", ","):
-                        self.take()
-                        continue
-                    break
-                if self.peek() == ("PUNCT", ";"):
-                    self.take()
-                    if self.peek() in (("PUNCT", "."), ("PUNCT", "}")):
-                        break
-                    continue
-                break
-            if self.peek() == ("PUNCT", "."):
-                self.take()
+            self.triples_block(self.term_tagged, self.term_tagged, out)
         self.take()
         if not out:
             raise SparqlSyntaxError("empty CONSTRUCT template")
@@ -663,7 +676,7 @@ class _Parser:
                 if nk == "KW" and nv.upper() == "SELECT":
                     # { SELECT ... } subquery: evaluated bottom-up,
                     # joined into the group on its projected variables
-                    self.take()
+                    self.i += 2  # '{' SELECT
                     g["subqueries"].append(self.select_body())
                     self.expect_punct("}")
                     continue
@@ -688,29 +701,17 @@ class _Parser:
                     self.take()
                     if not positive:
                         self.expect_kw("EXISTS")
-                    inner = self.group()
-                    if inner["optionals"] or inner["unions"] or \
-                            inner["minuses"] or inner["exists"] or \
-                            inner["subqueries"]:
-                        raise SparqlSyntaxError(
-                            "nested OPTIONAL/UNION/MINUS/EXISTS/subquery "
-                            "inside EXISTS unsupported")
-                    g["exists"].append((positive, inner))
+                    g["exists"].append(
+                        (positive, self._flat_group("EXISTS")))
                     continue
                 self.expect_punct("(")
                 g["filters"].append(self._or_expr())
                 self.expect_punct(")")
                 continue
-            if kind == "KW" and val.upper() == "OPTIONAL":
+            if kind == "KW" and val.upper() in ("OPTIONAL", "MINUS"):
                 self.take()
-                inner = self.group()
-                if inner["optionals"] or inner["unions"] or \
-                        inner["minuses"] or inner["exists"] or \
-                        inner["subqueries"]:
-                    raise SparqlSyntaxError(
-                        "nested OPTIONAL/UNION/MINUS/EXISTS/subquery "
-                        "inside OPTIONAL unsupported")
-                g["optionals"].append(inner)
+                key = "optionals" if val.upper() == "OPTIONAL" else "minuses"
+                g[key].append(self._flat_group(val.upper()))
                 continue
             if kind == "KW" and val.upper() == "VALUES":
                 self.take()
@@ -761,49 +762,30 @@ class _Parser:
                         f"GRAPH needs a variable or IRI, got "
                         f"{self.peek()[1]!r}")
                 gterm = self.term()
-                inner = self.group()
-                if inner["optionals"] or inner["unions"] or \
-                        inner["values"] or inner["binds"] or \
-                        inner["minuses"] or inner["exists"] or \
-                        inner["subqueries"]:
-                    raise SparqlSyntaxError(
-                        "only triple patterns and FILTER inside GRAPH")
+                inner = self._flat_group("GRAPH")
                 g["patterns"].extend(
                     (s, p, o, gterm) for s, p, o in inner["patterns"])
                 g["filters"].extend(inner["filters"])
                 continue
-            if kind == "KW" and val.upper() == "MINUS":
-                self.take()
-                inner = self.group()
-                if inner["optionals"] or inner["unions"] or \
-                        inner["minuses"] or inner["exists"] or \
-                        inner["subqueries"]:
-                    raise SparqlSyntaxError(
-                        "nested OPTIONAL/UNION/MINUS/EXISTS/subquery "
-                        "inside MINUS unsupported")
-                g["minuses"].append(inner)
-                continue
             if kind == "KW" and val.upper() == "SERVICE":
                 raise SparqlSyntaxError("SERVICE not in subset")
-            # triple block: subject (pred obj (, obj)* (; pred obj...)*) .
-            subj = self.term()
-            while True:
-                pred = self.predicate()
-                while True:
-                    obj = self.term()
-                    g["patterns"].append((subj, pred, obj))
-                    if self.peek() == ("PUNCT", ","):
-                        self.take()
-                        continue
-                    break
-                if self.peek() == ("PUNCT", ";"):
-                    self.take()
-                    if self.peek() == ("PUNCT", "."):  # dangling ;
-                        break
-                    continue
-                break
-            if self.peek() == ("PUNCT", "."):
-                self.take()
+            self.triples_block(self.term, self.predicate, g["patterns"])
+
+    def _flat_group(self, clause):
+        """The group after OPTIONAL / MINUS / [NOT] EXISTS / GRAPH:
+        none may nest OPTIONAL, UNION, MINUS, EXISTS or a subquery,
+        and GRAPH takes only triple patterns and FILTER."""
+        g = self.group()
+        nested = ["optionals", "unions", "minuses", "exists", "subqueries"]
+        if clause == "GRAPH":
+            if any(g[k] for k in nested + ["values", "binds"]):
+                raise SparqlSyntaxError(
+                    "only triple patterns and FILTER inside GRAPH")
+        elif any(g[k] for k in nested):
+            raise SparqlSyntaxError(
+                "nested OPTIONAL/UNION/MINUS/EXISTS/subquery "
+                f"inside {clause} unsupported")
+        return g
 
     def _values_block(self):
         """VALUES ?x { v... } | VALUES (?x ?y) { (v v) ... } ->
@@ -856,31 +838,70 @@ class _Parser:
                 raise SparqlSyntaxError("PREFIX needs an IRI")
             self.prefixes[val] = iri[1:-1]
 
-    def construct_query(self):
+    def parse(self, forms):
+        """[prologue] FORM ... -> (head, where): the one parse entry
+        for all five query forms, ``forms`` naming the keywords the
+        caller accepts.  ``head`` is the SELECT body tuple, CONSTRUCT
+        ``(template, limit)``, DESCRIBE ``(iris, vars)`` or the
+        update's ``(delete, insert)`` templates (None for ASK);
+        ``where`` is the WHERE group dict, or None for DESCRIBE
+        <iri> and the DATA updates."""
         self.prologue()
-        self.expect_kw("CONSTRUCT")
-        template = self.template()
-        self.expect_kw("WHERE")
-        where = self.group()
-        limit = int(self.take()[1]) if self.kw("LIMIT") else None
+        form = next((f for f in forms if self.kw(f)), None)
+        if form is None:
+            raise SparqlSyntaxError(
+                f"expected {' or '.join(forms)}, got {self.peek()[1]!r}")
+        head = where = None
+        if form == "SELECT":
+            head = self.select_body()
+            where = head[2]
+        elif form == "CONSTRUCT":
+            template = self.template()
+            self.expect_kw("WHERE")
+            where = self.group()
+            head = (template,
+                    int(self.take()[1]) if self.kw("LIMIT") else None)
+        elif form == "ASK":
+            where = self.group()
+        elif form == "DESCRIBE":
+            iris, vars_ = [], []
+            while self.peek()[0] in ("IRI", "PNAME", "VAR"):
+                if self.peek()[0] == "VAR":
+                    vars_.append(self.take()[1][1:])
+                else:
+                    iris.append(self.term())
+            if not iris and not vars_:
+                raise SparqlSyntaxError("DESCRIBE needs IRIs or variables")
+            if vars_:
+                if not self.kw("WHERE"):
+                    raise SparqlSyntaxError(
+                        "DESCRIBE ?var needs a WHERE group")
+                where = self.group()
+            head = (iris, vars_)
+        else:  # INSERT DATA | DELETE DATA | [DELETE] [INSERT] WHERE
+            data = self.kw("DATA")
+            dele = self.template() if form == "DELETE" else None
+            ins = (self.template() if form == "INSERT"
+                   or (not data and self.kw("INSERT")) else None)
+            if not data:
+                self.expect_kw("WHERE")
+                where = self.group()
+            head = (dele, ins)
         if self.peek()[0] != "EOF":
             raise SparqlSyntaxError(
                 f"trailing input at {self.peek()[1]!r}")
-        return template, where, limit
-
-    def query(self):
-        self.prologue()
-        parsed = self.select_body()
-        if self.peek()[0] != "EOF":
+        if form in ("INSERT", "DELETE") and where is None and any(
+                tag == "var" for tmpl in head if tmpl
+                for triple in tmpl for tag, _ in triple):
             raise SparqlSyntaxError(
-                f"trailing input at {self.peek()[1]!r}")
-        return parsed
+                "INSERT/DELETE DATA cannot contain variables")
+        return head, where
 
     def select_body(self):
-        """SELECT ... WHERE {...} [solution modifiers] — shared by the
-        top-level query and ``{ SELECT ... }`` subqueries (the caller
-        checks the terminator: EOF vs ``}``)."""
-        self.expect_kw("SELECT")
+        """SELECT ... WHERE {...} [solution modifiers], after the
+        SELECT keyword — shared by the top-level query and ``{ SELECT
+        ... }`` subqueries (the caller checks the terminator: EOF vs
+        ``}``)."""
         outer_pool = self._iagg_pool
         self._iagg_pool = []  # fresh reuse scope for this body
         try:
@@ -909,16 +930,8 @@ class _Parser:
                     # same path (identical plan: the hidden column
                     # renamed to the alias).
                     self.take()
-                    i0 = self.i
-                    n0 = len(self.inline_aggs)
-                    s0 = len(self._iagg_spans)
-                    self._allow_inline_aggs = True
-                    try:
-                        expr, _ = self._operand()
-                    finally:
-                        self._allow_inline_aggs = False
-                    new_aggs = self.inline_aggs[n0:]
-                    spans = self._iagg_spans[s0:]
+                    expr, new_aggs, deps, _ = self._agg_expr(
+                        lambda: self._operand()[0])
                     # a variable is a dependency only where it occurs
                     # OUTSIDE every aggregate call (aggregate args are
                     # pre-group; the expression's real inputs are the
@@ -926,7 +939,6 @@ class _Parser:
                     # inside AND outside stays a dependency, so the
                     # strict non-grouped check still raises on it as
                     # SparqlSyntaxError, never a Spark analysis error
-                    deps = self._vars_outside_spans(i0, self.i, spans)
                     deps |= {a[4] for a in new_aggs}
                     self.expect_kw("AS")
                     akind, aval = self.take()
@@ -957,44 +969,26 @@ class _Parser:
             if not group_by:
                 raise SparqlSyntaxError("GROUP BY needs variables")
         star = not select_items  # SELECT *
+        keys = []  # (clause, variables outside aggregates, has_aggregate)
 
-        def _drain_modifier_aggs(i0, n0, s0, clause):
-            """Aggregates inside a HAVING/ORDER BY expression compile
+        def modifier(clause, parse):
+            """One HAVING/ORDER BY expression.  Its aggregates compile
             like SELECT-expression ones: hidden __iagg items computed
             with the group, referenced by column, dropped after the
-            solution modifiers run.  An aggregate-bearing expression
-            may otherwise reference only group keys / SELECT aliases
-            — checked here so the error is structured, not a Spark
-            analysis failure."""
-            spans = self._iagg_spans[s0:]
-            if not spans:  # no aggregate in this expression
-                return
-            new = self.inline_aggs[n0:]
-            if star:
+            solution modifiers run."""
+            expr, new, outside, has_agg = self._agg_expr(parse)
+            if has_agg and star:
                 raise SparqlSyntaxError(
                     f"aggregates in {clause} need an explicit "
                     "SELECT list (not SELECT *)")
             select_items.extend(new)
-            outside = self._vars_outside_spans(i0, self.i, spans)
-            allowed = set(group_by) | {
-                _item_alias(it) for it in select_items}
-            bad = sorted(outside - allowed)
-            if bad:
-                raise SparqlSyntaxError(
-                    f"{clause} aggregate expression references "
-                    f"non-grouped variables {bad}")
+            keys.append((clause, outside, has_agg))
+            return expr
 
         having = None
         if self.kw("HAVING"):
             self.expect_punct("(")
-            i0, n0, s0 = self.i, len(self.inline_aggs), \
-                len(self._iagg_spans)
-            self._allow_inline_aggs = True
-            try:
-                having = self._or_expr()
-            finally:
-                self._allow_inline_aggs = False
-            _drain_modifier_aggs(i0, n0, s0, "HAVING")
+            having = modifier("HAVING", self._or_expr)
             self.expect_punct(")")
         order = []
         if self.kw("ORDER"):
@@ -1007,31 +1001,37 @@ class _Parser:
                     # not just vars
                     self.take()
                     self.expect_punct("(")
-                    i0, n0, s0 = self.i, len(self.inline_aggs), \
-                        len(self._iagg_spans)
-                    self._allow_inline_aggs = True
-                    try:
-                        e, _ = self._operand()
-                    finally:
-                        self._allow_inline_aggs = False
-                    _drain_modifier_aggs(i0, n0, s0, "ORDER BY")
-                    if distinct and self._iagg_spans[s0:]:
-                        # SPARQL: under DISTINCT, ORDER BY may only
-                        # use projected values — and the hidden
-                        # carrier must not survive into distinct()
-                        raise SparqlSyntaxError(
-                            "ORDER BY aggregate with SELECT DISTINCT "
-                            "is not supported — project the aggregate "
-                            "and order by its alias")
+                    e = modifier("ORDER BY", lambda: self._operand()[0])
                     self.expect_punct(")")
                     order.append((
                         e if isinstance(e, Column) else F.lit(e),
                         val.upper() == "DESC"))
                 elif kind == "VAR":
                     self.take()
+                    keys.append(("ORDER BY", {val[1:]}, False))
                     order.append((val[1:], False))
                 else:
                     break
+        # in an aggregate query every HAVING/ORDER BY key may reference
+        # only group keys / SELECT aliases, aggregate call or not —
+        # checked here so the error is structured, not a Spark
+        # analysis failure
+        aggregate = group_by or any(it[0] == "agg" for it in select_items)
+        allowed = set(group_by) | {_item_alias(it) for it in select_items}
+        for clause, outside, has_agg in keys:
+            bad = sorted(outside - allowed)
+            if aggregate and bad:
+                raise SparqlSyntaxError(
+                    f"{clause} aggregate expression references "
+                    f"non-grouped variables {bad}")
+            if distinct and has_agg and clause == "ORDER BY":
+                # SPARQL: under DISTINCT, ORDER BY may only use
+                # projected values — and the hidden carrier must not
+                # survive into distinct()
+                raise SparqlSyntaxError(
+                    "ORDER BY aggregate with SELECT DISTINCT "
+                    "is not supported — project the aggregate "
+                    "and order by its alias")
         limit = offset = None
         # LIMIT/OFFSET in either order, each at most once
         for _ in range(2):
@@ -1114,6 +1114,43 @@ def _join_bindings(out: DataFrame, inner: DataFrame, shared: list[str],
     return out.join(inner.drop(*dup_meta), on=shared, how=how)
 
 
+def _nullable(g: dict) -> bool:
+    """Whether a group can bind null: patterns/joins alone never do —
+    only OPTIONAL misses, UNION null-fill, BIND expressions, VALUES
+    UNDEF, or a subquery can.  Drives MINUS/EXISTS null handling."""
+    return bool(g["optionals"] or g["unions"] or g["binds"]
+                or g["values"] or g["subqueries"])
+
+
+def _compat_join(out: DataFrame, inner: DataFrame, shared: list[str],
+                 how: str, overlap: bool) -> DataFrame:
+    """Spec-exact compatibility semi/anti-join: an outer row matches
+    an inner row iff every shared variable bound on BOTH sides is
+    equal (an unbound side leaves the variable free); ``overlap``
+    (MINUS, §8.3.3) also needs at least one variable bound on both.
+    A broadcast non-equi join — only safe for broadcast-sized inner
+    sides, which is why it sits behind ``exact_null_semantics``."""
+    inr = F.broadcast(inner.select(
+        *[F.col(v).alias(f"__c_{v}") for v in shared]).distinct())
+    compat, both_any = F.lit(True), F.lit(False)
+    for v in shared:
+        both = F.col(v).isNotNull() & F.col(f"__c_{v}").isNotNull()
+        compat = compat & (~both | (F.col(v) == F.col(f"__c_{v}")))
+        both_any = both_any | both
+    return out.join(inr, compat & both_any if overlap else compat, how)
+
+
+def _scalar_probe(df: DataFrame, inner: DataFrame,
+                  positive: bool) -> DataFrame:
+    """Keep ``df``'s rows iff ``inner`` has (``positive``) / has no
+    row: a "does the pattern match AT ALL" probe through ONE
+    broadcast row, never a data-sized cross join."""
+    pr = F.broadcast(inner.limit(1).select(F.lit(1).alias("__e")))
+    df = df.join(pr, F.lit(True), "left")
+    return df.where(F.col("__e").isNotNull() if positive
+                    else F.col("__e").isNull()).drop("__e")
+
+
 def _compile_group(triples: DataFrame, g: dict,
                    path_max_rounds: int,
                    keep_kinds: bool = False,
@@ -1121,11 +1158,13 @@ def _compile_group(triples: DataFrame, g: dict,
     """Compile one WHERE group dict -> a bindings DataFrame."""
     from .graphops import bgp_match
 
+    def sub(inner: dict) -> DataFrame:
+        return _compile_group(triples, inner, path_max_rounds, keep_kinds,
+                              exact_null_semantics)
+
     out = None
     if g["unions"]:
-        alts = [_compile_group(triples, alt, path_max_rounds, keep_kinds,
-                               exact_null_semantics)
-                for alt in g["unions"]]
+        alts = [sub(alt) for alt in g["unions"]]
         # SPARQL UNION aligns by variable NAME; a variable absent
         # from one branch is unbound (null) there
         out = alts[0]
@@ -1134,19 +1173,16 @@ def _compile_group(triples: DataFrame, g: dict,
     for sq in g["subqueries"]:
         # bottom-up: the sub-select is a complete query over the same
         # graph; its projected columns are the join surface
-        sub = _apply_select(
-            _compile_group(triples, sq[2], path_max_rounds, keep_kinds,
-                           exact_null_semantics),
-            sq)
+        sq_out = _apply_select(sub(sq[2]), sq)
         if out is None:
-            out = sub
+            out = sq_out
             continue
-        shared = _shared_vars(out, sub)
+        shared = _shared_vars(out, sq_out)
         if not shared:
             raise SparqlSyntaxError(
                 "subquery shares no variable with the group "
                 "(would be a cross join)")
-        out = _join_bindings(out, sub, shared)
+        out = _join_bindings(out, sq_out, shared)
     if g["patterns"]:
         bgp = bgp_match(triples, g["patterns"],
                         path_max_rounds=path_max_rounds,
@@ -1207,103 +1243,46 @@ def _compile_group(triples: DataFrame, g: dict,
 
     out = apply_binds_at(out, 0)
     for n_opt, opt in enumerate(g["optionals"]):
-        inner = _compile_group(triples, opt, path_max_rounds, keep_kinds,
-                               exact_null_semantics)
+        inner = sub(opt)
         shared = _shared_vars(out, inner)
         if not shared:
             raise SparqlSyntaxError(
                 "OPTIONAL shares no variable with the outer group")
         out = _join_bindings(out, inner, shared, how="left")
         out = apply_binds_at(out, n_opt + 1)
-    # patterns/joins alone never bind null — only OPTIONAL misses,
-    # UNION null-fill, BIND expressions, VALUES UNDEF, or a subquery
-    # can; drives the MINUS/EXISTS null-row handling below
-    nullable = bool(g["optionals"] or g["unions"] or g["binds"]
-                    or g["values"] or g["subqueries"])
-    for m in g["minuses"]:
-        inner = _compile_group(triples, m, path_max_rounds, keep_kinds,
-                               exact_null_semantics)
+    outer_nullable = _nullable(g)
+    for clause, positive, e in (
+            [("MINUS", False, m) for m in g["minuses"]]
+            + [("EXISTS" if pos else "NOT EXISTS", pos, e)
+               for pos, e in g["exists"]]):
+        inner = sub(e)
         shared = _shared_vars(out, inner)
+        how = "left_semi" if positive else "left_anti"
         if not shared:
+            if clause != "MINUS":
+                out = _scalar_probe(out, inner, positive)
             # SPARQL MINUS with disjoint domains removes NOTHING
             # (spec §8.3.3) — dropping rows here would be wrong
             continue
-        if len(shared) > 1 and nullable:
+        if len(shared) > 1 and (outer_nullable or _nullable(e)):
             if exact_null_semantics:
-                # spec §8.3.3 exact: drop μ1 iff ∃μ2 compatible
-                # (every var bound in BOTH is equal) with overlapping
-                # domain (≥1 var bound in both).  A broadcast
-                # non-equi anti-join — only safe for broadcast-sized
-                # inner sides, which is why it sits behind the flag.
-                inr = F.broadcast(inner.select(
-                    *[F.col(v).alias(f"__m_{v}") for v in shared]
-                ).distinct())
-                compat, overlap = F.lit(True), F.lit(False)
-                for v in shared:
-                    both = (F.col(v).isNotNull()
-                            & F.col(f"__m_{v}").isNotNull())
-                    compat = compat & (
-                        ~both | (F.col(v) == F.col(f"__m_{v}")))
-                    overlap = overlap | both
-                out = out.join(inr, compat & overlap, "left_anti")
+                out = _compat_join(out, inner, shared, how,
+                                   overlap=clause == "MINUS")
                 continue
             warnings.warn(
-                "MINUS over multiple shared variables where the outer "
-                f"group can bind null ({shared}): partially-bound rows "
-                "use null-strict comparison (documented deviation from "
-                "spec §8.3.3); pass exact_null_semantics=True for the "
-                "exact broadcast anti-join",
+                f"{clause} over multiple shared variables {shared} "
+                "where either group can bind null: partially-bound "
+                "rows are approximated (documented deviation from spec "
+                "§8.3); pass exact_null_semantics=True for the exact "
+                "broadcast join",
                 SparqlApproximationWarning, stacklevel=2)
-        out = out.join(inner.select(*shared).dropna(how="any"),
-                       on=shared, how="left_anti")
-    for positive, e in g["exists"]:
-        inner = _compile_group(triples, e, path_max_rounds, keep_kinds,
-                               exact_null_semantics)
-        shared = _shared_vars(out, inner)
-        # "does the pattern match AT ALL" probe: ONE broadcast row,
-        # never a data-sized cross join
-        probe = F.broadcast(inner.limit(1).select(F.lit(1).alias("__e")))
-
-        def scalar_probe(df, pos=positive, pr=probe):
-            df = df.join(pr, F.lit(True), "left")
-            return df.where(F.col("__e").isNotNull() if pos
-                            else F.col("__e").isNull()).drop("__e")
-
-        if not shared:
-            out = scalar_probe(out)
-            continue
         inner_k = inner.select(*shared).dropna(how="any")
-        how = "left_semi" if positive else "left_anti"
-        if not nullable:
-            # null-free group: plain semi/anti equi-join, no second
-            # scan of the outer
+        if clause == "MINUS" or not outer_nullable:
+            # MINUS compares null-strictly (a null outer variable
+            # never matches); a null-free outer group needs no second
+            # scan for EXISTS either
             out = out.join(inner_k, on=shared, how=how)
             continue
-        if len(shared) > 1 and exact_null_semantics:
-            # exact: a row matches iff ∃ inner row where every
-            # shared variable bound on BOTH sides is equal (an
-            # unbound side leaves the variable free).  Broadcast
-            # non-equi semi/anti join — flag-gated, inner side must
-            # be broadcast-sized.
-            inr = F.broadcast(inner.select(
-                *[F.col(v).alias(f"__e_{v}") for v in shared]
-            ).distinct())
-            compat = F.lit(True)
-            for v in shared:
-                compat = compat & (
-                    F.col(v).isNull() | F.col(f"__e_{v}").isNull()
-                    | (F.col(v) == F.col(f"__e_{v}")))
-            out = out.join(inr, compat, how)
-            continue
-        if len(shared) > 1:
-            warnings.warn(
-                f"{'EXISTS' if positive else 'NOT EXISTS'} over "
-                f"multiple shared variables {shared} where the outer "
-                "group can bind null: partially-bound rows probe "
-                "match-at-all, ignoring still-bound variables "
-                "(documented deviation); pass "
-                "exact_null_semantics=True for the exact broadcast "
-                "join", SparqlApproximationWarning, stacklevel=2)
         # a NULL shared variable is UNBOUND: it stays free inside
         # EXISTS, so the pattern matches iff it matches at all —
         # route those rows through the scalar probe instead of the
@@ -1314,7 +1293,8 @@ def _compile_group(triples: DataFrame, g: dict,
         for v in shared:
             nullk = nullk | F.col(v).isNull()
         bound = out.where(~nullk).join(inner_k, on=shared, how=how)
-        out = bound.unionByName(scalar_probe(out.where(nullk)))
+        out = bound.unionByName(
+            _scalar_probe(out.where(nullk), inner, positive))
     # group-scope FILTERs apply over the whole group INCLUDING
     # optionals (SPARQL semantics — BOUND(?x) sees the join nulls);
     # Catalyst pushes outer-column-only predicates back below the
@@ -1336,6 +1316,22 @@ _AGG_FN = {
 }
 
 
+def _compile(triples: DataFrame, text: str, forms: tuple,
+             path_max_rounds: int,
+             exact_null_semantics: bool = False) -> tuple:
+    """The one compile path: parse ``text`` as one of ``forms`` and
+    compile its WHERE group -> (head, bindings).  Template forms
+    (CONSTRUCT, INSERT, DELETE) keep term kinds for instantiation; a
+    form without WHERE binds one empty row, so DATA templates
+    instantiate through the same kernel."""
+    head, where = _Parser(text).parse(forms)
+    if where is None:
+        return head, triples.sparkSession.range(1)
+    keep_kinds = not {"CONSTRUCT", "INSERT", "DELETE"}.isdisjoint(forms)
+    return head, _compile_group(triples, where, path_max_rounds,
+                                keep_kinds, exact_null_semantics)
+
+
 def sparql_select(
     triples: DataFrame, query: str, path_max_rounds: int = 16,
     exact_null_semantics: bool = False
@@ -1350,15 +1346,14 @@ def sparql_select(
     ORDER+LIMIT collapse to TakeOrderedAndProject for free.
 
     ``exact_null_semantics=True`` switches MINUS / (NOT) EXISTS over
-    multiple shared variables with a nullable outer group from the
-    null-strict approximation (which warns) to the spec-exact
-    broadcast compatibility join — only for broadcast-sized inner
-    sides (the join is non-equi, so the inner set must fit on every
-    executor).
+    multiple shared variables where the outer or inner group can bind
+    null from the null-strict approximation (which warns) to the
+    spec-exact broadcast compatibility join — only for broadcast-sized
+    inner sides (the join is non-equi, so the inner set must fit on
+    every executor).
     """
-    parsed = _Parser(query).query()
-    out = _compile_group(triples, parsed[2], path_max_rounds,
-                         exact_null_semantics=exact_null_semantics)
+    parsed, out = _compile(triples, query, ("SELECT",), path_max_rounds,
+                           exact_null_semantics)
     return _apply_select(out, parsed)
 
 
@@ -1517,8 +1512,8 @@ def sparql_construct(
     into an object keeps its lexical form but drops datatype/lang —
     documented limitation).
     """
-    template, where, limit = _Parser(query).construct_query()
-    b = _compile_group(triples, where, path_max_rounds, keep_kinds=True)
+    (template, limit), b = _compile(triples, query, ("CONSTRUCT",),
+                                    path_max_rounds)
     out = _instantiate(b, template)
     return out.limit(limit) if limit is not None else out
 
@@ -1616,41 +1611,8 @@ def sparql_update(
     """
     from .graphops import add, remove
 
-    p = _Parser(update)
-    p.prologue()
-
-    def const_triples(tmpl):
-        if any(tag == "var" for s, pr, o in tmpl for tag, _ in (s, pr, o)):
-            raise SparqlSyntaxError(
-                "INSERT/DELETE DATA cannot contain variables")
-        return _instantiate(triples.sparkSession.range(1), tmpl)
-
-    def end():
-        if p.peek()[0] != "EOF":
-            raise SparqlSyntaxError(f"trailing input at {p.peek()[1]!r}")
-
-    ins = dele = None
-    if p.kw("INSERT"):
-        if p.kw("DATA"):
-            tmpl = p.template()
-            end()
-            return add(triples, const_triples(tmpl))
-        ins = p.template()
-    elif p.kw("DELETE"):
-        if p.kw("DATA"):
-            tmpl = p.template()
-            end()
-            return remove(triples, const_triples(tmpl))
-        dele = p.template()
-        if p.kw("INSERT"):
-            ins = p.template()
-    else:
-        raise SparqlSyntaxError(
-            f"expected INSERT or DELETE, got {p.peek()[1]!r}")
-    p.expect_kw("WHERE")
-    where = p.group()
-    end()
-    b = _compile_group(triples, where, path_max_rounds, keep_kinds=True)
+    (dele, ins), b = _compile(triples, update, ("INSERT", "DELETE"),
+                              path_max_rounds)
     out = triples
     if dele is not None:
         out = remove(out, _instantiate(b, dele))
@@ -1669,13 +1631,7 @@ def sparql_ask(
     this is the single deliberately-eager entry point in the module,
     because ASK's result IS a scalar.
     """
-    p = _Parser(query)
-    p.prologue()
-    p.expect_kw("ASK")
-    where = p.group()
-    if p.peek()[0] != "EOF":
-        raise SparqlSyntaxError(f"trailing input at {p.peek()[1]!r}")
-    out = _compile_group(triples, where, path_max_rounds)
+    _, out = _compile(triples, query, ("ASK",), path_max_rounds)
     return not out.limit(1).isEmpty()
 
 
@@ -1692,47 +1648,22 @@ def sparql_describe(
     table against the DISTINCT bindings (broadcast when small — the
     resource list is usually tiny next to the graph).
     """
-    p = _Parser(query)
-    p.prologue()
-    p.expect_kw("DESCRIBE")
-    iris, vars_ = [], []
-    while True:
-        kind, val = p.peek()
-        if kind == "IRI":
-            p.take()
-            iris.append(val[1:-1])
-        elif kind == "PNAME":
-            p.take()
-            iris.append(p._expand(val))
-        elif kind == "VAR":
-            p.take()
-            vars_.append(val[1:])
-        else:
-            break
-    if not iris and not vars_:
-        raise SparqlSyntaxError("DESCRIBE needs IRIs or variables")
+    (iris, vars_), b = _compile(triples, query, ("DESCRIBE",),
+                                path_max_rounds)
+    missing = [v for v in vars_ if v not in b.columns]
+    if missing:
+        raise SparqlSyntaxError(f"unbound DESCRIBE variables {missing}")
     nodes = None  # 1-column DataFrame of described resources
-    if vars_:
-        if not p.kw("WHERE"):
-            raise SparqlSyntaxError("DESCRIBE ?var needs a WHERE group")
-        b = _compile_group(triples, p.group(), path_max_rounds)
-        missing = [v for v in vars_ if v not in b.columns]
-        if missing:
-            raise SparqlSyntaxError(f"unbound DESCRIBE variables {missing}")
-        for v in vars_:
-            sel = b.select(F.col(v).alias("__node")).where(
-                F.col("__node").isNotNull())
-            nodes = sel if nodes is None else nodes.unionByName(sel)
-        nodes = nodes.distinct()
-    if p.peek()[0] != "EOF":
-        raise SparqlSyntaxError(f"trailing input at {p.peek()[1]!r}")
-
+    for v in vars_:
+        sel = b.select(F.col(v).alias("__node")).where(
+            F.col("__node").isNotNull())
+        nodes = sel if nodes is None else nodes.unionByName(sel)
     out = None
     if iris:
         out = triples.where(
             F.col("subj").isin(iris) | F.col("obj_lex").isin(iris))
     if nodes is not None:
-        bn = F.broadcast(nodes)
+        bn = F.broadcast(nodes.distinct())
         by_subj = triples.join(
             bn, triples["subj"] == bn["__node"], "left_semi")
         by_obj = triples.join(

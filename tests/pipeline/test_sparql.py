@@ -2,12 +2,14 @@
 subset against hand-computed bindings over a small program-built
 graph, plus syntax-error contracts and the no-cross-join guards."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from rdf_spark.operators.sparql import (
-    RDF_TYPE, SparqlSyntaxError, sparql_ask, sparql_construct,
-    sparql_describe, sparql_select, sparql_update,
+    RDF_TYPE, SparqlApproximationWarning, SparqlSyntaxError, sparql_ask,
+    sparql_construct, sparql_describe, sparql_select, sparql_update,
 )
 from rdf_spark.terms import KIND_IRI, KIND_LITERAL
 
@@ -1046,3 +1048,96 @@ def test_inline_aggregate_reuse_shares_column(g):
             GROUP BY ?p }
         } GROUP BY ?t ORDER BY DESC(COUNT(?p))"""))
     assert got == {(E + "Person", 2)}  # alice+bob have knows edges
+
+
+# -- inner-group nullability (hand-computed): outer ?p ex:age ?a ->
+# (alice, 9) (bob, 40); only the INNER group binds null, via VALUES
+# (alice, UNDEF).  Spec-exact, (alice, 9) is compatible with (alice,
+# unbound ?a) and shares ?p: MINUS drops alice, EXISTS keeps only her.
+# The null-strict approximation never matches the UNDEF row.
+_INNER_NULLS = """
+    SELECT ?p WHERE {
+      ?p ex:age ?a .
+      %s { VALUES (?p ?a) { (ex:alice UNDEF) } }
+    }"""
+
+
+@pytest.mark.parametrize("clause, approx, exact", [
+    ("MINUS", {"alice", "bob"}, {"bob"}),
+    ("FILTER EXISTS", set(), {"alice"}),
+    ("FILTER NOT EXISTS", {"alice", "bob"}, {"bob"}),
+])
+def test_inner_group_null_warns_and_exact_flag(g, clause, approx, exact):
+    import warnings as _w
+    q = PFX + _INNER_NULLS % clause
+    with pytest.warns(SparqlApproximationWarning):
+        assert rows(sparql_select(g, q)) == {(E + p,) for p in approx}
+    with _w.catch_warnings():
+        _w.simplefilter("error", SparqlApproximationWarning)
+        got = rows(sparql_select(g, q, exact_null_semantics=True))
+    assert got == {(E + p,) for p in exact}
+
+
+_GROUPED = PFX + """
+    SELECT ?p (COUNT(?n) AS ?c) WHERE { ?p ex:name ?n . ?p ex:age ?a }
+    GROUP BY ?p """
+
+
+@pytest.mark.parametrize("modifier", [
+    "ORDER BY DESC(STRLEN(?a))", 'HAVING (?a = "9")', "ORDER BY ?a",
+    "ORDER BY DESC(STRLEN(?p))"])
+def test_modifier_without_aggregate_call_is_validated(g, modifier):
+    # in an aggregate query every HAVING / ORDER BY key may reference
+    # only group keys and SELECT aliases, aggregate call or not
+    if "?p" in modifier:
+        got = sparql_select(g, _GROUPED + modifier).collect()
+        assert [tuple(r) for r in got] == [(E + "alice", 1), (E + "bob", 1)]
+        return
+    with pytest.raises(SparqlSyntaxError, match=re.escape(
+            "aggregate expression references non-grouped variables "
+            "['a']")):
+        sparql_select(g, _GROUPED + modifier).collect()
+
+
+# -- error contract: one row per (entry point, text), the exact
+# SparqlSyntaxError message — or, for an accepted text, its rows
+@pytest.mark.parametrize("fn, text, expected", [
+    (sparql_select, "ASK { ?p a ex:Person }", "expected SELECT, got 'ASK'"),
+    (sparql_ask, "DESCRIBE ex:alice", "expected ASK, got 'DESCRIBE'"),
+    (sparql_construct, "SELECT ?p WHERE { ?p a ex:Person }",
+     "expected CONSTRUCT, got 'SELECT'"),
+    (sparql_describe, "CONSTRUCT { ?p a ex:T } WHERE { ?p a ex:Person }",
+     "expected DESCRIBE, got 'CONSTRUCT'"),
+    (sparql_update, "SELECT ?p WHERE { ?p a ex:Person }",
+     "expected INSERT or DELETE, got 'SELECT'"),
+    (sparql_select, "SELECT ?p WHERE { ?p a ex:Person } GARBAGE",
+     "trailing input at 'GARBAGE'"),
+    (sparql_ask, "ASK { ?p a ex:Person } GARBAGE",
+     "trailing input at 'GARBAGE'"),
+    (sparql_construct,
+     "CONSTRUCT { ?p a ex:T } WHERE { ?p a ex:Person } LIMIT 1 GARBAGE",
+     "trailing input at 'GARBAGE'"),
+    (sparql_describe, "DESCRIBE ex:alice GARBAGE",
+     "trailing input at 'GARBAGE'"),
+    (sparql_update, "INSERT DATA { ?v ex:p ex:o . }",
+     "INSERT/DELETE DATA cannot contain variables"),
+    (sparql_update, "DELETE DATA { ex:alice ex:p ?v . }",
+     "INSERT/DELETE DATA cannot contain variables"),
+    (sparql_describe, "DESCRIBE ?p", "DESCRIBE ?var needs a WHERE group"),
+    (sparql_construct, "CONSTRUCT { ?p foo:q ?n } WHERE { ?p ex:name ?n }",
+     "undeclared prefix 'foo'"),
+    (sparql_update, "INSERT DATA { ex:a foo:q ex:b }",
+     "undeclared prefix 'foo'"),
+    # a dangling ';' before '}' in WHERE (grammar [83]), as templates
+    (sparql_select, "SELECT ?n WHERE { ?p a ex:Person ; ex:name ?n ; }",
+     {("Alice",), ("Bob",), ("carol lower",)}),
+])
+def test_error_contract(g, fn, text, expected):
+    if isinstance(expected, set):
+        assert rows(fn(g, PFX + text)) == expected
+        return
+    with pytest.raises(SparqlSyntaxError) as err:
+        out = fn(g, PFX + text)
+        if not isinstance(out, bool):
+            out.collect()
+    assert str(err.value) == expected
