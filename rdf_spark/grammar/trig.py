@@ -1,20 +1,25 @@
 """TriG parser + evaluator (W3C RDF 1.1 TriG): Turtle plus graph blocks.
 
-Extends the Turtle recursive-descent parser with Block productions
-(reference trig/grammar/grammar.go:10-97) and evaluates to *quads*
-(graph term or None = default graph), mirroring trig/evaluate.go:
+TriG is Turtle's productions plus graph blocks, as in the reference,
+whose TriG context wraps the Turtle context (trig/context.go:13-17) and
+whose blocks reuse Turtle's Triples rule (trig/grammar/grammar.go:10-97).
+`_TrigParser` only swaps Turtle's statement (triples + '.') for a Block:
 
-- labeled wrapped graph `<g> { ... }` / `_:g { ... }` -> quads with that
+- `<g> { ... }` / `ex:g { ... }` / `_:g { ... }` -> quads with that
   label; `[] { ... }` -> fresh blank node label (trig/evaluate.go:59-101)
+- `{ ... }` and top-level Turtle triples -> default graph (None label)
 - `GRAPH <g> { ... }` keyword form (exact-case "GRAPH" + at least one
-  space/tab, per grammar.go:30) folded into the same shape at parse
-  (trig/doc.go:56-79)
-- label-less blocks, subject-first statements, BNPL/collection subjects
-  -> default graph (nil label)
-- TriG @base/@prefix do NOT base-resolve relative IRIs (unlike Turtle;
-  trig/evaluate.go:14-17 sets them verbatim — quirk preserved)
-- output is UNSORTED (trig/evaluate.go:250), unlike Turtle
-- shared bn/el counters across graphs (trig/context.go:9-27)
+  space/tab, per grammar.go:30), tried last
+
+The AST is Turtle's directive and ("triples", ...) statements plus
+("graph", label_or_None, [triples...]); triples evaluate through
+Turtle's `Context`, so blank-node counters are shared across graphs
+(trig/context.go:9-27). Two reference quirks are kept here:
+
+- @base/@prefix are set verbatim, NOT base-resolved as in Turtle
+  (trig/evaluate.go:14-17)
+- output is UNSORTED, in document order (trig/evaluate.go:250), unlike
+  Turtle
 
 Deviations (same rationale as turtle.py, invisible to the count-based
 TriG eval golden check): correct rdf:first/rest chains; an empty
@@ -27,15 +32,13 @@ from __future__ import annotations
 
 import re
 
-from .ntriples import RDFSyntaxError
-from .turtle import (
+from .turtle import (  # the error classes stay importable from here
     Context,
-    RDFEvalError,
+    RDFEvalError,  # noqa: F401
+    RDFSyntaxError,  # noqa: F401
     _Parser,
-    _COMMENT_RE,
-    _EOL_RE,
+    validate_document as _validate_turtle,
 )
-from ..terms import RDF_FIRST, RDF_NIL, RDF_REST
 
 __all__ = [
     "parse_document",
@@ -48,68 +51,42 @@ _GRAPH_KW_RE = re.compile(r"GRAPH[ \t]+")
 
 
 class _TrigParser(_Parser):
-    def parse_document(self):
-        stmts = []
-        while self.i < self.n:
-            self._ows()
-            if self.i >= self.n:
-                break
-            d = self.try_directive()
-            if d is not None:
-                stmts.append(d)
-                continue
-            b = self.try_block()
-            if b is not None:
-                stmts.append(b)
-                continue
-            _COMMENT_RE.match(self.s, self.i) and self._rx(_COMMENT_RE)
-            if self._rx(_EOL_RE) is None:
-                self.fail("directive, block, or end of line")
-        return stmts
+    __slots__ = ()
+    STATEMENT = "block"
 
-    # Block ::= TriplesOrGraph | WrappedGraph | Triples2 | GRAPH los wg
-    def try_block(self):
-        b = self.try_triples_or_graph()
-        if b is not None:
-            return b
+    # Block ::= Label WrappedGraph | WrappedGraph | ttl.Triples '.'
+    #   | 'GRAPH' Label WrappedGraph
+    def try_statement(self):
+        start = self.i
+        g = self.try_graph()
+        if g is not None:
+            return g
         wg = self.try_wrapped_graph()
         if wg is not None:
-            return ("wrapped", wg)
-        b = self.try_triples2()
-        if b is not None:
-            return b
-        start = self.i
+            return ("graph", None, wg)
+        t = self.try_triples()
+        if t is not None:
+            self._wsplnc()
+            if self._lit("."):
+                return t
+            self.i = start
         if self._rx(_GRAPH_KW_RE) is not None:
-            los = self.try_label_or_subject()
-            if los is not None:
-                self._wsplnc()
-                wg = self.try_wrapped_graph()
-                if wg is not None:
-                    return ("tog", los, wg, None)
+            g = self.try_graph()
+            if g is not None:
+                return g
             self.i = start
         return None
 
-    def try_label_or_subject(self):
-        t = self.try_iri()
-        if t is not None:
-            return t
-        return self.try_blank_node()
-
-    def try_triples_or_graph(self):
+    # Label WrappedGraph, Label ::= iri | BlankNode
+    def try_graph(self):
         start = self.i
-        los = self.try_label_or_subject()
-        if los is None:
-            return None
-        self._wsplnc()
-        wg = self.try_wrapped_graph()
-        if wg is not None:
-            return ("tog", los, wg, None)
-        pol = self.try_predicate_object_list()
-        if pol is not None:
+        label = self.try_iri() or self.try_blank_node()
+        if label is not None:
             self._wsplnc()
-            if self._lit("."):
-                return ("tog", los, None, pol)
-        self.i = start
+            wg = self.try_wrapped_graph()
+            if wg is not None:
+                return ("graph", label, wg)
+            self.i = start
         return None
 
     def try_wrapped_graph(self):
@@ -147,33 +124,6 @@ class _TrigParser(_Parser):
             self.i = mark
         return out
 
-    # Triples2 ::= BNPL (WSPLNC POL)? WSPLNC '.' | Collection WSPLNC POL WSPLNC '.'
-    def try_triples2(self):
-        start = self.i
-        bnpl = self.try_bnpl()
-        if bnpl is not None:
-            mark = self.i
-            self._wsplnc()
-            pol = self.try_predicate_object_list()
-            if pol is None:
-                self.i = mark
-                pol = []
-            self._wsplnc()
-            if self._lit("."):
-                return ("t2bnpl", bnpl[1], pol)
-            self.i = start
-            return None
-        coll = self.try_collection()
-        if coll is not None:
-            self._wsplnc()
-            pol = self.try_predicate_object_list()
-            if pol is not None:
-                self._wsplnc()
-                if self._lit("."):
-                    return ("t2coll", coll[1], pol)
-            self.i = start
-        return None
-
 
 def parse_document(doc: str):
     """Parse a TriG document -> list of statement AST nodes."""
@@ -184,21 +134,10 @@ def parse_document(doc: str):
     return _TrigParser(doc).parse_document()
 
 
-def _emit_pol(ctx, subject, pol, graph, out):
-    for verb, objs in pol:
-        p = ctx.evaluate_verb(verb)
-        for o in objs:
-            ot, ts = ctx.evaluate_object(o)
-            for t in ts:
-                out.append((t[0], t[1], t[2], graph))
-            out.append((subject, p, ot, graph))
-
-
 def evaluate_document(stmts):
     """Statement AST -> list of quads, document order (unsorted,
-    trig/evaluate.go:250). Nested-structure triples from labeled-graph
-    statements stay in that graph; from default-graph statements in the
-    default graph."""
+    trig/evaluate.go:250). Nested-structure triples stay in the graph
+    of the statement that holds them."""
     ctx = Context("")
     out = []
     for stmt in stmts:
@@ -209,94 +148,29 @@ def evaluate_document(stmts):
         elif k == "prefix":
             ctx.prefixes[stmt[1]] = stmt[2]  # verbatim (trig quirk)
             ctx.iri_cache.clear()
-        elif k == "tog":
-            _, los, wg, pol = stmt
-            if los[0] == "iri":
-                label_or_subj = ctx.evaluate_iri(los)
-            elif los[1] == "[]":
-                label_or_subj = ctx.bn()
-            else:
-                label_or_subj = ("b", los[1])
-            if wg is not None:
-                for t in wg:
-                    for tr in ctx.evaluate_triples(t):
-                        out.append((tr[0], tr[1], tr[2], label_or_subj))
-            else:
-                _emit_pol(ctx, label_or_subj, pol, None, out)
-        elif k == "wrapped":
-            for t in stmt[1]:
-                for tr in ctx.evaluate_triples(t):
-                    out.append((tr[0], tr[1], tr[2], None))
-        elif k == "t2bnpl":
-            _, bnpl_pol, pol = stmt
-            b = ctx.bn()
-            _emit_pol(ctx, b, list(bnpl_pol) + list(pol), None, out)
-        elif k == "t2coll":
-            _, items, pol = stmt
-            head, ts = ctx.evaluate_collection(items)
-            for t in ts:
-                out.append((t[0], t[1], t[2], None))
-            if not items:
-                continue  # drop statement (see module docstring)
-            _emit_pol(ctx, head, pol, None, out)
         else:
-            raise RDFEvalError(f"unknown statement {k!r}")
+            _, label, block = stmt if k == "graph" else ("graph", None, [stmt])
+            triples = []
+            # an IRI or blank-node label evaluates like a subject
+            graph = None if label is None else ctx.evaluate_object(label, triples)
+            for t in block:
+                ctx.evaluate_triples(t, triples)
+            out.extend([(s, p, o, graph) for s, p, o in triples])
     return out
 
 
 def validate_document(stmts) -> bool:
-    """Prefix-definedness over all blocks (reference trig/validate.go)."""
-    from .turtle import _walk_iris
-
-    prefixes: set[str] = set()
-    ok = True
-
-    def hit(node):
-        nonlocal ok
-        _, value, prefixed = node
-        if prefixed:
-            idx = value.find(":")
-            if idx < 0 or value[: idx + 1] not in prefixes:
-                ok = False
-
-    def check_pol(pol):
-        for verb, objs in pol:
-            if verb[0] == "iri":
-                hit(verb)
-            for o in objs:
-                _walk_iris(o, hit)
-
-    def check_triples(t):
-        _, subj, bnpl_pol, pol = t
-        if subj is not None:
-            _walk_iris(subj, hit)
-        check_pol((bnpl_pol or []) + pol)
-
+    """Prefix-definedness over all blocks (reference trig/validate.go):
+    Turtle's check, with each graph label checked like a subject."""
+    flat = []
     for stmt in stmts:
-        k = stmt[0]
-        if k == "prefix":
-            prefixes.add(stmt[1])
-        elif k == "tog":
-            _, los, wg, pol = stmt
-            if los[0] == "iri":
-                hit(los)
-            if wg is not None:
-                for t in wg:
-                    check_triples(t)
-            else:
-                check_pol(pol)
-        elif k == "wrapped":
-            for t in stmt[1]:
-                check_triples(t)
-        elif k == "t2bnpl":
-            check_pol(list(stmt[1]) + list(stmt[2]))
-        elif k == "t2coll":
-            for o in stmt[1]:
-                _walk_iris(o, hit)
-            check_pol(stmt[2])
-        if not ok:
-            return False
-    return ok
+        if stmt[0] != "graph":
+            flat.append(stmt)
+            continue
+        if stmt[1] is not None:
+            flat.append(("triples", stmt[1], None, []))
+        flat.extend(stmt[2])
+    return _validate_turtle(flat)
 
 
 def parse_and_evaluate(doc: str):

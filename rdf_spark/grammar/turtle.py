@@ -112,14 +112,14 @@ _BOOLEAN_RE = re.compile(r"true|false")
 _STRING_DQ_RE = re.compile(rf"\"({STRING_BODY_DQ})\"")
 _STRING_BODY_SQ = unrolled(r"^'\\\n\r", rf"{ECHAR}|{UCHAR}")
 _STRING_SQ_RE = re.compile(rf"'({_STRING_BODY_SQ})'")
-# long strings: Optional('""'|'"') then (AnyBut('"','\') | ECHAR | UCHAR),
-# zero or more — content can never end with a quote (grammar quirk = spec)
-_STRING_LQ_RE = re.compile(
-    rf"\"\"\"((?:(?:\"\"|\")?(?:[^\"\\]|{ECHAR}|{UCHAR}))*)\"\"\"", re.DOTALL
-)
-_STRING_LSQ_RE = re.compile(
-    rf"'''((?:(?:''|')?(?:[^'\\]|{ECHAR}|{UCHAR}))*)'''", re.DOTALL
-)
+# long strings: (('"' | '""')? ([^"\\] | ECHAR | UCHAR))* — content can
+# never end with a quote (grammar quirk = spec). A quote run inside the
+# body is always followed by a non-quote, so the possessive run is the
+# only way to reach the closing delimiter.
+_STRING_BODY_LQ = unrolled(r'^"\\', rf'(?:""|")?(?:{ECHAR}|{UCHAR})|(?:""|")[^"\\]')
+_STRING_LQ_RE = re.compile(rf'"""({_STRING_BODY_LQ})"""')
+_STRING_BODY_LSQ = unrolled(r"^'\\", rf"(?:''|')?(?:{ECHAR}|{UCHAR})|(?:''|')[^'\\]")
+_STRING_LSQ_RE = re.compile(rf"'''({_STRING_BODY_LSQ})'''")
 
 # evaluator fast paths: inputs whose canonicalization is the identity
 # (printable ASCII; no backslash; no '.' for PN_LOCAL / no '"' for
@@ -139,6 +139,7 @@ _BASE_KW_RE = re.compile(r"[Bb][Aa][Ss][Ee]")
 # --- AST --------------------------------------------------------------------
 # statements: ("base", iri) | ("prefix", name_with_colon, iri)
 #   | ("triples", subject_or_None, bnpl_pol_or_None, pol)
+#   | TriG only (grammar/trig.py): ("graph", label_or_None, [triples...])
 # terms: ("iri", value, prefixed) | ("bnode", label_or_"[]")
 #   | ("coll", [obj...]) | ("bnpl", pol)
 #   | ("str", value, multiline, lang, datatype_iri_or_None)
@@ -183,6 +184,10 @@ class _Parser:
         raise RDFSyntaxError(f"turtle: expected {what} at offset {self.i}: {frag!r}")
 
     # -- document --
+    # The statement production (Turtle: triples + '.'); a subclass
+    # grammar overrides try_statement() and names it here for errors.
+    STATEMENT = "triples"
+
     def parse_document(self):
         stmts = []
         while self.i < self.n:
@@ -196,18 +201,23 @@ class _Parser:
                 if d is not None:
                     stmts.append(d)
                     continue
-            t = self.try_triples()
+            t = self.try_statement()
             if t is not None:
-                self._wsplnc()
-                if not self._lit("."):
-                    self.fail("'.' after triples")
                 stmts.append(t)
                 continue
             # (Comment? EOL)
             _COMMENT_RE.match(self.s, self.i) and self._rx(_COMMENT_RE)
             if self._rx(_EOL_RE) is None:
-                self.fail("directive, triples, or end of line")
+                self.fail(f"directive, {self.STATEMENT}, or end of line")
         return stmts
+
+    def try_statement(self):
+        t = self.try_triples()
+        if t is not None:
+            self._wsplnc()
+            if not self._lit("."):
+                self.fail("'.' after triples")
+        return t
 
     # -- directives --
     def try_directive(self):
@@ -624,92 +634,58 @@ class Context:
 
     _NUM_DT = {"integer": XSD_INTEGER, "decimal": XSD_DECIMAL, "double": XSD_DOUBLE}
 
-    # returns (object_term, extra_triples)
-    def evaluate_object(self, node):
+    # returns the object term; the triples of a nested collection or
+    # property list are appended to `out` first
+    def evaluate_object(self, node, out):
         k = node[0]
         if k == "iri":
-            return self.evaluate_iri(node), []
+            return self.evaluate_iri(node)
         if k == "bnode":
-            if node[1] == "[]":
-                return self.bn(), []
-            return ("b", node[1]), []
+            return self.bn() if node[1] == "[]" else ("b", node[1])
         if k == "str":
-            return self.evaluate_string(node), []
+            return self.evaluate_string(node)
         if k == "num":
-            return ("l", node[1], self._NUM_DT[node[2]], None), []
+            return ("l", node[1], self._NUM_DT[node[2]], None)
         if k == "bool":
-            return ("l", node[1], XSD_BOOLEAN, None), []
+            return ("l", node[1], XSD_BOOLEAN, None)
         if k == "coll":
-            return self.evaluate_collection(node[1])
+            return self.evaluate_collection(node[1], out)
         if k == "bnpl":
             # single blank node for the whole list (deviation #3)
             b = self.bn()
-            triples = []
-            for verb, objs in node[1]:
-                p = self.evaluate_verb(verb)
-                for o in objs:
-                    ot, ts = self.evaluate_object(o)
-                    triples.extend(ts)
-                    triples.append((b, p, ot))
-            return b, triples
+            self.emit(b, node[1], out)
+            return b
         raise RDFEvalError(f"unknown object node {k!r}")
 
-    def evaluate_collection(self, items):
+    def evaluate_collection(self, items, out):
         """rdf:first/rdf:rest cons chain; empty -> rdf:nil
         (correct chain for any length; deviation #2)."""
-        objects = []
-        triples = []
-        for o in items:
-            ot, ts = self.evaluate_object(o)
-            objects.append(ot)
-            triples.extend(ts)
+        objects = [self.evaluate_object(o, out) for o in items]
         if not objects:
-            return ("i", RDF_NIL), triples
+            return ("i", RDF_NIL)
         cells = [self.el() for _ in objects]
-        for i, (cell, o) in enumerate(zip(cells, objects)):
-            triples.append((cell, ("i", RDF_FIRST), o))
-            rest = cells[i + 1] if i + 1 < len(cells) else ("i", RDF_NIL)
-            triples.append((cell, ("i", RDF_REST), rest))
-        return cells[0], triples
+        for cell, o, rest in zip(cells, objects, cells[1:] + [("i", RDF_NIL)]):
+            out.append((cell, ("i", RDF_FIRST), o))
+            out.append((cell, ("i", RDF_REST), rest))
+        return cells[0]
 
-    def evaluate_verb(self, verb):
-        if verb[0] == "a":
-            return ("i", RDF_TYPE)
-        return self.evaluate_iri(verb)
+    def emit(self, subject, pol, out):
+        """Append `subject`'s predicate-object list to `out`, each triple
+        after the nested triples of its object."""
+        for verb, objs in pol:
+            p = ("i", RDF_TYPE) if verb[0] == "a" else self.evaluate_iri(verb)
+            for o in objs:
+                ot = self.evaluate_object(o, out)
+                out.append((subject, p, ot))
 
-    def evaluate_triples(self, stmt):
-        _, subj_node, bnpl_pol, pol = stmt
-        triples = []
-        if subj_node is not None:
-            k = subj_node[0]
-            if k == "iri":
-                subject = self.evaluate_iri(subj_node)
-            elif k == "bnode":
-                subject = self.bn() if subj_node[1] == "[]" else ("b", subj_node[1])
-            elif k == "coll":
-                subject, ts = self.evaluate_collection(subj_node[1])
-                triples.extend(ts)
-                if not subj_node[1]:
-                    # empty subject collection: statement dropped entirely
-                    # (reference turtle/evaluate.go:371-373)
-                    return triples
-            else:
-                raise RDFEvalError(f"unknown subject node {k!r}")
-            for verb, objs in pol:
-                p = self.evaluate_verb(verb)
-                for o in objs:
-                    ot, ts = self.evaluate_object(o)
-                    triples.extend(ts)
-                    triples.append((subject, p, ot))
-        else:
-            b = self.bn()
-            for verb, objs in list(bnpl_pol) + list(pol):
-                p = self.evaluate_verb(verb)
-                for o in objs:
-                    ot, ts = self.evaluate_object(o)
-                    triples.extend(ts)
-                    triples.append((b, p, ot))
-        return triples
+    def evaluate_triples(self, stmt, out):
+        _, subj, bnpl_pol, pol = stmt
+        if subj is None:
+            self.emit(self.bn(), bnpl_pol + pol, out)
+        elif subj[0] != "coll" or subj[1]:
+            # an empty subject collection drops the statement entirely
+            # (reference turtle/evaluate.go:371-373)
+            self.emit(self.evaluate_object(subj, out), pol, out)
 
 
 def evaluate_document(stmts, base: str = "", validate: bool = False):
@@ -731,7 +707,7 @@ def evaluate_document(stmts, base: str = "", validate: bool = False):
             ctx.prefixes[name] = iri_v
             ctx.iri_cache.clear()
         elif k == "triples":
-            out.extend(ctx.evaluate_triples(stmt))
+            ctx.evaluate_triples(stmt, out)
         else:
             raise RDFEvalError(f"unknown statement {k!r}")
     return sort_document(out)

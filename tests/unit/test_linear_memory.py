@@ -1,7 +1,8 @@
 """Adversarial memory bound: one huge term must not blow up the parser.
 
 An 8 MB literal or IRI once cost the line grammar 110-240 bytes of RSS
-per input byte (one regex backtrack entry per character). Each case runs
+per input byte (one regex backtrack entry per character), and an 8 MB
+triple-quoted Turtle or TriG string about 230. Each case runs
 in a fresh interpreter because ``ru_maxrss`` is a high-water mark: the
 growth it shows must come from parsing this one document.
 """
@@ -23,12 +24,13 @@ from rdf_spark.operators.parse import doc_to_rows
 
 fmt, kind, size = sys.argv[1], sys.argv[2], int(sys.argv[3])
 graph = " <http://ex/g>" if fmt.startswith("nquads") else ""
-if kind == "literal":
-    big = "ab\\tc " * (size // 6)
-    doc = f'<http://ex/s> <http://ex/p> "{big}"{graph} .\n'
-else:
+if kind == "iri":
     big = "http://ex/" + "a/b-c" * (size // 5)
     doc = f"<http://ex/s> <http://ex/p> <{big}>{graph} .\n"
+else:  # a "..." literal, or a Turtle/TriG long string (three " or three ')
+    q = {"literal": '"', "long-dq": '"' * 3, "long-sq": "'" * 3}[kind]
+    big = "ab\\tc " * (size // 6)
+    doc = f"<http://ex/s> <http://ex/p> {q}{big}{q}{graph} .\n"
 before = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
 rows = doc_to_rows("http://ex/doc", fmt, doc)
 after = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
@@ -37,8 +39,9 @@ print(json.dumps({"rows": len(rows), "error": rows[0][-1], "lex_len": len(rows[0
 """
 
 
-@pytest.mark.parametrize("kind", ["literal", "iri"])
-@pytest.mark.parametrize("fmt", ["ntriples", "nquads", "nquads-star"])
+@pytest.mark.parametrize("fmt,kind", [
+    (fmt, kind) for fmt in ("ntriples", "nquads", "nquads-star") for kind in ("literal", "iri")
+] + [(fmt, kind) for fmt in ("turtle", "trig") for kind in ("long-dq", "long-sq")])
 def test_huge_term_parses_in_bounded_memory(fmt, kind):
     env = dict(os.environ, PYTHONPATH=ROOT + os.pathsep + os.environ.get("PYTHONPATH", ""))
     out = subprocess.run(
