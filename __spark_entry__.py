@@ -1741,10 +1741,7 @@ def q_kg_pipeline(spark, sf_dir):
     -> link -> canonical dedupe. Oracle-checked end-to-end on the
     deterministic canonical columns (approx_sources is an HLL estimate
     and engine-specific, so it is excluded from the contract)."""
-    from rdf_spark.operators.canonical import canonicalize
-    from rdf_spark.operators.link import link_entities
-    from rdf_spark.operators.parse import good_triples, parse_pages
-    from rdf_spark.operators.skolemize import skolemize
+    from rdf_spark.plans.pipeline import build_triples
 
     pages = _nation_turtle(spark, sf_dir)
     n = _read(spark, sf_dir, "nation")
@@ -1752,9 +1749,7 @@ def q_kg_pipeline(spark, sf_dir):
         F.concat(F.lit(EX + "r"), F.col("n_regionkey").cast("string")).alias("surface"),
         F.concat(F.lit("http://kg.example/region/"), F.col("n_regionkey").cast("string")).alias("canonical_iri"),
     )
-    t = skolemize(good_triples(parse_pages(pages)))
-    t = link_entities(t, dictionary)
-    return canonicalize(t).select(
+    return build_triples(pages, dictionary, from_html=False).select(
         "subj", "pred", "obj_lex",
         F.col("support").cast("long").alias("support"), "first_url",
     )

@@ -199,10 +199,7 @@ def bench_kg_pipeline(spark, pages) -> int:
     """Full pipeline; returns triples_out (timed by the caller)."""
     from pyspark.sql import functions as F
 
-    from rdf_spark.operators.canonical import canonicalize
-    from rdf_spark.operators.link import link_entities
-    from rdf_spark.operators.parse import good_triples, parse_pages
-    from rdf_spark.operators.skolemize import skolemize
+    from rdf_spark.plans.pipeline import build_triples
 
     supp = spark.read.parquet(f"{SF_DIR}/supplier.parquet")
     dictionary = supp.select(
@@ -210,8 +207,7 @@ def bench_kg_pipeline(spark, pages) -> int:
         F.concat(F.lit("http://kg.example/supplier/"),
                  F.col("s_suppkey").cast("string")).alias("canonical_iri"),
     )
-    out = canonicalize(link_entities(skolemize(good_triples(parse_pages(pages))), dictionary))
-    return out.count()
+    return build_triples(pages, dictionary, from_html=False).count()
 
 
 def bench_parse_only(spark, pages) -> int:

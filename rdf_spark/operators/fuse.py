@@ -114,7 +114,7 @@ def resolve_functional(
     list rather than fusing everything).
 
     Sits naturally after canonical dedupe (plans/pipeline.py
-    finish_triples): ``strategy="majority"`` weights by the
+    build_triples): ``strategy="majority"`` weights by the
     ``support`` column canonicalize emits (distinct-assertion counts)
     when present; ``strategy="latest"`` needs ``ts_col``. The full
     input row of each winning claim is preserved (winners are

@@ -34,7 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..sources.extract import extract_blocks_from_html
+from ..sources.extract import MEDIA_TYPE_FORMATS, extract_blocks_from_html
 from ..terms import term_to_flat
 
 TRIPLES_SCHEMA = StructType(
@@ -58,37 +58,39 @@ _COLS = [f.name for f in TRIPLES_SCHEMA.fields]
 
 # line-format name -> parse_document(quads=, star=) of the one line grammar
 _LINE_FORMATS = {
-    "ntriples": (False, False), "application/n-triples": (False, False),
-    "nquads": (True, False), "application/n-quads": (True, False),
-    "ntriples-star": (False, True), "application/n-triples-star": (False, True),
-    "nquads-star": (True, True), "application/n-quads-star": (True, True),
+    "ntriples": (False, False),
+    "nquads": (True, False),
+    "ntriples-star": (False, True),
+    "nquads-star": (True, True),
 }
 
 
 def parse_text(fmt: str, text: str, base: str):
     """Parse one document -> list of quads (graph None for triple
-    syntaxes). Dispatch on media-type-ish format name; the four
+    syntaxes). ``fmt`` is a short format name or a media type of
+    :data:`~rdf_spark.sources.extract.MEDIA_TYPE_FORMATS`; the four
     line-based syntaxes (N-Triples, N-Quads and their RDF-star forms)
     share the one line grammar, :func:`rdf_spark.grammar.ntriples.parse_document`."""
+    fmt = MEDIA_TYPE_FORMATS.get(fmt, fmt)
     if fmt in _LINE_FORMATS:
         from ..grammar.ntriples import parse_document
 
         quads, star = _LINE_FORMATS[fmt]
         out = parse_document(text, quads=quads, star=star)
         return out if quads else [(s, p, o, None) for s, p, o in out]
-    if fmt in ("turtle", "text/turtle"):
+    if fmt == "turtle":
         from ..grammar.turtle import parse_and_evaluate
 
         return [(s, p, o, None) for s, p, o in parse_and_evaluate(text, base)]
-    if fmt in ("trig", "application/trig"):
+    if fmt == "trig":
         from ..grammar.trig import parse_and_evaluate
 
         return parse_and_evaluate(text)
-    if fmt in ("jsonld", "application/ld+json"):
+    if fmt == "jsonld":
         from ..sources.jsonld import parse_jsonld
 
         return parse_jsonld(text, base)
-    if fmt in ("rdfxml", "application/rdf+xml"):
+    if fmt == "rdfxml":
         from ..sources.rdfxml import parse_rdfxml
 
         return parse_rdfxml(text, base)
@@ -186,6 +188,9 @@ def parse_pages(pages: DataFrame, default_format: str = "turtle") -> DataFrame:
       the crawl-realistic mode for pages with missing or wrong content
       types.
 
+    A null ``html`` is a page with no blocks and a null ``text`` is no
+    document: neither yields a row, not even an error row.
+
     The page ``url`` seeds the base IRI for relative-IRI resolution
     (mirrors the ``cwd`` argument of the reference's EvaluateDocument).
     """
@@ -203,6 +208,8 @@ def parse_pages(pages: DataFrame, default_format: str = "turtle") -> DataFrame:
         def documents(pdf: pd.DataFrame):
             fmts = pdf["format"] if has_fmt else repeat(None)
             for url, text, fmt in zip(pdf["url"], pdf["text"], fmts):
+                if text is None:
+                    continue
                 f = fmt if fmt is not None else default_format
                 yield url, sniff_format(text) if f == "auto" else f, text
 
@@ -214,11 +221,6 @@ def parse_pages(pages: DataFrame, default_format: str = "turtle") -> DataFrame:
             yield pd.DataFrame(out, columns=_COLS)
 
     return src.mapInPandas(run, schema=TRIPLES_SCHEMA)
-
-
-def failed_docs(triples: DataFrame) -> DataFrame:
-    """Parse-error side-channel: (url, error) rows."""
-    return triples.where(triples.error.isNotNull()).select("url", "error")
 
 
 def good_triples(triples: DataFrame) -> DataFrame:

@@ -44,34 +44,25 @@ def parse_stage(pages: DataFrame, from_html: bool = True,
     The single expensive stage, and a single Python pass: with
     ``from_html`` the pages' html goes straight into
     :func:`parse_pages`, which extracts the embedded blocks and parses
-    them in the same ``mapInPandas`` (no intermediate blocks frame).
-    Everything downstream (triple build, error accounting) derives from
-    this one DataFrame so the parse runs once per bucket.
-    ``text_format`` names the syntax of the ``text`` column when not
-    extracting from HTML; a ``format`` column on the input overrides it
-    per row."""
-    if from_html:
-        src = pages.select("url", "html")
-    elif "format" in pages.columns:
-        src = pages.select("url", "format", "text")
-    else:
-        src = pages.select("url", F.lit(text_format).alias("format"), "text")
-    return parse_pages(src)
+    them in the same ``mapInPandas`` (no intermediate blocks frame);
+    without it the ``text`` column is parsed, as ``text_format`` unless
+    a ``format`` column names the syntax per row (``"auto"`` sniffs).
+    Everything downstream (triples, error accounting) derives from this
+    one DataFrame so the parse runs once."""
+    src = pages.select("url", "html") if from_html else pages.drop("html")
+    return parse_pages(src, default_format=text_format)
 
 
 def link_stage(parsed: DataFrame,
                dictionary: DataFrame | None = None) -> DataFrame:
-    """parsed rows -> linked raw triples (skolemize -> link)."""
-    triples = skolemize(good_triples(parsed))
+    """parsed rows -> skolemized rows, linked when a dictionary is
+    given. Error rows pass through unchanged (their null terms match
+    no dictionary surface), so a stream keeps them beside its triples;
+    the batch plans drop them first with :func:`good_triples`."""
+    triples = skolemize(parsed)
     if dictionary is not None:
         triples = link_entities(triples, dictionary)
     return triples
-
-
-def finish_triples(parsed: DataFrame,
-                   dictionary: DataFrame | None = None) -> DataFrame:
-    """parsed rows -> canonical triples (skolemize -> link -> dedupe)."""
-    return canonicalize(link_stage(parsed, dictionary))
 
 
 def build_triples(
@@ -80,14 +71,10 @@ def build_triples(
     from_html: bool = True,
     text_format: str = "turtle",
 ) -> DataFrame:
-    """The logical plan pages -> canonical triples (lazy; no actions)."""
-    return finish_triples(parse_stage(pages, from_html, text_format), dictionary)
-
-
-def parse_errors(pages: DataFrame, from_html: bool = True,
-                 text_format: str = "turtle") -> DataFrame:
+    """The logical plan pages -> canonical triples (lazy; no actions):
+    parse -> skolemize -> link -> dedupe."""
     parsed = parse_stage(pages, from_html, text_format)
-    return parsed.where(F.col("error").isNotNull()).select("url", "error")
+    return canonicalize(link_stage(good_triples(parsed), dictionary))
 
 
 def bucket_write_plan(
@@ -111,7 +98,8 @@ def bucket_write_plan(
         F.count(F.when(err.isNotNull(), 1)).alias("docs_failed"),
         F.count(F.when(err.isNull(), 1)).alias("raw_triples"),
     )
-    out = cluster_for_write(link_stage(parsed, dictionary), buckets=4)
+    out = cluster_for_write(link_stage(good_triples(parsed), dictionary),
+                            buckets=4)
     return out.observe(obs[2], F.count(F.lit(1)).alias("triples_out")), obs
 
 
@@ -139,21 +127,12 @@ class PipelineRun:
         }
 
     def run(self, pages: DataFrame, dictionary: DataFrame | None = None,
-            from_html: bool = True, fail_after_bucket: int | None = None,
-            text_format: str = "turtle",
-            bucketed_table: str | None = None,
-            table_buckets: int = 16) -> dict:
-        """Process all buckets not yet in the watermark table.
-        `fail_after_bucket` injects a crash for the resume test.
-
-        ``bucketed_table`` (opt-in): once EVERY checkpoint bucket is
-        complete, additionally materialize the full output as a
-        subj-bucketed+sorted catalog table (plans/bucketed.py) so
-        downstream subj-keyed consumers — BGP star joins, PO maps,
-        property-graph export — read a zero-Exchange layout. One
-        extra shuffle by subj at the end of the run; skipped (like
-        the data buckets) when the run resumed with nothing to do
-        AND the table already exists."""
+            from_html: bool = True, text_format: str = "turtle") -> dict:
+        """Process all buckets not yet in the watermark table: parse
+        each bucket's pages (their html with ``from_html``, else their
+        ``text`` as ``text_format``), link against ``dictionary`` when
+        given, and write the canonical triples. For a subj-bucketed copy
+        of the finished output, call :meth:`finalize_bucketed`."""
         done = self.completed_buckets()
         stats = {"processed": [], "skipped": sorted(done), "triples_out": 0}
         bucketed = pages.withColumn(
@@ -197,14 +176,6 @@ class PipelineRun:
                 json.dump({"bucket": b, "run_id": self.run_id}, f)
             stats["processed"].append(b)
             stats["triples_out"] += triples_out
-            if fail_after_bucket is not None and b >= fail_after_bucket:
-                raise RuntimeError(f"injected failure after bucket {b}")
-        if bucketed_table is not None and \
-                self.completed_buckets() >= set(range(self.n_buckets)):
-            if stats["processed"] or not self.spark.catalog.tableExists(
-                    bucketed_table):
-                self.finalize_bucketed(bucketed_table,
-                                       n_buckets=table_buckets)
         return stats
 
     def finalize_bucketed(self, table: str, n_buckets: int = 16,

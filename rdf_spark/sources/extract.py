@@ -67,7 +67,10 @@ _RDFA_PROBE = re.compile(r"\b(?:typeof|vocab|property)\s*=", re.IGNORECASE)
 def extract_blocks_from_html(html: bytes | str):
     """One page's html -> [(block_index, format, payload_text)].
     Pure function of the bytes; script payloads returned verbatim;
-    attribute-level markup (RDFa/Microdata) yields whole-page blocks."""
+    attribute-level markup (RDFa/Microdata) yields whole-page blocks.
+    A null page (``None``) has no blocks."""
+    if html is None:
+        return []
     if isinstance(html, (bytes, bytearray)):
         html = bytes(html).decode("utf-8", errors="replace")
     out = []

@@ -2,11 +2,14 @@
 
 Seeded (default 42), no wall clock, no network. Pages embed RDF blocks
 drawn from:
-  (a) the vendored W3C suite documents (positive + eval),
+  (a) the vendored W3C suite documents (positive + eval), or a small
+      built-in set of N-Triples, N-Quads, Turtle and TriG documents
+      when the suite files are absent,
   (b) template-generated Turtle with Zipf-skewed predicates/subjects
       (the head-entity skew fixture the salted aggregate must handle),
-  (c) malformed documents from the negative-syntax suites
-      (exercises the parse_errors path).
+  (c) malformed documents from the negative-syntax suites, or the
+      built-in malformed set (they become parse error rows, counted
+      as ``docs_failed`` in the pipeline lineage).
 
 Used by tests and bench.py; at a real 10^12-doc scale the same schema
 arrives from the crawl's Iceberg table instead.
@@ -26,6 +29,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .extract import MEDIA_TYPE_FORMATS
+
 PAGES_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -36,13 +41,7 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
-_MEDIA = {
-    "turtle": "text/turtle",
-    "ntriples": "application/n-triples",
-    "nquads": "application/n-quads",
-    "trig": "application/trig",
-    "jsonld": "application/ld+json",
-}
+_MEDIA = {fmt: media for media, fmt in MEDIA_TYPE_FORMATS.items()}
 
 _EPOCH = dt.datetime(2024, 1, 1)
 
@@ -103,20 +102,49 @@ def make_turtle_doc(rng: random.Random, n_entities: int, n_triples: int) -> str:
     return "\n".join(lines) + "\n"
 
 
+# Stand-ins for the W3C suite documents when the suite files are absent:
+# (format, text) pairs that parse, and pairs that each raise a parse or
+# evaluation error.
+_BUILTIN_GOOD = (
+    ("ntriples", '<http://example.org/s> <http://example.org/p> <http://example.org/o> .\n'
+                 '_:b0 <http://example.org/p> "chat"@fr .\n'),
+    ("ntriples", '<http://example.org/s> <http://example.org/n> '
+                 '"1"^^<http://www.w3.org/2001/XMLSchema#integer> .\n'),
+    ("nquads", '<http://example.org/s> <http://example.org/p> <http://example.org/o> '
+               '<http://example.org/g> .\n_:b1 <http://example.org/p> "x" _:g1 .\n'),
+    ("turtle", '@prefix ex: <http://example.org/> .\n'
+               'ex:s ex:p ex:o, "v" ; ex:q [ ex:r (1 2.5 3e1) ] .\n'),
+    ("turtle", 'PREFIX : <http://example.org/>\n:a :b """two\nlines""" .\n'),
+    ("trig", '@prefix ex: <http://example.org/> .\n'
+             'ex:g { ex:s ex:p ex:o . }\n{ ex:s ex:p "d" . }\n'),
+)
+_BUILTIN_BAD = (
+    ("ntriples", '<http://example.org/s> <http://example.org/p> .\n'),
+    ("nquads", '<http://example.org/s> <http://example.org/p> <http://example.org/o> '
+               '<http://example.org/g> <http://example.org/h> .\n'),
+    ("turtle", '@prefix ex: <http://example.org/> .\nex:s ex:p "unterminated .\n'),
+    ("turtle", 'ex:s ex:p ex:o .\n'),
+    ("trig", '@prefix ex: <http://example.org/> .\nex:g { ex:s ex:p ex:o .\n'),
+)
+
+
 def _suite_docs():
     """Positive/eval W3C docs as (format, text); negative-syntax docs
-    as malformed fixtures. Lazy so Spark workers never need it."""
+    as malformed fixtures. Without the suite files, the built-in
+    stand-ins. Lazy so Spark workers never need it."""
     from ..testsuite import load_manifest_regex
 
     good, bad = [], []
-    for suite, fmt in (("ntriples", "ntriples"), ("nquads", "nquads"),
-                       ("turtle", "turtle"), ("trig", "trig")):
-        for t in load_manifest_regex(suite):
-            text = t.action_text()
-            if "NegativeSyntax" in t.test_type:
-                bad.append((fmt, text))
-            elif "PositiveSyntax" in t.test_type or "Eval" in t.test_type:
-                good.append((fmt, text))
+    try:
+        for fmt in ("ntriples", "nquads", "turtle", "trig"):
+            for t in load_manifest_regex(fmt):
+                text = t.action_text()
+                if "NegativeSyntax" in t.test_type:
+                    bad.append((fmt, text))
+                elif "PositiveSyntax" in t.test_type or "Eval" in t.test_type:
+                    good.append((fmt, text))
+    except FileNotFoundError:
+        return list(_BUILTIN_GOOD), list(_BUILTIN_BAD)
     return good, bad
 
 

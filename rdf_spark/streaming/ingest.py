@@ -4,11 +4,14 @@ triple table.
 The reference is batch-only (SURVEY.md §2.6: no streaming); this is the
 Spark-native continuous-crawl front-end. Design:
 
-- **stateless streaming stage** (parse -> skolemize -> link): every
-  transformation is per-row/per-document, so the stream runs in append
-  mode with no watermark and no state store — exactly-once via the
-  file-sink commit log + source checkpoint offsets. This is the
-  streaming twin of the batch ``PipelineRun`` watermark protocol.
+- **stateless streaming stage** (parse -> skolemize -> link): the
+  batch pipeline's own ``parse_stage`` and ``link_stage``
+  (plans/pipeline.py), one Python pass per micro-batch, parse errors
+  kept as rows with ``error`` set. Every transformation is
+  per-row/per-document, so the stream runs in append mode with no
+  watermark and no state store — exactly-once via the file-sink commit
+  log + source checkpoint offsets. This is the streaming twin of the
+  batch ``PipelineRun`` watermark protocol.
 - **canonical dedupe stays a batch compaction** (canonicalize() over
   the appended files, e.g. hourly): a streaming global groupBy over an
   unbounded triple keyspace would accumulate unbounded state; at
@@ -26,9 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.link import link_entities
-from ..operators.parse import parse_pages
-from ..operators.skolemize import skolemize
+from ..plans.pipeline import link_stage, parse_stage
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -37,29 +38,6 @@ def stream_pages(spark: SparkSession, input_dir: str,
                  schema: str = PAGES_DDL) -> DataFrame:
     """File-source stream over a directory of page parquet files."""
     return spark.readStream.schema(schema).parquet(input_dir)
-
-
-def stream_triples(pages: DataFrame, dictionary: DataFrame | None = None,
-                   from_html: bool = True,
-                   text_format: str = "turtle") -> DataFrame:
-    """pages stream -> triples stream (stateless: parse + skolemize +
-    link; parse errors kept as rows with ``error`` set). html pages go
-    straight to :func:`parse_pages`, which extracts and parses them in
-    one Python pass."""
-    from pyspark.sql import functions as F
-
-    src = pages.select("url", "html") if from_html else pages.select(
-        "url", F.lit(text_format).alias("format"), "text"
-    )
-    triples = parse_pages(src)
-    triples = skolemize(triples)
-    if dictionary is not None:
-        good = triples.where(F.col("error").isNull())
-        bad = triples.where(F.col("error").isNotNull())
-        triples = link_entities(good.drop("error"), dictionary).withColumn(
-            "error", F.lit(None).cast("string")
-        ).unionByName(bad)
-    return triples
 
 
 def ingest_available(
@@ -71,13 +49,17 @@ def ingest_available(
     from_html: bool = True,
 ) -> None:
     """Process all currently-available page files exactly once and
-    append triples to ``output_dir``; blocking. Re-invocations skip
-    files already committed in the checkpoint (crash-safe resume)."""
+    append their rows to ``output_dir``; blocking. The pages' html is
+    parsed with ``from_html``, else their ``text`` as Turtle; triples
+    are skolemized and linked against ``dictionary`` when given, and
+    parse errors are kept as rows with ``error`` set. Re-invocations
+    skip files already committed in the checkpoint (crash-safe
+    resume)."""
     from ..submit import ship_package
 
     ship_package(spark)
-    triples = stream_triples(
-        stream_pages(spark, input_dir), dictionary, from_html=from_html
+    triples = link_stage(
+        parse_stage(stream_pages(spark, input_dir), from_html), dictionary
     )
     q = (
         triples.writeStream.format("parquet")
@@ -96,7 +78,7 @@ def compact_canonical(spark: SparkSession, triples_dir: str,
     streamed appends, clustered for write with one shuffle (run per
     closed partition)."""
     from ..operators.canonical import cluster_for_write
-    from pyspark.sql import functions as F
+    from ..operators.parse import good_triples
 
-    t = spark.read.parquet(triples_dir).where(F.col("error").isNull()).drop("error")
+    t = good_triples(spark.read.parquet(triples_dir))
     cluster_for_write(t).write.mode("overwrite").parquet(out_dir)

@@ -13,9 +13,13 @@ Usage:
 
 The input is a pages table (url, warc_ts, html, text, lang) — html
 binary is used when --from-html (default), else `text` is parsed with
---text-format. Output layout: <out>/triples/part=N parquet +
-<out>/_progress watermarks + <out>/_lineage manifests. Re-running with
-the same --output resumes: completed buckets are skipped.
+--text-format (a `format` column overrides it per row; `auto` sniffs).
+Each bucket goes through PipelineRun: parse -> skolemize -> link ->
+canonical dedupe. Output layout: <out>/triples/part=N parquet +
+<out>/_progress watermarks + <out>/_lineage manifests; documents that
+fail to parse are counted per bucket as `docs_failed` in the lineage.
+Re-running with the same --output resumes: completed buckets are
+skipped.
 """
 
 from __future__ import annotations

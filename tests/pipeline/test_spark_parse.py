@@ -8,10 +8,10 @@ from rdf_spark import terms as T
 from rdf_spark.grammar.turtle import parse_and_evaluate
 from rdf_spark.operators.canonical import canonicalize, exact_duplicate_docs
 from rdf_spark.operators.link import link_entities, salted_count
-from rdf_spark.operators.parse import good_triples, parse_pages
+from rdf_spark.operators.parse import good_triples, parse_pages, parse_text
 from rdf_spark.operators.skolemize import skolemize
 from rdf_spark.operators import graphops
-from rdf_spark.sources.extract import extract_blocks_from_html
+from rdf_spark.sources.extract import MEDIA_TYPE_FORMATS, extract_blocks_from_html
 from rdf_spark.sources.pages import generate_pages, entity_dictionary, generate_rows
 
 TTL_DOC = """@prefix s: <http://schema.org/> .
@@ -54,6 +54,64 @@ def test_parse_errors_recorded_not_raised(spark, pages_df):
     errs = parsed.where("error is not null").collect()
     assert len(errs) == 1 and errs[0].url == "http://ex.org/bad"
     assert "RDFSyntaxError" in errs[0].error
+
+
+_GOOD_PAGE = (b'<html><script type="text/turtle"><http://e/s> <http://e/p> "v" .'
+              b'</script></html>')
+
+
+@pytest.mark.parametrize("fmt", ["html", "auto", "turtle", "ntriples", "jsonld",
+                                 "rdfxml", "rdfa", "microdata"])
+def test_null_input_yields_no_rows(spark, fmt):
+    """A null html is a page with no blocks and a null text is no
+    document: the job runs, and the null row yields no row at all."""
+    from rdf_spark.sources.extract import extract_pages
+
+    if fmt == "html":
+        pages = spark.createDataFrame(
+            [("http://ex.org/null", None), ("http://ex.org/good", _GOOD_PAGE)],
+            "url string, html binary")
+        blocks = extract_pages(pages).collect()
+        assert [(b.url, b.format) for b in blocks] == [("http://ex.org/good", "turtle")]
+    else:
+        pages = spark.createDataFrame(
+            [("http://ex.org/null", None, fmt),
+             ("http://ex.org/good", '<http://e/s> <http://e/p> "v" .', "ntriples")],
+            "url string, text string, format string")
+    rows = parse_pages(pages).collect()
+    assert [(r.url, r.obj_lex, r.error) for r in rows] == [("http://ex.org/good", "v", None)]
+
+
+# one small document per short format name of MEDIA_TYPE_FORMATS
+_FORMAT_DOCS = {
+    "turtle": '@prefix e: <http://e/> . e:s e:p "v" .',
+    "ntriples": '<http://e/s> <http://e/p> "v" .\n',
+    "nquads": '<http://e/s> <http://e/p> "v" <http://e/g> .\n',
+    "trig": '@prefix e: <http://e/> . e:g { e:s e:p "v" . }',
+    "jsonld": '{"@id": "http://e/s", "http://e/p": "v"}',
+    "rdfxml": '<?xml version="1.0"?><rdf:RDF xmlns:rdf="http://www.w3.org/1999/'
+              '02/22-rdf-syntax-ns#" xmlns:e="http://e/"><rdf:Description'
+              ' rdf:about="http://e/s"><e:p>v</e:p></rdf:Description></rdf:RDF>',
+    "ntriples-star": '<< <http://e/s> <http://e/p> "v" >> <http://e/q> "w" .\n',
+    "nquads-star": '<< <http://e/s> <http://e/p> "v" >> <http://e/q> "w" <http://e/g> .\n',
+}
+
+
+@pytest.mark.parametrize(
+    "name", sorted(set(MEDIA_TYPE_FORMATS) | set(MEDIA_TYPE_FORMATS.values())))
+def test_parse_text_accepts_every_format_name(name):
+    """parse_text accepts each media type of MEDIA_TYPE_FORMATS and
+    its short name, with the same result for both."""
+    short = MEDIA_TYPE_FORMATS.get(name, name)
+    quads = parse_text(name, _FORMAT_DOCS[short], base="http://ex.org/")
+    assert len(quads) == 1
+    assert quads == parse_text(short, _FORMAT_DOCS[short], base="http://ex.org/")
+
+
+@pytest.mark.parametrize("name", ["text/html", "Turtle", "n-triples", ""])
+def test_parse_text_refuses_unknown_format(name):
+    with pytest.raises(ValueError, match="unknown RDF format"):
+        parse_text(name, "", base="")
 
 
 def test_skolemize_deterministic_and_global(spark, pages_df):

@@ -91,3 +91,46 @@ def test_stream_bad_documents_become_error_rows(spark, dirs):
     errs = out.where(F.col("error").isNotNull())
     assert errs.count() == 1
     assert errs.first()["url"] == "http://crawl.example/bad"
+
+
+LINK_DOC = """@prefix e: <http://example.org/entity/> .
+@prefix s: <http://schema.org/> .
+e:e{i} s:knows e:e{j} ; s:name "n{i}" ; s:about [ s:mentions e:e{j} ] .
+"""
+
+
+def test_stream_with_dictionary_links_and_keeps_errors(spark, dirs):
+    """With a dictionary the stream is the batch parse_stage ->
+    link_stage chain: dictionary IRIs rewritten, the error row kept,
+    and one Python pass over the documents."""
+    from collections import Counter
+
+    from rdf_spark.plans.pipeline import link_stage, parse_stage
+    from rdf_spark.sources.pages import entity_dictionary
+    from rdf_spark.terms import KIND_IRI
+
+    rows = [(f"http://crawl.example/{i}",
+             LINK_DOC.replace("{i}", str(i)).replace("{j}", str(i + 1)))
+            for i in range(6)]
+    rows.append(("http://crawl.example/bad", "@prefix broken %%%"))
+    batch = spark.createDataFrame(rows, "url string, text string")
+    batch.write.parquet(dirs["in"])
+    d = entity_dictionary(spark, 30)
+    ingest_available(spark, dirs["in"], dirs["out"], dirs["ckpt"],
+                     dictionary=d, from_html=False)
+    out = spark.read.parquet(dirs["out"])
+
+    good = out.where(F.col("error").isNull())
+    iris = [r.subj for r in good.collect()] + [
+        r.obj_lex for r in good.where(F.col("obj_kind") == KIND_IRI).collect()]
+    assert not any(i.startswith("http://example.org/entity/") for i in iris)
+    # 3 subjects and 2 objects per document are dictionary surfaces
+    assert sum(i.startswith("http://kg.example/canonical/") for i in iris) == 6 * 5
+    errs = out.where(F.col("error").isNotNull()).collect()
+    assert [r.url for r in errs] == ["http://crawl.example/bad"]
+
+    expected = link_stage(parse_stage(batch, from_html=False), d)
+    assert Counter(map(tuple, out.collect())) == \
+        Counter(map(tuple, expected.select(*out.columns).collect()))
+    plan = expected._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
