@@ -1990,7 +1990,7 @@ _EMB_LSH_SIGS_CTE = r"""
     ), sigs AS (
         -- start from embeddings (not dots) so empty vectors keep a
         -- defined all-'0' signature, matching _hyperplane_sign's
-        -- empty-vector guard on the Spark side (ann.py:125-127)
+        -- empty-vector guard on the Spark side (ann.py::_hyperplane_dot)
         SELECT e.vec_id, e.embedding,
                string_agg(CASE WHEN len(e.embedding) = 0 THEN '0'
                                WHEN coalesce(d.dot, 0) >= 0 THEN '1'

@@ -268,6 +268,7 @@ def main() -> None:
         "doc_exact_dedup",
         "doc_quality",
         "emb_topk_cosine",
+        "emb_lsh_topk",
         "rdf_serialize",
         "kg_sparql_analytics",
         "tpch_q1_like",

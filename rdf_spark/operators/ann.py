@@ -4,12 +4,17 @@
   JVM-side (zip_with + aggregate on array<double>); the only shuffle is
   the final per-query top-k.
 - IVF-style partitioned top-k: restrict the search to the query's
-  coarse cluster (here the pre-assigned `label` column; in production
-  a k-means assignment step). Cuts the candidate set by the number of
-  partitions — the 100 TB scale path.
+  coarse cluster (the pre-assigned `label` column, or a k-means
+  assignment in ivf_kmeans_topk). Cuts the candidate set by the number
+  of partitions — the 100 TB scale path.
 - LSH (random-hyperplane) bucketed top-k: deterministic hyperplanes
   derived from md5 of (plane, dim) so results are reproducible across
-  engines and retries; candidates = same signature bucket.
+  engines and retries; candidates = the probed signature buckets.
+
+All three rank through ``_rank_topk`` and score with ``cosine``, the
+one cosine expression (shared with the embedding near-dup operators in
+dedup.py): norms are computed once per row, not per pair, and a zero
+vector has no cosine, so it is never anyone's neighbor.
 """
 
 from __future__ import annotations
@@ -18,6 +23,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -32,8 +38,39 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def cosine(a: Column, na: Column, b: Column, nb: Column) -> Column:
+    """Cosine of vectors ``a`` and ``b`` given their precomputed norms
+    ``na`` and ``nb``. Null when either norm is zero: a zero vector has
+    no direction, and the guard keeps the division from raising
+    DIVIDE_BY_ZERO under ANSI mode."""
+    return F.when(na * nb > 0, _dot(a, b) / (na * nb))
+
+
+def _rank_topk(q: DataFrame, c: DataFrame, k: int,
+               on: str | None = None) -> DataFrame:
+    """Top-``k`` cosine neighbors per query: (query_id, neighbor_id, cos,
+    rank). ``q`` is (query_id, qv, ...), ``c`` is (neighbor_id, cv, ...);
+    candidates are the equi-join on ``on``, or every corpus row when
+    ``on`` is None. Norms are computed once per side row. Cosine is
+    rounded to 4dp BEFORE ranking with a neighbor-id tie-break, so the
+    result set is engine-reproducible. A null cosine (a zero vector)
+    sorts last and is dropped with the rank filter: a filter below the
+    window would be pushed into the join and evaluate the dot product
+    twice per pair."""
+    q = q.withColumn("qn", _norm(F.col("qv")))
+    c = c.withColumn("cn", _norm(F.col("cv")))
+    pairs = q.join(c, on) if on else q.crossJoin(c)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        pairs.where(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cos", F.round(cosine(F.col("qv"), F.col("qn"),
+                                          F.col("cv"), F.col("cn")), 4))
+        .withColumn("rank", F.row_number().over(w))
+        .where((F.col("rank") <= k) & F.col("cos").isNotNull())
+        .select("query_id", "neighbor_id", "cos", "rank")
+    )
 
 
 def brute_force_topk(
@@ -43,26 +80,11 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, cos, rank). Cosine is
-    rounded to 4dp BEFORE ranking with a neighbor-id tie-break, so the
-    result set is engine-reproducible."""
-    from pyspark.sql.window import Window
-
+    """Exact cosine top-k over every corpus vector: (query_id,
+    neighbor_id, cos, rank), ranked by ``_rank_topk``."""
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     c = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    scored = (
-        q.crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine(F.col("qv"), F.col("cv")), 4))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(q, c, k)
 
 
 def ivf_topk(
@@ -81,8 +103,6 @@ def ivf_topk(
     multi-cluster probing needs centroid distances — use
     ivf_kmeans_topk(nprobe=...) for the tunable-recall form (it feeds
     this same join with an exploded query-side assignment)."""
-    from pyspark.sql.window import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
         F.col(partition_col).alias("part"),
@@ -91,19 +111,7 @@ def ivf_topk(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
         F.col(partition_col).alias("part"),
     )
-    scored = (
-        q.join(c, "part")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine(F.col("qv"), F.col("cv")), 4))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(q, c, k, on="part")
 
 
 def _hyperplane_dot(vec: Column, plane: int) -> Column:
@@ -149,12 +157,17 @@ def _margin_probes(queries: DataFrame, planes: int, nprobe: int,
 
     Per query row: compute the per-plane dots once, sort planes by
     |margin| ascending, score every nonempty subset of the
-    min(planes, 6) boundary-closest planes by its summed margin, sort
-    the (score, flipped-signature) structs, and explode the first
-    ``nprobe``. The exact bucket carries score -1 so it always probes
-    first. All expressions — the subset pool is a compile-time
-    constant, only its per-row ORDER is data-dependent."""
-    nbits = min(planes, _MAX_PROBE_BITS)
+    min(planes, 6, nprobe - 1) boundary-closest planes by its summed
+    margin, sort the (score, flipped-signature) structs, and explode
+    the first ``nprobe``. The exact bucket carries score -1 so it
+    always probes first. A probe that flips the j-th closest plane
+    ranks behind the exact bucket and the j single flips of closer
+    planes, so only the nprobe - 1 closest planes can reach the first
+    nprobe probes: the smaller pool gives the same probes as the
+    6-plane one, and nprobe=1 is the exact bucket alone. All
+    expressions — the subset pool is a compile-time constant, only its
+    per-row ORDER is data-dependent."""
+    nbits = min(planes, _MAX_PROBE_BITS, nprobe - 1)
     dots = F.array(*[_hyperplane_dot(F.col(vec_col), p) for p in range(planes)])
     q0 = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
@@ -222,7 +235,6 @@ def lsh_topk(
     nprobe: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe_order: str = "margin",
 ) -> DataFrame:
     """Random-hyperplane LSH ANN: equi-join on the signature bucket;
     recall trades off with `planes` (more planes -> smaller buckets)
@@ -230,78 +242,32 @@ def lsh_topk(
     buckets — the standard recall knob without re-hashing the corpus;
     candidate volume grows linearly with probes).
 
-    Probe ordering (``probe_order``):
-
-    - ``"margin"`` (default) — true multi-probe in the Lv et al.
-      (VLDB'07) sense: probe signatures are perturbation sets ranked
-      per query by the summed |dot(v, w_plane)| margin of the flipped
-      planes, so the first extra probes cross the hyperplanes the
-      query is CLOSEST to — where a true neighbor most likely landed
-      on the other side. Multi-bit probes are allowed; the pool is
-      every nonempty subset of the ``min(planes, 6)`` smallest-margin
-      planes (nprobe capped at ``2**min(planes, 6)``). The pool and
-      its per-row ordering do not depend on nprobe, so the probe list
-      for a smaller nprobe is a prefix of a larger one — recall is
-      monotone in nprobe (up to exact margin ties).
-    - ``"plane"`` — the legacy ordering: single-bit flips in plane
-      index order, capped at planes+1 probes. Margin-blind; kept for
-      A/B comparison.
+    Multi-probe in the Lv et al. (VLDB'07) sense, via
+    ``_margin_probes``: probe signatures are perturbation sets ranked
+    per query by the summed |dot(v, w_plane)| margin of the flipped
+    planes, so the first extra probes cross the hyperplanes the query
+    is CLOSEST to — where a true neighbor most likely landed on the
+    other side. The exact bucket always probes first, so nprobe=1 is
+    the plain bucketed search. Multi-bit probes are allowed; the
+    probes are the best perturbation sets among the subsets of the
+    ``min(planes, 6)`` smallest-margin planes (nprobe capped at
+    ``2**min(planes, 6)``), in one per-row order that does not depend
+    on nprobe, so the probe list for a smaller nprobe is a prefix of a
+    larger one — recall is monotone in nprobe (up to exact margin
+    ties).
 
     The corpus stays single-bucketed and probe signatures are distinct
     (distinct plane subsets flip distinct positions), so no duplicate
     (query, neighbor) candidates arise. Fully lazy — no driver action
     at construction time; probe generation is pure whole-stage-codegen
     expressions (sort of a ≤64-element struct array per query row)."""
-    from pyspark.sql.window import Window
-
-    sig = lambda c: lsh_signature(c, planes)  # noqa: E731
-    exact = lsh_signature(F.col(vec_col), planes)
-    if probe_order == "plane":
-        nprobe = max(1, min(nprobe, planes + 1))
-    elif probe_order == "margin":
-        nprobe = max(1, min(nprobe, 2 ** min(planes, _MAX_PROBE_BITS)))
-    else:
-        raise ValueError(f"probe_order must be 'margin' or 'plane': {probe_order!r}")
-
-    if nprobe == 1:
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-            exact.alias("bucket"),
-        )
-    elif probe_order == "plane":
-        flipped = [
-            F.concat(
-                F.substring(exact, 1, i),
-                F.when(F.substring(exact, i + 1, 1) == "1", F.lit("0"))
-                .otherwise(F.lit("1")),
-                F.substring(exact, i + 2, planes),
-            )
-            for i in range(nprobe - 1)
-        ]
-        probes = F.slice(F.array(exact, *flipped), 1, nprobe)
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-            F.explode(probes).alias("bucket"),
-        )
-    else:
-        q = _margin_probes(queries, planes, nprobe, id_col, vec_col)
+    nprobe = max(1, min(nprobe, 2 ** min(planes, _MAX_PROBE_BITS)))
+    q = _margin_probes(queries, planes, nprobe, id_col, vec_col)
     c = emb.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        sig(F.col(vec_col)).alias("bucket"),
+        lsh_signature(F.col(vec_col), planes).alias("bucket"),
     )
-    scored = (
-        q.join(c, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", F.round(cosine(F.col("qv"), F.col("cv")), 4))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_topk(q, c, k, on="bucket")
 
 
 def _broadcast_centroids(df: DataFrame, centroids: list[list[float]]):
@@ -393,9 +359,18 @@ def kmeans_fit(
     DataFrame ops: init = the k vectors with the smallest ids (no RNG —
     reproducible across runs/engines), then `iters` rounds of
     assign (broadcast numpy argmin, see _assign_nearest) + recompute
-    (posexplode -> per-(cluster,dim) mean). The driver only ever holds
-    k*dim floats — O(1) in corpus size; assign/mean work is
-    distributed. Returns the learned centroids."""
+    (posexplode -> per-(cluster,dim) mean). Assign/mean work is
+    distributed; the driver only ever holds k*dim floats — O(1) in
+    corpus size. Returns the learned centroids.
+
+    Driver ceiling: each Lloyd round collects the k x dim
+    ``(centroid, dim, mean)`` rows to the driver, about 350 bytes of
+    Python objects per row (measured: 1M rows held 348 MB and took
+    12.6 s to collect on a 4-CPU box). k=1024 at dim=768 (0.8M rows,
+    ~0.3 GB a round) fits a default driver; k=4096 at dim=768 (3.1M
+    rows, ~1.1 GB and ~40 s a round) is about the limit; the
+    16k-64k-list indexes of a 100 TB corpus (12-50M rows, 4-17 GB a
+    round) do not fit — fit those on a corpus sample."""
     init_rows = emb.orderBy(id_col).limit(k).select(vec_col).collect()
     centroids = [[float(x) for x in r[0]] for r in init_rows]
     for _ in range(iters):

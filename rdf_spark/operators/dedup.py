@@ -8,6 +8,10 @@
 - SimHash (vectorized Pandas UDF, Arrow-batched);
 - embedding-cosine near-duplicates.
 
+MinHash-LSH, SimHash and both embedding near-dup paths form their
+candidate pairs through one bucket kernel, ``_bucket_pairs``, which
+also holds the ``max_bucket`` guard for oversized buckets.
+
 MinHash here is hash-function-portable: h_i(shingle) = md5(seed_i ||
 shingle), minimum taken lexicographically over hex digests. That keeps
 the operator exactly reproducible in any engine with md5 (the DuckDB
@@ -36,7 +40,7 @@ def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
     Row-safety at web scale: a million byte-identical boilerplate
     pages is ONE content_hash. An unbounded collect_list builds that
     group into a single multi-million-element array row (the exact
-    failure ``lsh_candidate_pairs``'s max_bucket guards against), so
+    failure ``_bucket_pairs``'s max_bucket guards against), so
     membership is rank-filtered BEFORE any list is aggregated: the
     group count and a row_number rank come from two window specs over
     the same content_hash partitioning (one exchange, one sort, no
@@ -173,30 +177,75 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = 8) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
+def _bucket_pairs(members: DataFrame, keys: list[str],
+                  max_bucket: int | None = None) -> DataFrame:
+    """Candidate pairs within buckets: ``members(id, payload..., *keys)``
+    -> ``(a, b)``, two structs of the member's non-key columns with
+    ``a.id < b.id``, for every pair of members sharing all ``keys`` (for
+    every pair when ``keys`` is empty). The one pair kernel behind
+    lsh_candidate_pairs, simhash_near_dups, embedding_near_dups_lsh and
+    embedding_near_dups; callers score and filter the pairs.
+
+    Scale design: ONE shuffle groups each bucket's members (sorted by
+    id) into a row and pairs are generated in-row — each member
+    explodes against the slice of members after it, so no value ever
+    holds more than one bucket's member list and no self-join shuffles
+    the upstream twice.
+
+    ``max_bucket`` bounds the quadratic blowup of pathological buckets
+    (e.g. millions of byte-identical boilerplate pages, or near-zero
+    template embeddings, landing in one bucket at web scale): bucket
+    sizes and each bucket's minimum member (``min_by`` over the id) are
+    counted first, and members of oversized buckets NEVER aggregate
+    into a single row — each pairs only with its bucket's minimum,
+    row by row (star pairs), so output is linear in the bucket size and
+    there is no multi-million-element array and no 2 GB row limit.
+    Connected components are preserved whenever an oversized bucket is
+    one near-identical group (the web-scale case the cap exists for);
+    pairs between two non-minimum members of an oversized bucket are
+    not emitted (the documented approximation), and the callers'
+    scores are still computed exactly for the star pairs. The members
+    subplan is referenced by both the size count and the member join,
+    but its upstream exchange executes once (Spark ReusedExchange).
+    None (default) = exact all-pairs, which is what the DuckDB oracles
+    in __spark_entry__ compute."""
+    member = F.struct(*[c for c in members.columns if c not in keys])
+    small = members
+    star = None
+    if max_bucket is not None:
+        stats = members.groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.min_by(member, F.col("id")).alias("__mn"),
+        )
+        # no keys: one bucket, joined to its single stats row
+        joined = members.join(stats.where(F.col("__n") > 1), keys or None)
+        small = joined.where(F.col("__n") <= max_bucket).select(*members.columns)
+        star = joined.where(
+            (F.col("__n") > max_bucket) & (F.col("id") != F.col("__mn.id"))
+        ).select(F.col("__mn").alias("a"), member.alias("b"))
+    buckets = (
+        small.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(member)).alias("__m"))
+        .where(F.size("__m") > 1)
+    )
+    pairs = buckets.select(
+        "__m", F.posexplode("__m").alias("__i", "a")
+    ).select(
+        "a", F.explode(F.slice("__m", F.col("__i") + 2, F.size("__m"))).alias("b")
+    )
+    return pairs if star is None else pairs.unionByName(star)
+
+
 def lsh_candidate_pairs(sigs: DataFrame, num_hashes: int = 8,
                         band_size: int = 2,
                         max_bucket: int | None = None) -> DataFrame:
-    """Band minhash signatures -> candidate pairs (a < b).
+    """Band minhash signatures -> candidate pairs (doc_a < doc_b).
 
-    Scale design: ONE pass over the signatures (bands generated by
-    exploding an in-row array — the expensive shingle/minhash upstream
-    is never recomputed), ONE shuffle to group (band, bucket), pairs
-    generated in-row from the bucket's sorted doc list, then a distinct
-    across bands. No self-join: the join formulation shuffles the
-    upstream twice and recomputes it per band.
-
-    ``max_bucket`` bounds the quadratic blowup of pathological buckets
-    (e.g. millions of byte-identical boilerplate pages landing in one
-    bucket at web scale): members of oversized buckets NEVER aggregate
-    into a single row — bucket sizes are counted first and oversized
-    buckets emit star pairs (member -> bucket-min doc_id) row-by-row,
-    so no multi-million-element array and no 2 GB row limit; small
-    buckets keep the in-row all-pairs path. Same connected components
-    for clustering, linear output. The sigs subplan is referenced by
-    both the size count and the member join, but the aggregation
-    exchange is physically executed once (Spark ReusedExchange).
-    None (default) = exact all-pairs (the DuckDB oracle in
-    __spark_entry__ computes all pairs)."""
+    ONE pass over the signatures: bands are generated by exploding an
+    in-row array of (band, bucket) structs, so the expensive
+    shingle/minhash upstream is never recomputed per band; pairs come
+    from ``_bucket_pairs`` on (band, bucket) (``max_bucket`` as
+    documented there), then a distinct across bands."""
     band_keys = [
         F.struct(
             F.lit(b).alias("band"),
@@ -205,47 +254,14 @@ def lsh_candidate_pairs(sigs: DataFrame, num_hashes: int = 8,
         )
         for b in range(0, num_hashes, band_size)
     ]
-    bands = sigs.select(
-        "doc_id", F.explode(F.array(*band_keys)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
-
-    ids = F.col("ids")
-    all_pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
+    members = sigs.select(
+        F.col("doc_id").alias("id"), F.explode(F.array(*band_keys)).alias("bb")
+    ).select("id", "bb.band", "bb.bucket")
+    return (
+        _bucket_pairs(members, ["band", "bucket"], max_bucket)
+        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
+        .distinct()
     )
-    if max_bucket is None:
-        buckets = (
-            bands.groupBy("band", "bucket")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-            .where(F.size("ids") > 1)
-        )
-        return (
-            buckets.select(F.explode(all_pairs).alias("p"))
-            .select("p.doc_a", "p.doc_b")
-            .distinct()
-        )
-    stats = bands.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("mn")
-    )
-    joined = bands.join(stats.where(F.col("n") > 1), ["band", "bucket"])
-    small_pairs = (
-        joined.where(F.col("n") <= max_bucket)
-        .groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .select(F.explode(all_pairs).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-    )
-    big_pairs = (
-        joined.where((F.col("n") > max_bucket) & (F.col("doc_id") != F.col("mn")))
-        .select(F.col("mn").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    )
-    return small_pairs.unionByName(big_pairs).distinct()
 
 
 def jaccard_pairs(sh: DataFrame, threshold: float = 0.8,
@@ -460,70 +476,56 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 
 def simhash_near_dups(sig: DataFrame, max_hamming: int = 3,
                       max_bucket: int | None = None) -> DataFrame:
-    """Near-duplicate pairs by SimHash Hamming distance. Candidate
-    generation by 16-bit band equality (4 bands over 64 bits): any pair
-    within Hamming distance 3 shares at least one exact band.
-
-    ``max_bucket`` bounds the quadratic blowup of pathological band
-    buckets (millions of byte-identical boilerplate pages share one
-    simhash, hence all four buckets) with the same star-pair design as
-    ``lsh_candidate_pairs``: members of oversized buckets pair only
-    with the bucket's minimum doc_id (hamming still computed and
-    filtered exactly), so output is linear in the bucket size and
-    connected components are preserved whenever the oversized bucket
-    is dominated by one near-identical group — the web-scale case the
-    cap exists for. Pairs between two non-min members of an oversized
-    bucket are not emitted (documented approximation). None (default)
-    = exact all-pairs, which is what the DuckDB oracle computes."""
-    bands = []
-    for b in range(4):
-        bands.append(
-            sig.select(
-                "doc_id", "simhash", F.lit(b).alias("band"),
-                F.shiftright(F.col("simhash"), b * 16).bitwiseAND(F.lit(0xFFFF)).alias("bucket"),
-            )
+    """Near-duplicate pairs by SimHash Hamming distance: (doc_a, doc_b,
+    hamming). Candidates come from ``_bucket_pairs`` on 16-bit band
+    equality (4 bands over 64 bits, exploded in-row like
+    lsh_candidate_pairs' bands): any pair within Hamming distance 3
+    shares at least one exact band. Hamming is computed exactly for
+    every candidate, star pairs of an oversized bucket included
+    (``max_bucket`` as documented on ``_bucket_pairs``)."""
+    bands = F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.shiftright(F.col("simhash"), b * 16).bitwiseAND(F.lit(0xFFFF)).alias("bucket"),
         )
-    ab = bands[0]
-    for x in bands[1:]:
-        ab = ab.unionByName(x)
-
-    def all_pairs(src: DataFrame) -> DataFrame:
-        a, b = src.alias("a"), src.alias("b")
-        return (
-            a.join(b, ["band", "bucket"])
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
-                F.col("a.simhash").alias("ha"), F.col("b.simhash").alias("hb"),
-            )
-            .distinct()
-            .withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
-            .where(F.col("hamming") <= max_hamming)
-            .select("doc_a", "doc_b", "hamming")
-        )
-
-    if max_bucket is None:
-        return all_pairs(ab)
-    stats = ab.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.min("doc_id").alias("__mn"),
-        F.min_by("simhash", "doc_id").alias("__mns"),
-    )
-    joined = ab.join(stats, ["band", "bucket"])
-    small = all_pairs(
-        joined.where(F.col("__n") <= max_bucket)
-        .select("doc_id", "simhash", "band", "bucket")
-    )
-    big = (
-        joined.where((F.col("__n") > max_bucket) & (F.col("doc_id") != F.col("__mn")))
+        for b in range(4)
+    ])
+    members = sig.select(
+        F.col("doc_id").alias("id"), "simhash", F.explode(bands).alias("bb")
+    ).select("id", "simhash", "bb.band", "bb.bucket")
+    return (
+        _bucket_pairs(members, ["band", "bucket"], max_bucket)
         .select(
-            F.col("__mn").alias("doc_a"), F.col("doc_id").alias("doc_b"),
-            F.bit_count(F.col("__mns").bitwiseXOR(F.col("simhash"))).alias("hamming"),
+            F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"),
+            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
         )
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    return small.unionByName(big).distinct()
+
+
+def _embedding_members(emb: DataFrame, id_col: str, vec_col: str,
+                       *keys) -> DataFrame:
+    """(id, v, n, *keys): the norm is computed once per vector, not per
+    pair."""
+    from .ann import _norm
+
+    return emb.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+        _norm(F.col(vec_col)).alias("n"), *keys,
+    )
+
+
+def _cosine_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, cos 4dp) of candidate pairs at or above
+    ``threshold``; a zero vector has no cosine, so it is never a match."""
+    from .ann import cosine
+
+    cos = cosine(F.col("a.v"), F.col("a.n"), F.col("b.v"), F.col("b.n"))
+    return pairs.select(
+        F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"),
+        F.round(cos, 4).alias("cos"),
+    ).where(F.col("cos") >= threshold)
 
 
 def embedding_near_dups_lsh(emb: DataFrame, id_col: str = "vec_id",
@@ -539,61 +541,15 @@ def embedding_near_dups_lsh(emb: DataFrame, id_col: str = "vec_id",
     This is the pair-generation scale path embedding_near_dups points
     at: candidate volume is sum-of-bucket-sizes-squared, tuned by
     ``planes`` (more planes -> smaller buckets, lower recall for
-    borderline pairs). ``max_bucket`` star-pairs oversized buckets
-    (member vs bucket-min, cosine still computed exactly) — the same
-    linear-output guard as the MinHash/SimHash variants, for the
-    near-zero vectors or template embeddings that pile into one
-    signature at web scale. None = exact within-bucket all-pairs
-    (what the DuckDB oracle computes)."""
-    from .ann import _dot, _norm, lsh_signature
+    borderline pairs). Pairs come from ``_bucket_pairs`` on the
+    signature (``max_bucket`` as documented there)."""
+    from .ann import lsh_signature
 
-    e = emb.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+    members = _embedding_members(
+        emb, id_col, vec_col,
         lsh_signature(F.col(vec_col), planes).alias("bucket"),
-    ).withColumn("n", _norm(F.col("v")))
-
-    def cos_of(av, an, bv, bn):
-        # zero-norm vectors have no defined cosine: null (never >= the
-        # threshold) instead of a divide-by-zero error under ANSI mode
-        return F.when(an * bn > 0, F.round(_dot(av, bv) / (an * bn), 4))
-
-    if max_bucket is None:
-        a, b = e.alias("a"), e.alias("b")
-        return (
-            a.join(b, "bucket")
-            .where(F.col("a.id") < F.col("b.id"))
-            .withColumn("cos", cos_of(F.col("a.v"), F.col("a.n"),
-                                      F.col("b.v"), F.col("b.n")))
-            .where(F.col("cos") >= threshold)
-            .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"),
-                    "cos")
-        )
-    stats = e.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("__bn"),
-        F.min("id").alias("__mn"),
-        F.min_by("v", "id").alias("__mv"),
-        F.min_by("n", "id").alias("__mnn"),
     )
-    joined = e.join(stats, "bucket")
-    a = joined.where(F.col("__bn") <= max_bucket).alias("a")
-    b = joined.where(F.col("__bn") <= max_bucket).alias("b")
-    small = (
-        a.join(b, "bucket")
-        .where(F.col("a.id") < F.col("b.id"))
-        .withColumn("cos", cos_of(F.col("a.v"), F.col("a.n"),
-                                  F.col("b.v"), F.col("b.n")))
-        .where(F.col("cos") >= threshold)
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"),
-                "cos")
-    )
-    big = (
-        joined.where((F.col("__bn") > max_bucket) & (F.col("id") != F.col("__mn")))
-        .withColumn("cos", cos_of(F.col("__mv"), F.col("__mnn"),
-                                  F.col("v"), F.col("n")))
-        .where(F.col("cos") >= threshold)
-        .select(F.col("__mn").alias("doc_a"), F.col("id").alias("doc_b"), "cos")
-    )
-    return small.unionByName(big)
+    return _cosine_pairs(_bucket_pairs(members, ["bucket"], max_bucket), threshold)
 
 
 def embedding_near_dups(emb: DataFrame, id_col: str = "vec_id",
@@ -601,43 +557,23 @@ def embedding_near_dups(emb: DataFrame, id_col: str = "vec_id",
                         threshold: float = 0.95,
                         allow_brute_force: bool = False) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (doc_a, doc_b, cos, 4dp).
-    Brute-force within label partitions when a `label` column exists
-    (IVF-style pruning). Without a label column the only exact plan is
-    a full cross join — quadratic, never acceptable at scale — so it
-    raises unless ``allow_brute_force=True`` (small exact baselines
-    only); the scale paths are embedding_near_dups_lsh (bucketed pair
-    generation), ann.lsh_topk / ann.ivf_kmeans_topk (top-k), or
-    simhash banding."""
-    from .ann import _dot, _norm
-
-    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("v")]
-    by_label = "label" in emb.columns
-    if by_label:
-        cols.append(F.col("label"))
-    elif not allow_brute_force:
+    Exact all-pairs within label partitions when a `label` column
+    exists (IVF-style pruning). Without a label column the only exact
+    plan pairs the whole corpus as one bucket — quadratic, never
+    acceptable at scale — so it raises unless
+    ``allow_brute_force=True`` (small exact baselines only); the scale
+    paths are embedding_near_dups_lsh (bucketed pair generation),
+    ann.lsh_topk / ann.ivf_kmeans_topk (top-k), or simhash banding."""
+    keys = ["label"] if "label" in emb.columns else []
+    if not keys and not allow_brute_force:
         raise ValueError(
             "embedding_near_dups without a `label` column is a quadratic "
             "cross join; pass allow_brute_force=True for small exact "
             "baselines or use embedding_near_dups_lsh / ann.lsh_topk / "
             "ann.ivf_kmeans_topk"
         )
-    e = emb.select(*cols).withColumn("n", _norm(F.col("v")))
-    a, b = e.alias("a"), e.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    join_on = ["label"] if by_label else []
-    pairs = a.join(b, join_on) if join_on else a.crossJoin(b)
-    return (
-        pairs.where(cond)
-        .withColumn(
-            "cos",
-            F.when(  # null cos for zero-norm vectors (ANSI-safe)
-                F.col("a.n") * F.col("b.n") > 0,
-                F.round(_dot(F.col("a.v"), F.col("b.v")) / (F.col("a.n") * F.col("b.n")), 4),
-            ),
-        )
-        .where(F.col("cos") >= threshold)
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"), "cos")
-    )
+    members = _embedding_members(emb, id_col, vec_col, *keys)
+    return _cosine_pairs(_bucket_pairs(members, keys), threshold)
 
 
 def remove_duplicated_spans(docs: DataFrame, n: int = 8, min_df: int = 2,

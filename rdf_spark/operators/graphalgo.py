@@ -55,7 +55,7 @@ def pagerank(
       cartesian product; the loop issues no driver action;
     - ``localCheckpoint`` truncates lineage each round so round k's
       plan does not replay rounds 1..k-1 (same pattern as
-      dup_clusters, operators/dedup.py:286).
+      dedup.dup_clusters).
     """
     # checkpoint the deduplicated edge list once: every iteration's
     # contribution join reads it, and without this each round's

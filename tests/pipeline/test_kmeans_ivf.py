@@ -25,6 +25,34 @@ def test_fit_deterministic(emb):
     assert a == b and len(a) == 4 and len(a[0]) == 64
 
 
+def test_fit_collects_at_most_k_by_dim_rows_per_round(spark, monkeypatch):
+    """The driver ceiling of kmeans_fit: over a corpus with n >> k x dim,
+    every collect (the k-row init, then one per Lloyd round) brings at
+    most k x dim rows to the driver."""
+    import numpy as np
+
+    k, dim, n, iters = 3, 4, 3000, 3
+    rng = np.random.RandomState(5)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(dim)]) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    )
+    cls = type(corpus)
+    collect = cls.collect
+    sizes = []
+
+    def counting_collect(self):
+        rows = collect(self)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(cls, "collect", counting_collect)
+    kmeans_fit(corpus, k=k, iters=iters)
+    assert n > 100 * k * dim
+    assert len(sizes) == iters + 1, sizes
+    assert all(0 < s <= k * dim for s in sizes), sizes
+
+
 def test_transform_covers_all_rows(emb):
     cents = kmeans_fit(emb, k=4, iters=2)
     a = kmeans_transform(emb, cents)
@@ -122,12 +150,11 @@ def test_lsh_multiprobe_recall_monotone(emb):
 
 
 def test_lsh_margin_probes_dominate_plane_order(spark):
-    """Margin-ranked multi-probe must dominate the legacy plane-order
-    probes on a clustered fixture at equal probe counts: the first
+    """Margin-ranked multi-probe on a clustered fixture: the first
     extra probes cross the hyperplanes the query is closest to, which
-    is where a jittered twin most likely landed. Dominance = recall >=
-    at every nprobe, strictly better somewhere, and full recall with
-    far fewer probes."""
+    is where a jittered twin most likely landed. Recall is monotone in
+    nprobe (the probe list for a smaller nprobe is a prefix of a larger
+    one) and saturates: 4 boundary-ranked probes find every twin."""
     import numpy as np
 
     from rdf_spark.operators.ann import lsh_topk
@@ -143,34 +170,16 @@ def test_lsh_margin_probes_dominate_plane_order(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = emb.where(F.col("vec_id") % 2 == 0)
 
-    def recall(nprobe, order):
-        got = lsh_topk(emb, q, k=1, planes=8, nprobe=nprobe,
-                       probe_order=order)
+    def recall(nprobe):
+        got = lsh_topk(emb, q, k=1, planes=8, nprobe=nprobe)
         return got.where(
             F.col("neighbor_id") == F.col("query_id") + 1).count() / npairs
 
     grid = (1, 2, 4, 6)
-    margin = [recall(n, "margin") for n in grid]
-    plane = [recall(n, "plane") for n in grid]
-    assert all(m >= p for m, p in zip(margin, plane)), (margin, plane)
-    assert sum(margin) > sum(plane), (margin, plane)
+    margin = [recall(n) for n in grid]
     # monotone in nprobe (prefix property of the probe list)
     assert margin == sorted(margin), margin
-    # the margin curve saturates: 4 boundary-ranked probes find every
-    # twin that the plane order still misses at 6
     assert margin[2] == 1.0, margin
-
-    # ... and not by scoring more candidates: the dominance holds at
-    # comparable candidate volume (a huge k makes the rank filter a
-    # no-op, so count == scored pairs). Measured: margin probes score
-    # FEWER candidates than plane order at nprobe >= 4 on this fixture.
-    def cands(nprobe, order):
-        return lsh_topk(emb, q, k=10**6, planes=8, nprobe=nprobe,
-                        probe_order=order).count()
-
-    for nprobe in (2, 4):
-        cm, cp = cands(nprobe, "margin"), cands(nprobe, "plane")
-        assert cm <= cp * 1.25, (nprobe, cm, cp)
 
 
 def test_lsh_margin_probe_tie_break_is_plane_order(spark):
