@@ -229,9 +229,9 @@ def q_rdf_parse_rdfxml(spark, sf_dir):
 
 def q_rdf_parse_microdata(spark, sf_dir):
     """HTML pages with Microdata markup -> triples via the full
-    extraction front-end (extract_pages + parse_pages)."""
+    extraction front-end: parse_pages on the html extracts and parses
+    the embedded blocks in one Python pass."""
     from rdf_spark.operators.parse import good_triples, parse_pages
-    from rdf_spark.sources.extract import extract_pages
 
     n = _read(spark, sf_dir, "nation")
     html = F.concat(
@@ -247,15 +247,15 @@ def q_rdf_parse_microdata(spark, sf_dir):
                  F.col("n_nationkey").cast("string")).alias("url"),
         F.encode(html, "utf-8").alias("html"),
     )
-    t = good_triples(parse_pages(extract_pages(pages)))
+    t = good_triples(parse_pages(pages))
     return t.select("subj", "pred", "obj_lex")
 
 
 def q_rdf_parse_rdfa(spark, sf_dir):
     """HTML pages with RDFa-lite markup -> triples via the full
-    extraction front-end."""
+    extraction front-end: parse_pages on the html extracts and parses
+    the embedded blocks in one Python pass."""
     from rdf_spark.operators.parse import good_triples, parse_pages
-    from rdf_spark.sources.extract import extract_pages
 
     n = _read(spark, sf_dir, "nation")
     html = F.concat(
@@ -271,7 +271,7 @@ def q_rdf_parse_rdfa(spark, sf_dir):
                  F.col("n_nationkey").cast("string")).alias("url"),
         F.encode(html, "utf-8").alias("html"),
     )
-    t = good_triples(parse_pages(extract_pages(pages)))
+    t = good_triples(parse_pages(pages))
     return t.select("subj", "pred", "obj_lex")
 
 

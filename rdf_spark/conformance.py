@@ -92,7 +92,7 @@ def build_corpus():
 
 def replay_through_pipeline(spark) -> dict:
     """Run the corpus through the Spark parse stage (the same
-    mapInPandas operator the production pipeline uses) and score
+    parse_pages operator the production pipeline uses) and score
     per-suite + overall precision/recall."""
     from .operators.parse import TRIPLES_SCHEMA, good_triples, parse_pages
     from .submit import ship_package

@@ -110,19 +110,19 @@ class _TrigParser(_Parser):
         if t is None:
             return None
         out = [t]
-        mark = self.i
-        self._wsplnc()
-        if self._lit("."):
+        while True:
             mark = self.i
             self._wsplnc()
-            rest = self.try_triples_block()
-            if rest is not None:
-                out.extend(rest)
-            else:
+            if not self._lit("."):
                 self.i = mark
-        else:
-            self.i = mark
-        return out
+                return out
+            mark = self.i  # after '.': kept when no triples follow
+            self._wsplnc()
+            t = self.try_triples()
+            if t is None:
+                self.i = mark
+                return out
+            out.append(t)
 
 
 def parse_document(doc: str):

@@ -92,9 +92,12 @@ _IRIREF_FULL_RE = re.compile(rf"(?:{IRIREF_BODY})\Z")
 _PLX = rf"%[{HEX}]{{2}}|\\[_~.\-!$&'()*+,;=/?#@%]"
 _PN_PREFIX = rf"[{PN_CHARS_BASE}](?:[{PN_CHARS}.]*[{PN_CHARS}])?"
 _PNAME_NS = rf"(?:{_PN_PREFIX})?:"
-_PN_LOCAL = (
-    rf"(?:[{PN_CHARS_U}:0-9]|{_PLX})"
-    rf"(?:(?:[{PN_CHARS}.:]|{_PLX})*(?:[{PN_CHARS}:]|{_PLX}))?"
+# PN_LOCAL ::= (PN_CHARS_U | ':' | [0-9] | PLX)
+#              ((PN_CHARS | '.' | ':' | PLX)* (PN_CHARS | ':' | PLX))?
+# as a possessive run: a run of dots is taken only where the name goes
+# on after it, so the name never ends with '.' and needs no backtracking
+_PN_LOCAL = rf"(?:[{PN_CHARS_U}:0-9]|{_PLX})" + unrolled(
+    rf"{PN_CHARS}:", rf"{_PLX}|\.++(?=[{PN_CHARS}:]|{_PLX})"
 )
 _PREFIXED_NAME_RE = re.compile(rf"(?!_:)({_PNAME_NS})((?:{_PN_LOCAL})?)")
 _PNAME_NS_RE = re.compile(_PNAME_NS)

@@ -3,15 +3,15 @@ columns with typed metadata.
 
 The Spark-side contracts — schema, Arrow batch shape, partitioning,
 UDF signatures — are real and tested; the actual codec work is stubbed
-behind a deterministic fake (this container ships no image/audio
-libraries). Swap `_decode_stub` for PIL/torchaudio/ffmpeg calls in
-production: the mapInPandas plumbing is unchanged.
+behind a deterministic fake (no image/audio libraries are assumed).
+Swap `_decode_stub` / `_decode_image_fake` for PIL/torchaudio/ffmpeg
+calls in production: each operator is a per-row function run through
+:func:`rdf_spark.submit.map_rows`, and that plumbing is unchanged.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import pandas as pd
 
@@ -25,6 +25,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..submit import map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -58,34 +60,17 @@ def _decode_stub(media_type: str, content: bytes) -> str:
 
 
 def extract_features(media: DataFrame) -> DataFrame:
-    """media -> typed per-item features via mapInPandas. Binary stays
-    binary end-to-end (Arrow passes bytes zero-copy); partition-
-    preserving, no shuffle."""
+    """media -> typed per-item features through :func:`map_rows`.
+    Binary stays binary end-to-end (Arrow passes bytes zero-copy);
+    partition-preserving, no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, mtype, content in zip(
-                pdf["media_id"], pdf["media_type"], pdf["content"]
-            ):
-                b = bytes(content) if content is not None else b""
-                rows.append(
-                    (
-                        mid,
-                        mtype,
-                        len(b),
-                        hashlib.sha256(b).hexdigest(),
-                        _decode_stub(mtype, b),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "media_type", "byte_len", "content_sha", "feature"],
-            )
+    def row(mid, mtype, content):
+        b = bytes(content) if content is not None else b""
+        return [(mid, mtype, len(b), hashlib.sha256(b).hexdigest(),
+                 _decode_stub(mtype, b))]
 
-    return media.select("media_id", "media_type", "content").mapInPandas(
-        run, schema=FEATURES_SCHEMA
-    )
+    src = media.select("media_id", "media_type", "content")
+    return map_rows(src, row, FEATURES_SCHEMA)
 
 
 DECODED_SCHEMA = StructType(
@@ -99,78 +84,51 @@ DECODED_SCHEMA = StructType(
 )
 
 
-def _decode_image_real(content: bytes):
-    """Real decode path — this container ships no imaging libraries.
-    Production drops PIL/libvips in here; the Spark plumbing around it
-    (schema, Arrow batch shape, partitioning) does not change."""
-    raise NotImplementedError("image codecs not available in this container")
-
-
 def _decode_image_fake(content: bytes, meta_w, meta_h):
-    """Deterministic fake: dimensions from metadata (fallback 8x8),
-    pixel bytes derived from the content hash — stable across runs and
-    engines, so downstream ops (resize, feature hash) are testable."""
-    w = int(meta_w) if meta_w is not None else 8
-    h = int(meta_h) if meta_h is not None else 8
+    """Deterministic fake: dimensions from metadata (fallback 8x8 where
+    it is null or NaN), pixel bytes derived from the content hash —
+    stable across runs and engines, so downstream ops (resize, feature
+    hash) are testable."""
+    w = 8 if pd.isna(meta_w) else int(meta_w)
+    h = 8 if pd.isna(meta_h) else int(meta_h)
     seed = hashlib.sha256(content).digest()
     n = w * h * 3
     px = (seed * (n // len(seed) + 1))[:n]
     return w, h, 3, px
 
 
-def decode_images(media: DataFrame, use_real_codec: bool = False) -> DataFrame:
-    """image rows -> decoded pixel buffers via mapInPandas (Arrow moves
-    the binary columns without copies; partition-preserving)."""
+def decode_images(media: DataFrame) -> DataFrame:
+    """image rows -> decoded pixel buffers through :func:`map_rows`
+    (Arrow moves the binary columns without copies; partition-
+    preserving)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, content, w, h in zip(
-                pdf["media_id"], pdf["content"], pdf["width"], pdf["height"]
-            ):
-                b = bytes(content) if content is not None else b""
-                if use_real_codec:
-                    dw, dh, c, px = _decode_image_real(b)
-                else:
-                    dw, dh, c, px = _decode_image_fake(
-                        b, None if pd.isna(w) else w, None if pd.isna(h) else h
-                    )
-                rows.append((mid, dw, dh, c, px))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "channels", "pixels"]
-            )
+    def row(mid, content, w, h):
+        b = bytes(content) if content is not None else b""
+        return [(mid, *_decode_image_fake(b, w, h))]
 
     src = media.where(F.col("media_type") == "image").select(
         "media_id", "content", "width", "height"
     )
-    return src.mapInPandas(run, schema=DECODED_SCHEMA)
+    return map_rows(src, row, DECODED_SCHEMA)
 
 
 def resize_images(decoded: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor resize over decoded pixel buffers — numpy fancy
-    indexing per image inside the same mapInPandas slot (the codec is
-    the stub; the index-mapping math is the real, vectorized path).
-    Output schema fixed at (out_w, out_h)."""
+    indexing per image through :func:`map_rows` (the codec is the stub;
+    the index-mapping math is the real, vectorized path). Output schema
+    fixed at (out_w, out_h)."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, w, h, c, px in zip(
-                pdf["media_id"], pdf["width"], pdf["height"],
-                pdf["channels"], pdf["pixels"],
-            ):
-                w, h, c = int(w), int(h), int(c)
-                arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(h, w, c)
-                ys = np.minimum(np.arange(out_h) * h // out_h, h - 1)
-                xs = np.minimum(np.arange(out_w) * w // out_w, w - 1)
-                out = np.ascontiguousarray(arr[ys][:, xs])
-                rows.append((mid, out_w, out_h, c, out.tobytes()))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "channels", "pixels"]
-            )
+    def row(mid, w, h, c, px):
+        w, h, c = int(w), int(h), int(c)
+        arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(h, w, c)
+        ys = np.minimum(np.arange(out_h) * h // out_h, h - 1)
+        xs = np.minimum(np.arange(out_w) * w // out_w, w - 1)
+        out = np.ascontiguousarray(arr[ys][:, xs])
+        return [(mid, out_w, out_h, c, out.tobytes())]
 
-    return decoded.mapInPandas(run, schema=DECODED_SCHEMA)
+    src = decoded.select(*DECODED_SCHEMA.fieldNames())
+    return map_rows(src, row, DECODED_SCHEMA)
 
 
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:

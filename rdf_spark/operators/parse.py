@@ -2,10 +2,11 @@
 
 The per-document parser family (rdf_spark.grammar: the one line
 grammar for N-Triples, N-Quads and their RDF-star forms, Turtle, TriG;
-plus the HTML, JSON-LD and RDF/XML sources) runs inside
-``mapInPandas`` — Arrow batches in, exploded triple batches out; only
-flat columns cross the UDF boundary (SURVEY.md §1.3, §3.1-3.3). No
-per-row Python UDFs anywhere (BASELINE.json input_hint).
+plus the HTML, JSON-LD and RDF/XML sources) runs as a per-row function
+through :func:`rdf_spark.submit.map_rows` — Arrow batches in, exploded
+triple batches out; only flat columns cross the UDF boundary (SURVEY.md
+§1.3, §3.1-3.3). No row-at-a-time Spark UDFs anywhere (BASELINE.json
+input_hint).
 
 Scale design:
 - one Python parse call per document, batched via Arrow
@@ -21,10 +22,6 @@ Scale design:
 from __future__ import annotations
 
 import re
-from itertools import repeat
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -35,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from ..sources.extract import MEDIA_TYPE_FORMATS, extract_blocks_from_html
+from ..submit import map_rows
 from ..terms import term_to_flat
 
 TRIPLES_SCHEMA = StructType(
@@ -52,8 +50,6 @@ TRIPLES_SCHEMA = StructType(
         StructField("error", StringType()),
     ]
 )
-
-_COLS = [f.name for f in TRIPLES_SCHEMA.fields]
 
 
 # line-format name -> parse_document(quads=, star=) of the one line grammar
@@ -141,8 +137,8 @@ def sniff_format(text: str) -> str:
     # match '<!doctype html' specifically, because legacy RDF/XML
     # routinely carries '<!DOCTYPE rdf:RDF [ <!ENTITY ...> ]>'
     if "<html" in low or re.search(r"<!doctype\s+html", low):
-        return "rdfa"  # attribute markup; microdata pages go through
-        # extract_pages, which probes both extractors
+        return "rdfa"  # attribute markup; pages parsed from their html
+        # (parse_pages on an ``html`` column) probe both extractors
     if head.startswith("<?xml") or "<rdf:RDF" in head \
             or low.startswith("<!doctype"):
         return "rdfxml"
@@ -170,7 +166,7 @@ def sniff_format(text: str) -> str:
 
 
 def parse_pages(pages: DataFrame, default_format: str = "turtle") -> DataFrame:
-    """pages -> triples DataFrame, in ONE mapInPandas pass.
+    """pages -> triples DataFrame, in ONE Python pass (:func:`map_rows`).
 
     Accepted input shapes:
 
@@ -195,32 +191,21 @@ def parse_pages(pages: DataFrame, default_format: str = "turtle") -> DataFrame:
     (mirrors the ``cwd`` argument of the reference's EvaluateDocument).
     """
     if "html" in pages.columns:
-        src = pages.select("url", "html")
+        def rows(url, html):
+            for _, fmt, text in extract_blocks_from_html(html):
+                yield from doc_to_rows(url, fmt, text)
 
-        def documents(pdf: pd.DataFrame):
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for _, fmt, text in extract_blocks_from_html(html):
-                    yield url, fmt, text
-    else:
-        has_fmt = "format" in pages.columns
-        src = pages.select("url", "text", *(["format"] if has_fmt else []))
+        return map_rows(pages.select("url", "html"), rows, TRIPLES_SCHEMA)
 
-        def documents(pdf: pd.DataFrame):
-            fmts = pdf["format"] if has_fmt else repeat(None)
-            for url, text, fmt in zip(pdf["url"], pdf["text"], fmts):
-                if text is None:
-                    continue
-                f = fmt if fmt is not None else default_format
-                yield url, sniff_format(text) if f == "auto" else f, text
+    def doc_rows(url, text, fmt=None):
+        if text is None:
+            return ()
+        f = fmt if fmt is not None else default_format
+        return doc_to_rows(url, sniff_format(text) if f == "auto" else f, text)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for url, fmt, text in documents(pdf):
-                out.extend(doc_to_rows(url, fmt, text))
-            yield pd.DataFrame(out, columns=_COLS)
-
-    return src.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    has_fmt = "format" in pages.columns
+    src = pages.select("url", "text", *(["format"] if has_fmt else []))
+    return map_rows(src, doc_rows, TRIPLES_SCHEMA)
 
 
 def good_triples(triples: DataFrame) -> DataFrame:

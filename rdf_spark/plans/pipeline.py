@@ -44,7 +44,7 @@ def parse_stage(pages: DataFrame, from_html: bool = True,
     The single expensive stage, and a single Python pass: with
     ``from_html`` the pages' html goes straight into
     :func:`parse_pages`, which extracts the embedded blocks and parses
-    them in the same ``mapInPandas`` (no intermediate blocks frame);
+    them in the same Python pass (no intermediate blocks frame);
     without it the ``text`` column is parsed, as ``text_format`` unless
     a ``format`` column names the syntax per row (``"auto"`` sniffs).
     Everything downstream (triples, error accounting) derives from this

@@ -13,19 +13,19 @@ Supported embeddings (media types per the reference registry,
 ``application/n-quads``, ``application/trig``, ``application/ld+json``,
 plus the RDF-star variants.
 
-Runs as mapInPandas: one Arrow batch of pages in, one batch of
-(url, block_index, format, text) out; partition-preserving (no shuffle).
+Runs per page through :func:`rdf_spark.submit.map_rows`: one Arrow
+batch of pages in, one batch of (url, block_index, format, text, lang)
+out; partition-preserving (no shuffle).
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+from ..submit import map_rows
 
 MEDIA_TYPE_FORMATS = {
     "text/turtle": "turtle",
@@ -94,22 +94,13 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     format, text, lang) — the page-level ``lang`` column (input_hint
     schema) rides along for downstream language filtering."""
     has_lang = "lang" in pages.columns
-    cols = ["url", "html"] + (["lang"] if has_lang else [])
-    src = pages.select(*cols)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            langs = pdf["lang"] if has_lang else None
-            for i, (url, html) in enumerate(zip(pdf["url"], pdf["html"])):
-                lang = langs.iloc[i] if langs is not None else None
-                for idx, fmt, text in extract_blocks_from_html(html):
-                    rows.append((url, idx, fmt, text, lang))
-            yield pd.DataFrame(
-                rows, columns=["url", "block_index", "format", "text", "lang"]
-            )
+    def blocks(url, html, lang=None):
+        return [(url, idx, fmt, text, lang)
+                for idx, fmt, text in extract_blocks_from_html(html)]
 
-    return src.mapInPandas(run, schema=BLOCKS_SCHEMA)
+    src = pages.select("url", "html", *(["lang"] if has_lang else []))
+    return map_rows(src, blocks, BLOCKS_SCHEMA)
 
 
 METADATA_SCHEMA = StructType(
@@ -161,22 +152,15 @@ def page_metadata_from_html(html: bytes | str, base: str = ""):
 
 
 def extract_metadata(pages: DataFrame) -> DataFrame:
-    """pages(url, html) -> one metadata row per page via mapInPandas
-    (Arrow-batched, partition-preserving — the crawl pipeline's page
-    metadata table)."""
+    """pages(url, html) -> one metadata row per page through
+    :func:`map_rows` (Arrow-batched, partition-preserving — the crawl
+    pipeline's page metadata table)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                m = page_metadata_from_html(
-                    bytes(html) if html is not None else b"", base=url or ""
-                )
-                rows.append((url, m["title"], m["description"],
-                             m["canonical"], m["html_lang"]))
-            yield pd.DataFrame(
-                rows, columns=["url", "title", "description", "canonical",
-                               "html_lang"],
-            )
+    def row(url, html):
+        m = page_metadata_from_html(
+            bytes(html) if html is not None else b"", base=url or ""
+        )
+        return [(url, m["title"], m["description"], m["canonical"],
+                 m["html_lang"])]
 
-    return pages.select("url", "html").mapInPandas(run, schema=METADATA_SCHEMA)
+    return map_rows(pages.select("url", "html"), row, METADATA_SCHEMA)

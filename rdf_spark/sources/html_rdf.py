@@ -23,7 +23,8 @@ Determinism: a pure function of the HTML bytes — parse order is
 document order, blank-node labels are per-document counters
 (``ra%d`` / ``md%d``; skolemization makes them globally unique
 downstream, SURVEY.md §2.4 R8). Runs inside the same Arrow-batched
-``mapInPandas`` as the grammar parsers (operators/parse.py).
+per-row pass as the grammar parsers (operators/parse.py, through
+``submit.map_rows``).
 """
 
 from __future__ import annotations

@@ -5,8 +5,8 @@ data: FOAF files, RSS 1.0, DOAP, old SKOS/OWL exports).
 The reference library (0x51-dev/rdf) has no XML layer; this module
 follows the pipeline's front-end pattern (sources/jsonld.py,
 sources/html_rdf.py): a pure ``text -> quads`` function executed
-inside the same Arrow-batched ``mapInPandas`` as the grammar kernels
-(operators/parse.py), with stdlib ``xml.etree.ElementTree`` (expat, C)
+inside the same Arrow-batched per-row pass as the grammar kernels
+(operators/parse.py, through ``submit.map_rows``), with stdlib ``xml.etree.ElementTree`` (expat, C)
 doing the tokenizing.
 
 Scope (documented subset of the RDF/XML 1.1 syntax, deterministic):

@@ -59,9 +59,6 @@ def dedup_available(
     itself lives in the checkpoint, so a duplicate arriving in a LATER
     micro-batch (within the watermark) of a resumed run is still
     dropped."""
-    from ..submit import ship_package
-
-    ship_package(spark)
     out = dedup_stream(stream_docs(spark, input_dir), watermark=watermark)
     q = (
         out.writeStream.format("parquet")

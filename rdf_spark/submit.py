@@ -1,12 +1,22 @@
-"""Package shipping for executors — the ``spark-submit --py-files``
-contract (BASELINE.json north_rule) as a library call.
+"""Where rdf_spark's Python runs on executors.
 
-On a cluster the package reaches executors via ``spark-submit
---py-files rdf_spark.zip``. When the engine is driven from a plain
-SparkSession instead (notebooks, tests, the driver harness),
-``ship_package(spark)`` builds the same zip once and registers it with
-``SparkContext.addPyFile`` so every executor's Python worker can import
-``rdf_spark`` regardless of its working directory.
+Two contracts live here:
+
+- :func:`map_rows` is the one Arrow boundary for per-row Python work.
+  The parse, extraction and multimodal operators each pass it a
+  per-row function; it runs that function over every row of each Arrow
+  batch and hands Spark one pandas frame per input batch, so a change
+  to that boundary (worker setup, output chunking) is made once.
+- :func:`ship_package` is the ``spark-submit --py-files`` contract
+  (BASELINE.json north_rule) as a library call. On a cluster the
+  package reaches executors via ``spark-submit --py-files
+  rdf_spark.zip``. When the engine is driven from a plain SparkSession
+  instead (notebooks, tests, the ``__spark_entry__`` queries),
+  ``ship_package(spark)`` builds the same zip once and registers it
+  with ``SparkContext.addPyFile`` so every executor's Python worker can
+  import ``rdf_spark`` regardless of its working directory.
+  :func:`map_rows` does not call it: a session whose workers already
+  import the package would only gain one more zip importer per worker.
 """
 
 from __future__ import annotations
@@ -14,6 +24,10 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from typing import Callable, Iterable
+
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 _SHIPPED: set[str] = set()
 
@@ -46,3 +60,26 @@ def ship_package(spark) -> None:
         return
     sc.addPyFile(build_zip())
     _SHIPPED.add(key)
+
+
+def map_rows(df: DataFrame, fn: Callable[..., Iterable[tuple]],
+             schema: StructType) -> DataFrame:
+    """Run ``fn`` over every row of ``df`` inside one ``mapInPandas``.
+
+    ``fn(*values)`` gets one row's values in ``df``'s column order, as
+    pandas hands them over (``None`` for a null string or binary,
+    ``NaN`` for a null integer, ``bytes`` for binary) and returns zero
+    or more output tuples in ``schema`` order. Each Arrow batch in
+    gives one pandas frame out; the output is partition-preserving."""
+    cols = schema.fieldNames()
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            out: list[tuple] = []
+            for row in pdf.itertuples(index=False, name=None):
+                out.extend(fn(*row))
+            yield pd.DataFrame(out, columns=cols)
+
+    return df.mapInPandas(run, schema=schema)

@@ -47,14 +47,6 @@ def test_decode_images_stub_shapes(media):
     assert len(d[2]["pixels"]) == 8 * 8 * 3
 
 
-def test_decode_real_codec_is_marked_unimplemented(media, spark):
-    with pytest.raises(Exception) as e:
-        decode_images(media, use_real_codec=True).collect()
-    assert "NotImplementedError" in str(e.value) or isinstance(
-        e.value, NotImplementedError
-    )
-
-
 def test_resize_images(media):
     out = {r["media_id"]: r for r in
            resize_images(decode_images(media), 2, 2).collect()}

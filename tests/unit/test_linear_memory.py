@@ -1,8 +1,9 @@
 """Adversarial memory bound: one huge term must not blow up the parser.
 
 An 8 MB literal or IRI once cost the line grammar 110-240 bytes of RSS
-per input byte (one regex backtrack entry per character), and an 8 MB
-triple-quoted Turtle or TriG string about 230. Each case runs
+per input byte (one regex backtrack entry per character), an 8 MB
+triple-quoted Turtle or TriG string about 230, and an 8 MB prefixed
+name's local part about 130 (``PN_LOCAL``). Each case runs
 in a fresh interpreter because ``ru_maxrss`` is a high-water mark: the
 growth it shows must come from parsing this one document.
 """
@@ -27,6 +28,9 @@ graph = " <http://ex/g>" if fmt.startswith("nquads") else ""
 if kind == "iri":
     big = "http://ex/" + "a/b-c" * (size // 5)
     doc = f"<http://ex/s> <http://ex/p> <{big}>{graph} .\n"
+elif kind == "pname":  # PN_LOCAL with PLX escapes and inner dots
+    big = "a%41b.c" * (size // 7)
+    doc = f"@prefix ex: <http://ex/> .\n<http://ex/s> <http://ex/p> ex:{big} .\n"
 else:  # a "..." literal, or a Turtle/TriG long string (three " or three ')
     q = {"literal": '"', "long-dq": '"' * 3, "long-sq": "'" * 3}[kind]
     big = "ab\\tc " * (size // 6)
@@ -41,7 +45,7 @@ print(json.dumps({"rows": len(rows), "error": rows[0][-1], "lex_len": len(rows[0
 
 @pytest.mark.parametrize("fmt,kind", [
     (fmt, kind) for fmt in ("ntriples", "nquads", "nquads-star") for kind in ("literal", "iri")
-] + [(fmt, kind) for fmt in ("turtle", "trig") for kind in ("long-dq", "long-sq")])
+] + [(fmt, kind) for fmt in ("turtle", "trig") for kind in ("long-dq", "long-sq", "pname")])
 def test_huge_term_parses_in_bounded_memory(fmt, kind):
     env = dict(os.environ, PYTHONPATH=ROOT + os.pathsep + os.environ.get("PYTHONPATH", ""))
     out = subprocess.run(
@@ -52,3 +56,13 @@ def test_huge_term_parses_in_bounded_memory(fmt, kind):
     assert res["rows"] == 1 and res["error"] is None
     assert res["lex_len"] > SIZE * 0.8
     assert res["grew_mb"] < RSS_BOUND_MB, res
+
+
+def test_trig_graph_block_statement_count_is_not_bounded_by_recursion():
+    from rdf_spark.operators.parse import doc_to_rows
+
+    n = 5000
+    body = " .\n".join(f"<http://ex/s{i}> <http://ex/p> <http://ex/o{i}>" for i in range(n))
+    rows = doc_to_rows("http://ex/doc", "trig", f"<http://ex/g> {{\n{body} .\n}}\n")
+    assert len(rows) == n
+    assert all(r[-1] is None for r in rows)
