@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..submit import _prune_zip_importers
 from .web import url_host
 
 # Vendored subset of publicsuffix.org multi-label plain rules (the
@@ -191,6 +192,7 @@ def idna_ascii_host():
 
     @F.pandas_udf("string")
     def _udf(hosts: pd.Series) -> pd.Series:
+        _prune_zip_importers()
         return hosts.map(enc)
 
     return _udf

@@ -126,9 +126,16 @@ _STRING_LSQ_RE = re.compile(rf"'''({_STRING_BODY_LSQ})'''")
 
 # evaluator fast paths: inputs whose canonicalization is the identity
 # (printable ASCII; no backslash; no '.' for PN_LOCAL / no '"' for
-# string bodies) skip the per-char escape loops in Context
+# string bodies) skip the escape canonicalizations in Context
 _SIMPLE_LOCAL_RE = re.compile(r"[\x20-\x2D\x2F-\x5B\x5D-\x7E]*\Z")
 _PLAIN_LEX_RE = re.compile(r"[\x20-\x21\x23-\x5B\x5D-\x7E]*\Z")
+# Context's escape canonicalizations work on runs, so the pieces they
+# join grow with the number of escapes and non-ASCII chars, not with the
+# string's length. A run of chars outside printable ASCII, each to be
+# written \uXXXX (\UXXXXXXXX above U+FFFF):
+_NON_PRINTABLE_RE = re.compile(r"[^\x20-\x7E]+")
+# the longest run holding no UCHAR (an escaped backslash is kept whole)
+_NO_UCHAR_RE = re.compile(unrolled(r"^\\", r"\\[^uU]"))
 
 _OWS_RE = re.compile(r"[ \t]*")
 # WSPLNC ::= (Whitespace | EndOfLine | Comment)*
@@ -494,6 +501,29 @@ def parse_document(doc: str):
 # --- evaluation -------------------------------------------------------------
 
 
+def _escape_run(m):
+    return "".join(f"\\u{ord(c):04X}" if c <= "\uffff" else f"\\U{ord(c):08X}"
+                   for c in m.group())
+
+
+def _decode_uchars(v):
+    """Each UCHAR of a string body: printable ASCII as its char, any
+    other code point as \\uXXXX (\\UXXXXXXXX from U+FFFF up); every
+    other escape stays as written. ``v`` has passed the grammar, so each
+    backslash starts an ECHAR or a whole UCHAR."""
+    out = []
+    pos = 0
+    while True:
+        end = _NO_UCHAR_RE.match(v, pos).end()
+        out.append(v[pos:end])
+        if end == len(v):
+            return "".join(out)
+        pos = end + (6 if v[end + 1] == "u" else 10)
+        n = int(v[end + 2:pos], 16)
+        out.append(chr(n) if 0x1F < n < 0x7F
+                   else f"\\u{n:04X}" if n < 0xFFFF else f"\\U{n:08X}")
+
+
 class Context:
     """Per-document evaluation state (reference turtle/context.go:8-29)."""
 
@@ -551,26 +581,15 @@ class Context:
         if prefix is None:
             raise RDFEvalError(f"prefix {prefix_key!r} not defined")
         # fast path: printable-ASCII local with no '\' and no '.' is
-        # emitted verbatim by the loop below (hot: most locals)
+        # emitted verbatim by the code below (hot: most locals)
         if _SIMPLE_LOCAL_RE.match(local) is not None:
             return ("i", prefix + local)
-        out = []
-        escaped = False
-        for c in local:
-            if c == "\\":
-                escaped = True
-                continue
-            cp = ord(c)
-            if cp <= 0x1F or (c == "." and not escaped):
-                out.append(f"\\u{cp:04X}")
-            elif 0x7F <= cp <= 0xFFFF:
-                out.append(f"\\u{cp:04X}")
-            elif cp > 0xFFFF:
-                out.append(f"\\U{cp:08X}")
-            else:
-                out.append(c)
-            escaped = False
-        return ("i", prefix + "".join(out))
+        # each backslash is dropped and the char after it kept as is; an
+        # unescaped '.' becomes \u002E
+        first, *rest = local.split("\\")
+        local = "".join([first.replace(".", "\\u002E")]
+                        + [p[:1] + p[1:].replace(".", "\\u002E") for p in rest])
+        return ("i", prefix + _NON_PRINTABLE_RE.sub(_escape_run, local))
 
     # E10: string literal escape canonicalization (turtle/evaluate.go:256-340)
     def evaluate_string(self, node):
@@ -587,47 +606,9 @@ class Context:
             v = v.replace("\n", "\\n").replace("\r", "\\r").replace('\\"', '"')
         v = v.replace('"', '\\"').replace("\t", "\\t")
         v = v.replace("\\b", "\\u0008").replace("\\f", "\\u000C")
-        out = []
-        escaped = False
-        ucount = 0
-        ubuf = []
-        for c in v:
-            if not escaped and c == "\\":
-                escaped = True
-                continue
-            if escaped:
-                if c == "u":
-                    ucount = 4
-                elif c == "U":
-                    ucount = 8
-                else:
-                    out.append("\\" + c)
-                escaped = False
-                continue
-            if ucount > 0:
-                ubuf.append(c)
-                ucount -= 1
-                if ucount == 0:
-                    n = int("".join(ubuf), 16)
-                    if 0x1F < n < 0x7F:
-                        out.append(chr(n))
-                    elif n < 0xFFFF:
-                        out.append(f"\\u{n:04X}")
-                    else:
-                        out.append(f"\\U{n:08X}")
-                    ubuf = []
-                continue
-            cp = ord(c)
-            if cp <= 0x1F:
-                out.append(f"\\u{cp:04X}")
-            elif 0x7F <= cp <= 0xFFFF:
-                out.append(f"\\u{cp:04X}")
-            elif cp > 0xFFFF:
-                out.append(f"\\U{cp:08X}")
-            else:
-                out.append(c)
-            escaped = False
-        lex = "".join(out)
+        if "\\u" in v or "\\U" in v:
+            v = _decode_uchars(v)
+        lex = _NON_PRINTABLE_RE.sub(_escape_run, v)
         if lang:
             return ("l", lex, None, lang)
         if dt is not None:

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..submit import _prune_zip_importers
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -293,6 +295,7 @@ def _centroid_d2_udf(bc, n: int):
 
     @pandas_udf("array<int>")
     def top_centroids(v: pd.Series) -> pd.Series:
+        _prune_zip_importers()
         cm = bc.value
         X = np.asarray(v.tolist(), dtype=np.float64)       # B x dim
         if X.size == 0:

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..submit import _prune_zip_importers
+
 
 def _lines(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, pos, line) — trimmed, empty lines dropped, document
@@ -178,6 +180,7 @@ def pack_sequences(docs: DataFrame, max_tokens: int = 2048,
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        _prune_zip_importers()
         pdf = pdf.sort_values("doc_id").reset_index(drop=True)
         seq_ids, offsets = [], []
         seq, acc = 0, 0

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..submit import _prune_zip_importers
+
 
 def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text",
@@ -436,6 +438,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _prune_zip_importers()
         for pdf in batches:
             toks_per_doc = [str(t).lower().split() for t in pdf["text"]]
             vocab: dict[str, int] = {}

@@ -1,8 +1,11 @@
 """submit.map_rows: the one Arrow boundary for per-row Python bodies."""
 
+import zipfile
 from collections import Counter
 
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType, LongType, StringType, StructField, StructType,
+)
 
 from rdf_spark.submit import map_rows
 
@@ -37,3 +40,45 @@ def test_map_rows_fans_out_per_row_over_small_batches(spark):
             spark.conf.unset(conf)
         else:
             spark.conf.set(conf, old)
+
+
+WORKER = StructType([
+    StructField("k", LongType()),
+    StructField("pid", LongType()),
+    StructField("zip_importers", ArrayType(StringType())),
+    StructField("path_jars", ArrayType(StringType())),
+    StructField("env_jars", ArrayType(StringType())),
+])
+
+
+def test_map_rows_prunes_worker_zip_importers(spark):
+    # Every task's importlib.invalidate_caches() re-reads the directory
+    # of each cached zipimporter; map_rows drops the sub-package and jar
+    # importers first, and the pruned state holds in the next job too.
+    def worker_state(k):
+        import os
+        import sys
+        import zipimport
+
+        importers = sorted(
+            p for p, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter)
+            and (".zip/" in p or p.endswith(".jar")))
+        path_jars = [p for p in sys.path if p.endswith(".jar")]
+        env_jars = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+                    if p.endswith(".jar")]
+        return [(k, os.getpid(), importers, path_jars, env_jars)]
+
+    df = spark.range(0, 16, 1, 4)
+    jobs = [map_rows(df, worker_state, WORKER).collect() for _ in range(2)]
+    env_jars = set()
+    for rows in jobs:
+        assert sorted(r.k for r in rows) == list(range(16))
+        left = [(r.pid, r.zip_importers, r.path_jars) for r in rows
+                if r.zip_importers or r.path_jars]
+        assert not left
+        env_jars.update(j for r in rows for j in r.env_jars)
+    # dropping a jar from the path is safe only while it holds no Python
+    for jar in env_jars:
+        with zipfile.ZipFile(jar) as zf:
+            assert not [n for n in zf.namelist() if n.endswith(".py")], jar

@@ -3,7 +3,10 @@
 An 8 MB literal or IRI once cost the line grammar 110-240 bytes of RSS
 per input byte (one regex backtrack entry per character), an 8 MB
 triple-quoted Turtle or TriG string about 230, and an 8 MB prefixed
-name's local part about 130 (``PN_LOCAL``). Each case runs
+name's local part about 130 (``PN_LOCAL``). The evaluator's escape
+canonicalization once built one list entry per character: an 8 MB long
+string dense with quotes, tabs and newlines cost about 44 bytes per
+input byte. Each case runs
 in a fresh interpreter because ``ru_maxrss`` is a high-water mark: the
 growth it shows must come from parsing this one document.
 """
@@ -31,6 +34,10 @@ if kind == "iri":
 elif kind == "pname":  # PN_LOCAL with PLX escapes and inner dots
     big = "a%41b.c" * (size // 7)
     doc = f"@prefix ex: <http://ex/> .\n<http://ex/s> <http://ex/p> ex:{big} .\n"
+elif kind.endswith("-dense"):  # quotes, an ECHAR and a newline every 10 chars
+    q = {"long-dq-dense": '"' * 3, "long-sq-dense": "'" * 3}[kind]
+    big = 'a"b\\tc""d\n' * (size // 10)
+    doc = f"<http://ex/s> <http://ex/p> {q}{big}{q} .\n"
 else:  # a "..." literal, or a Turtle/TriG long string (three " or three ')
     q = {"literal": '"', "long-dq": '"' * 3, "long-sq": "'" * 3}[kind]
     big = "ab\\tc " * (size // 6)
@@ -45,7 +52,8 @@ print(json.dumps({"rows": len(rows), "error": rows[0][-1], "lex_len": len(rows[0
 
 @pytest.mark.parametrize("fmt,kind", [
     (fmt, kind) for fmt in ("ntriples", "nquads", "nquads-star") for kind in ("literal", "iri")
-] + [(fmt, kind) for fmt in ("turtle", "trig") for kind in ("long-dq", "long-sq", "pname")])
+] + [(fmt, kind) for fmt in ("turtle", "trig")
+     for kind in ("long-dq", "long-sq", "long-dq-dense", "long-sq-dense", "pname")])
 def test_huge_term_parses_in_bounded_memory(fmt, kind):
     env = dict(os.environ, PYTHONPATH=ROOT + os.pathsep + os.environ.get("PYTHONPATH", ""))
     out = subprocess.run(
