@@ -13,6 +13,9 @@ helpers whose behavior must match the reference library
 - unicode unescape with Go `strconv.Unquote` error semantics: on any
   invalid escape / surrogate / overflow the *raw* string is used
   (reference: ntriples/doc.go:194-199, turtle/evaluate.go:95-101)
+- ``EscapeTable``, the one escape table that spells every literal's
+  canonical lexical form: ``terms.escape_literal_lex`` (the extraction
+  sources) and the Turtle/TriG evaluator translate through it
 
 Everything here is pure Python (no Spark imports) so it can run inside
 Arrow-batched UDFs without pulling in driver-side state.
@@ -72,8 +75,7 @@ LANGTAG = r"[A-Za-z]+(?:-[A-Za-z0-9]+)*"
 
 # --- Unicode escape helpers -----------------------------------------------
 
-_UCHAR_RE = re.compile(rf"\\u([{HEX}]{{4}})|\\U([{HEX}]{{8}})")
-_ANY_BACKSLASH = re.compile(r"\\")
+UCHAR_RE = re.compile(UCHAR)
 
 # Go escape sequences that strconv.Unquote accepts inside a "..." string.
 _GO_SIMPLE_ESCAPES = {
@@ -127,6 +129,40 @@ def unescape_unicode(s: str) -> str:
         else:
             return s  # unknown escape: Unquote error -> keep raw
     return "".join(out)
+
+
+# --- Canonical lexical form -----------------------------------------------
+
+
+class EscapeTable(dict):
+    """The one spelling of "raw character -> canonical lexical form", as a
+    ``str.translate`` table (reference turtle/evaluate.go:256-340):
+    ``"`` as ``\\"``; tab, LF and CR as ``\\t``, ``\\n``, ``\\r``; other C0
+    characters, DEL and non-ASCII as ``\\uXXXX``, above U+FFFF as
+    ``\\UXXXXXXXX``; with ``backslash``, ``\\`` as ``\\\\``. Printable ASCII
+    maps to itself. Spellings up to U+FFFF are cached on first use
+    (at most 65,536 entries); astral ones are spelled on each use."""
+
+    __slots__ = ()
+
+    def __init__(self, backslash: bool):
+        super().__init__({c: chr(c) for c in range(0x20, 0x7F)})
+        self.update({0x22: '\\"', 0x09: "\\t", 0x0A: "\\n", 0x0D: "\\r"})
+        if backslash:
+            self[0x5C] = "\\\\"
+
+    def __missing__(self, cp: int) -> str:
+        if cp > 0xFFFF:
+            return f"\\U{cp:08X}"
+        spelled = self[cp] = f"\\u{cp:04X}"
+        return spelled
+
+
+# raw text (extraction sources: terms.escape_literal_lex)
+LEX_ESCAPES = EscapeTable(backslash=True)
+# a Turtle string body whose escapes are already canonical: each
+# backslash there starts an escape and stays as written
+BODY_ESCAPES = EscapeTable(backslash=False)
 
 
 # --- RFC 3987 IRI validation ----------------------------------------------

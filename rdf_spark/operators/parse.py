@@ -101,7 +101,7 @@ def parse_text(fmt: str, text: str, base: str):
     raise ValueError(f"unknown RDF format {fmt!r}")
 
 
-def doc_to_rows(url: str, fmt: str, text: str, validate: bool = False):
+def doc_to_rows(url: str, fmt: str, text: str):
     """One document -> list of flat triple rows (+1 error row on failure)."""
     try:
         quads = parse_text(fmt, text, base=url or "")

@@ -28,7 +28,7 @@ Semantics replicated from the reference (0x51-dev/rdf):
 
 from __future__ import annotations
 
-from .grammar.chars import unescape_unicode
+from .grammar.chars import LEX_ESCAPES, unescape_unicode
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XSD_NS = "http://www.w3.org/2001/XMLSchema#"
@@ -66,34 +66,14 @@ def literal(lex, datatype=None, lang=None):
 
 def escape_literal_lex(s: str) -> str:
     """Raw text -> the canonical NT-escaped lexical form the grammar
-    evaluators produce (grammar/turtle.py evaluate_string, E10 —
-    turtle/evaluate.go:256-340): `\\`, `\"`, `\\n`, `\\r`, `\\t` as
-    two-char escapes, other control chars and all non-ASCII up to
-    U+FFFF as ``\\uXXXX``, above as ``\\UXXXXXXXX``. Extraction
-    sources (HTML RDFa/Microdata, JSON-LD) apply this so their
-    literals compare/dedupe/serialize identically to the same value
-    parsed from Turtle/N-Triples."""
-    out = []
-    for ch in s:
-        if ch == "\\":
-            out.append("\\\\")
-        elif ch == '"':
-            out.append('\\"')
-        elif ch == "\n":
-            out.append("\\n")
-        elif ch == "\r":
-            out.append("\\r")
-        elif ch == "\t":
-            out.append("\\t")
-        else:
-            cp = ord(ch)
-            if cp <= 0x1F or 0x7F <= cp <= 0xFFFF:
-                out.append(f"\\u{cp:04X}")
-            elif cp > 0xFFFF:
-                out.append(f"\\U{cp:08X}")
-            else:
-                out.append(ch)
-    return "".join(out)
+    evaluators produce (E10 — turtle/evaluate.go:256-340), spelled by
+    the one escape table, ``grammar.chars.LEX_ESCAPES``: ``\\\\``, ``\\"``,
+    ``\\n``, ``\\r``, ``\\t`` as two-char escapes, other control chars and
+    all non-ASCII up to U+FFFF as ``\\uXXXX``, above as
+    ``\\UXXXXXXXX``. Extraction sources (HTML RDFa/Microdata, JSON-LD,
+    RDF/XML) apply this so their literals compare/dedupe/serialize
+    identically to the same value parsed from Turtle/N-Triples."""
+    return s.translate(LEX_ESCAPES)
 
 
 def term_str(t) -> str:

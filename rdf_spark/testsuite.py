@@ -104,7 +104,7 @@ def load_manifest(suite: str) -> list[SuiteTest]:
     d = SUITE_DIRS[suite]
     with open(os.path.join(d, "manifest.ttl"), encoding="utf-8") as f:
         text = f.read()
-    triples = ttl.evaluate_document(ttl.parse_document(text), base="", validate=False)
+    triples = ttl.evaluate_document(ttl.parse_document(text), base="")
 
     MF = "http://www.w3.org/2001/sw/DataAccess/tests/test-manifest#"
     RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"

@@ -6,7 +6,9 @@ triple-quoted Turtle or TriG string about 230, and an 8 MB prefixed
 name's local part about 130 (``PN_LOCAL``). The evaluator's escape
 canonicalization once built one list entry per character: an 8 MB long
 string dense with quotes, tabs and newlines cost about 44 bytes per
-input byte. Each case runs
+input byte, one dense with non-ASCII characters about 55 and one dense
+with escaped backslashes and UCHARs about 17; an 8 MB JSON-LD string
+value cost the sources' escaping about 29. Each case runs
 in a fresh interpreter because ``ru_maxrss`` is a high-water mark: the
 growth it shows must come from parsing this one document.
 """
@@ -34,6 +36,15 @@ if kind == "iri":
 elif kind == "pname":  # PN_LOCAL with PLX escapes and inner dots
     big = "a%41b.c" * (size // 7)
     doc = f"@prefix ex: <http://ex/> .\n<http://ex/s> <http://ex/p> ex:{big} .\n"
+elif kind == "long-dq-nonascii":  # non-ASCII chars and a tab in every 6
+    q, big = '"' * 3, "a\u00e9\tb\u20acc" * (size // 6)
+    doc = f"<http://ex/s> <http://ex/p> {q}{big}{q} .\n"
+elif kind == "long-dq-escaped":  # an escaped backslash and a UCHAR in every 9
+    q, big = '"' * 3, "\\\\a\\u00e9" * (size // 9)
+    doc = f"<http://ex/s> <http://ex/p> {q}{big}{q} .\n"
+elif kind == "string":  # a JSON-LD string value: non-ASCII, tabs and quotes
+    big = "a\u00e9\tb\"\u20acc" * (size // 7)
+    doc = json.dumps({"@id": "http://ex/s", "http://ex/p": big})
 elif kind.endswith("-dense"):  # quotes, an ECHAR and a newline every 10 chars
     q = {"long-dq-dense": '"' * 3, "long-sq-dense": "'" * 3}[kind]
     big = 'a"b\\tc""d\n' * (size // 10)
@@ -53,7 +64,8 @@ print(json.dumps({"rows": len(rows), "error": rows[0][-1], "lex_len": len(rows[0
 @pytest.mark.parametrize("fmt,kind", [
     (fmt, kind) for fmt in ("ntriples", "nquads", "nquads-star") for kind in ("literal", "iri")
 ] + [(fmt, kind) for fmt in ("turtle", "trig")
-     for kind in ("long-dq", "long-sq", "long-dq-dense", "long-sq-dense", "pname")])
+     for kind in ("long-dq", "long-sq", "long-dq-dense", "long-sq-dense", "long-dq-nonascii",
+                  "long-dq-escaped", "pname")] + [("jsonld", "string")])
 def test_huge_term_parses_in_bounded_memory(fmt, kind):
     env = dict(os.environ, PYTHONPATH=ROOT + os.pathsep + os.environ.get("PYTHONPATH", ""))
     out = subprocess.run(

@@ -12,8 +12,9 @@ document with its expected outcome under one or both grammars:
 The rows cover every TriG block form, the Turtle statements shared by
 both grammars, nested-structure emission order, blank-node counters
 shared across graphs, TriG's verbatim ``@base``/``@prefix``, TriG's
-document order vs Turtle's sorted output, undeclared-prefix validation
-and the exact syntax error messages.
+document order vs Turtle's sorted output, undeclared-prefix validation,
+the exact syntax error messages and the canonical lexical form of
+string escapes (read with backslash parity).
 """
 
 import pytest
@@ -272,6 +273,22 @@ CASES = [
         "turtle": ("RDFSyntaxError",
             "turtle: expected directive, triples, or end of line at offset 25: ':g { :s :p :o }\\n'"),
     }),
+    # string escapes read with backslash parity (turtle.py deviation #4)
+    *[(rid, EX + ":s :p " + lit + " .", {
+        g: (True, [f'<http://ex/s> <http://ex/p> "{lex}" .' for lex in lexes])
+        for g in ("turtle", "trig")
+    }) for rid, lit, lexes in [
+        ("echar-quote-single", r'''"a\"b", 'c\"d' ''', [r'a\"b', r'c\"d']),
+        ("escaped-backslash-b", r'"a\\b"', [r"a\\b"]),
+        ("escaped-backslash-f", r'"a\\f"', [r"a\\f"]),
+        ("escaped-backslash-quote-long", r'"""a\\"b"""', [r'a\\\"b']),
+        ("uchar-quote", r'"a\u0022b"', [r'a\"b']),
+        ("uchar-backslash", r'"a\u005Cb"', [r"a\\b"]),
+        # spellings kept as the reference writes them
+        ("echar-apostrophe-kept", r"'a\'b'", [r"a\'b"]),
+        ("uchar-control-kept", r'"a\u0009b"', [r"a\u0009b"]),
+        ("uchar-ffff-kept", r'"a\uFFFFb"', [r"a\U0000FFFFb"]),
+    ]],
 ]
 
 
