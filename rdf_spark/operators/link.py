@@ -31,9 +31,15 @@ def link_entities(
     canonical_col: str = "canonical_iri",
 ) -> DataFrame:
     """Rewrite IRI subjects/objects that match dictionary surfaces to
-    their canonical IRIs. Broadcast-hash join; big side not shuffled."""
+    their canonical IRIs. Broadcast-hash join; big side not shuffled.
+
+    The dictionary is deduplicated in one partition: the broadcast
+    collects it whole to the driver anyway, and a single-partition
+    child already satisfies the aggregate's distribution, so the plan
+    needs no ``Exchange hashpartitioning(__surface, ...)`` (and no
+    shuffle-map job) under either broadcast."""
     d = F.broadcast(
-        dictionary.select(
+        dictionary.coalesce(1).select(
             F.col(surface_col).alias("__surface"),
             F.col(canonical_col).alias("__canonical"),
         ).dropDuplicates(["__surface"])
@@ -66,8 +72,9 @@ def link_entities(
 def salted_count(df: DataFrame, key_cols: list[str], salts: int = 16) -> DataFrame:
     """Two-phase skew-safe count: groupBy(key, salt).count ->
     groupBy(key).sum. Result identical to a plain groupBy().count()
-    (verified by tests/pipeline/test_skew.py); the salt spreads hot
-    keys over `salts` reducers in phase 1."""
+    (verified by
+    tests/pipeline/test_spark_parse.py::test_salted_count_equals_plain);
+    the salt spreads hot keys over `salts` reducers in phase 1."""
     salt = (F.rand(seed=7) * salts).cast("int")
     partial = df.withColumn("__salt", salt).groupBy(*key_cols, "__salt").agg(
         F.count(F.lit(1)).alias("__partial")

@@ -4,6 +4,7 @@ lineage (SURVEY.md §5.2)."""
 
 import datetime as dt
 import os
+import threading
 from collections import Counter
 
 import pytest
@@ -265,3 +266,87 @@ def test_bucket_is_one_action_with_observed_lineage(spark, mixed_pages, tmp_path
     assert sum(x["docs_in"] for x in lineage) == 40 + len(_MIXED_HTML)
     assert sum(x["docs_failed"] for x in lineage) == 3
     assert stats["triples_out"] == sum(x["triples_out"] for x in lineage)
+
+
+def test_buckets_are_planned_concurrently(spark, pages, tmp_path, monkeypatch):
+    """Two buckets are in flight at once: each bucket's plan build waits
+    on a two-party barrier, which only a concurrent second bucket can
+    release (a serial bucket loop breaks it on the timeout)."""
+    import rdf_spark.plans.pipeline as pl
+
+    barrier = threading.Barrier(2, timeout=60)
+    real = pl.bucket_write_plan
+
+    def meet(*a, **k):
+        barrier.wait()
+        return real(*a, **k)
+
+    monkeypatch.setattr(pl, "bucket_write_plan", meet)
+    p = PipelineRun(spark, str(tmp_path / "overlap"), n_buckets=2, run_id="a")
+    assert p.run(pages)["processed"] == [0, 1]
+    assert p.completed_buckets() == {0, 1}
+
+
+def test_failed_bucket_commits_prefix_and_resumes(spark, pages, tmp_path,
+                                                  monkeypatch):
+    """A write that raises in bucket 1 of 4 propagates, leaves only
+    bucket 0 committed (no lineage after the failure, although later
+    buckets may have run), and a resumed run finishes the rest with
+    the output of an uninterrupted run."""
+    from pyspark.sql import DataFrameWriter
+
+    full = PipelineRun(spark, str(tmp_path / "full"), n_buckets=4, run_id="full")
+    full.run(pages)
+
+    real = DataFrameWriter.parquet
+
+    def fail_bucket_1(self, path, *a, **k):
+        if path.endswith("part=1"):
+            raise RuntimeError("injected write failure in bucket 1")
+        return real(self, path, *a, **k)
+
+    crash = PipelineRun(spark, str(tmp_path / "crash"), n_buckets=4, run_id="r1")
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", fail_bucket_1)
+        with pytest.raises(RuntimeError, match="injected write failure"):
+            crash.run(pages)
+    assert crash.completed_buckets() == {0}
+    assert [x["input_partition"] for x in crash.lineage()] == [0]
+
+    resumed = PipelineRun(spark, str(tmp_path / "crash"), n_buckets=4, run_id="r2")
+    stats = resumed.run(pages)
+    assert stats["skipped"] == [0]
+    assert stats["processed"] == [1, 2, 3]
+    assert _normalized(resumed.read_output()) == _normalized(full.read_output())
+
+
+def test_bucket_jobs_run_under_callers_job_group(spark, pages, tmp_path):
+    """The pool threads inherit the caller's local properties: every
+    job the run starts is counted under the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def probe(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return max(tracker.getJobIdsForGroup(group))
+
+    try:
+        first = probe("before")
+        sc.setJobGroup("g", "pipeline run under a job group")
+        PipelineRun(spark, str(tmp_path / "g"), n_buckets=2, run_id="g").run(pages)
+        last = probe("after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    started = set(range(first + 1, last))
+    in_group = set(tracker.getJobIdsForGroup("g"))
+    assert started and in_group == started
+
+
+def test_run_leaves_no_threads_behind(spark, pages, tmp_path):
+    """The bucket pool lives for one run() call: three runs leave the
+    interpreter with the threads it started with."""
+    start = threading.active_count()
+    for i in range(3):
+        PipelineRun(spark, str(tmp_path / f"t{i}"), n_buckets=2, run_id="t").run(pages)
+    assert threading.active_count() == start

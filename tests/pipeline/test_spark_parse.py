@@ -3,6 +3,7 @@ pipeline-vs-pure-Python oracle (P/R = 1.0 on the same documents)."""
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from rdf_spark import terms as T
 from rdf_spark.grammar.turtle import parse_and_evaluate
@@ -139,12 +140,27 @@ def test_entity_linking_broadcast(spark):
         "obj_lex string, obj_datatype string, obj_lang string, graph_kind tinyint, graph string",
     )
     d = entity_dictionary(spark, 10)
-    linked = link_entities(triples, d).collect()[0]
+    linked_df = link_entities(triples, d)
+    linked = linked_df.collect()[0]
     assert linked.subj.startswith("http://kg.example/canonical/")
     assert linked.obj_lex.startswith("http://kg.example/canonical/")
-    # plan check: broadcast join, no shuffle of the big side
-    plan = link_entities(triples, d)._jdf.queryExecution().executedPlan().toString()
+    # plan check, on the final adaptive plan of the executed join: a
+    # broadcast join, and the dictionary deduplicated in one partition
+    # (no hash exchange on the surface under either broadcast)
+    plan = linked_df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
     assert "BroadcastHashJoin" in plan
+    assert "Exchange hashpartitioning(__surface" not in plan, plan
+
+    # a duplicated surface still links each IRI to exactly one canonical
+    e1 = "http://example.org/entity/e1"
+    dup = d.unionByName(spark.createDataFrame(
+        [(e1, "http://kg.example/canonical/other", 1.0)], d.schema))
+    assert dup.where(F.col("surface") == e1).count() == 2
+    rows = link_entities(triples, dup).collect()
+    assert len(rows) == triples.count()
+    canon = {r.canonical_iri for r in dup.where(F.col("surface") == e1).collect()}
+    assert rows[0].subj in canon
 
 
 def test_salted_count_equals_plain(spark):
