@@ -6,9 +6,12 @@ import pytest
 
 from rdf_spark.grammar import ntriples
 from rdf_spark.grammar.ntriples import RDFSyntaxError
-from rdf_spark.testsuite import load_manifest_regex
+from rdf_spark.testsuite import load_manifest_regex, manifest_path, suite_available
 
 parse_document = partial(ntriples.parse_document, quads=True)
+if not suite_available("nquads"):
+    pytest.skip(f"W3C suite file absent: {manifest_path('nquads')}",
+                allow_module_level=True)
 TESTS = load_manifest_regex("nquads")
 
 

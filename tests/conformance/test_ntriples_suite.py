@@ -7,8 +7,11 @@ PositiveSyntax -> parse must succeed; NegativeSyntax -> parse must fail
 import pytest
 
 from rdf_spark.grammar.ntriples import RDFSyntaxError, parse_document
-from rdf_spark.testsuite import load_manifest_regex
+from rdf_spark.testsuite import load_manifest_regex, manifest_path, suite_available
 
+if not suite_available("ntriples"):
+    pytest.skip(f"W3C suite file absent: {manifest_path('ntriples')}",
+                allow_module_level=True)
 TESTS = load_manifest_regex("ntriples")
 
 

@@ -12,9 +12,12 @@ import pytest
 from rdf_spark import terms as T
 from rdf_spark.grammar import trig
 from rdf_spark.grammar.ntriples import RDFSyntaxError, parse_document
-from rdf_spark.testsuite import load_manifest_regex
+from rdf_spark.testsuite import load_manifest_regex, manifest_path, suite_available
 
 parse_nq = partial(parse_document, quads=True)
+if not suite_available("trig"):
+    pytest.skip(f"W3C suite file absent: {manifest_path('trig')}",
+                allow_module_level=True)
 TESTS = load_manifest_regex("trig")
 
 

@@ -15,8 +15,11 @@ import pytest
 from rdf_spark import terms as T
 from rdf_spark.grammar import turtle as ttl
 from rdf_spark.grammar.ntriples import RDFSyntaxError, parse_document as parse_nt
-from rdf_spark.testsuite import load_manifest_regex
+from rdf_spark.testsuite import load_manifest_regex, manifest_path, suite_available
 
+if not suite_available("turtle"):
+    pytest.skip(f"W3C suite file absent: {manifest_path('turtle')}",
+                allow_module_level=True)
 TESTS = load_manifest_regex("turtle")
 
 
