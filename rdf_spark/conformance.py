@@ -18,10 +18,12 @@ Corpus construction (each suite doc becomes one row of a synthetic
   library-parity is the strongest comparable check here; the reference
   quirks are replicated, documented in grammar/trig.py.
 
-Matching is blank-node-isomorphism-aware per document: normalize both
-sides (first-occurrence relabeling, the reference's own procedure),
-sort, then count matched triples via Document.Equal when the docs match
-wholesale, else via normalized serialized multiset intersection.
+Matching is blank-node-isomorphism-aware per document: the docs match
+wholesale when ``terms.documents_equal`` / ``quad_documents_equal``
+(the reference's Document.Equal, which sorts its inputs itself) holds;
+else matched triples are counted by multiset intersection of the
+serialized triples, each side sorted into the reference's order and
+then normalized (first-occurrence relabeling depends on that order).
 """
 
 from __future__ import annotations
@@ -45,11 +47,11 @@ def _norm_quad_keys(quads) -> Counter:
 def _matched(golden, mine, quads: bool) -> int:
     """Matched-triple count, bnode-isomorphism-aware."""
     if quads:
-        if T.quad_documents_equal(T.sort_quads(golden), T.sort_quads(mine)):
+        if T.quad_documents_equal(golden, mine):
             return len(golden)
         a, b = _norm_quad_keys(golden), _norm_quad_keys(mine)
     else:
-        if T.documents_equal(T.sort_document(golden), T.sort_document(mine)):
+        if T.documents_equal(golden, mine):
             return len(golden)
         a, b = _norm_triple_keys(golden), _norm_triple_keys(mine)
     return sum(min(n, b[k]) for k, n in a.items())

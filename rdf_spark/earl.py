@@ -82,9 +82,7 @@ def _passes(t) -> bool:
                 mine = ttl.evaluate_document(ttl.parse_document(text),
                                              base=t.base_iri)
                 golden = parse_nt(t.result_text(), validate=False)
-                a = T.sort_document(T.normalize_blank_nodes(golden))
-                b = T.sort_document(T.normalize_blank_nodes(mine))
-                return T.documents_equal(a, b)
+                return T.eval_documents_equal(golden, mine)
             if t.test_type == "rdft:TestTurtleNegativeEval":
                 try:
                     ast = ttl.parse_document(text)

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..terms import KIND_BNODE, KIND_IRI, KIND_LITERAL, KIND_QUOTED
+from ..terms import KIND_BNODE, KIND_IRI, KIND_LITERAL, KIND_QUOTED, RDF_TYPE
 
 
 def term_expr(kind: Column, lex: Column, datatype: Column = None, lang: Column = None) -> Column:
@@ -86,6 +86,41 @@ def _compact(iri_col: Column, prefixes: dict[str, str]) -> Column:
     return expr
 
 
+def _compact_term(kind: str, lex: str, other: Column, prefixes: dict[str, str]) -> Column:
+    return F.when(F.col(kind) == KIND_IRI, _compact(F.col(lex), prefixes)).otherwise(other)
+
+
+def _pred_obj_str(prefixes: dict[str, str]) -> tuple[Column, Column]:
+    """Turtle spellings of a row's predicate and object: ``a`` for
+    rdf:type, IRIs prefix-compacted."""
+    pred = F.when(F.col("pred") == RDF_TYPE, F.lit("a")).otherwise(
+        _compact(F.col("pred"), prefixes)
+    )
+    return pred, _compact_term("obj_kind", "obj_lex", obj_expr(), prefixes)
+
+
+def _subject_blocks(rows: DataFrame, prefixes: dict[str, str], pred: Column,
+                    obj: Column, graph: Column | None = None) -> DataFrame:
+    """One Turtle block ``subj p o ;\\n  p o .`` per subject, or per
+    (graph, subject) when ``graph`` is given, with the predicate-object
+    pairs sorted. Returns (subj, value), or (graph, subj, value)."""
+    subj = _compact_term("subj_kind", "subj", subj_expr(), prefixes)
+    keys = [] if graph is None else [graph.alias("graph")]
+    pairs = F.sort_array(F.collect_list(F.concat(pred, F.lit(" "), obj)))
+    return (
+        rows.groupBy(*keys, subj.alias("subj"))
+        .agg(pairs.alias("pairs"))
+        .select(
+            *(["graph"] if keys else []), "subj",
+            F.concat(
+                F.col("subj"), F.lit(" "),
+                F.array_join(F.col("pairs"), " ;\n  "),
+                F.lit(" ."),
+            ).alias("value"),
+        )
+    )
+
+
 def serialize_turtle(triples: DataFrame,
                      prefixes: dict[str, str] | None = None) -> DataFrame:
     """Pretty-printed Turtle sink (SURVEY.md S9, reference
@@ -96,33 +131,8 @@ def serialize_turtle(triples: DataFrame,
 
     Returns (subj, value); prepend prefix_header() lines when writing a
     whole document."""
-    from ..terms import RDF_TYPE
-
     prefixes = prefixes or {}
-    pred_str = F.when(F.col("pred") == RDF_TYPE, F.lit("a")).otherwise(
-        _compact(F.col("pred"), prefixes)
-    )
-    obj_str = F.when(
-        F.col("obj_kind") == KIND_IRI, _compact(F.col("obj_lex"), prefixes)
-    ).otherwise(obj_expr())
-    subj_str = F.when(
-        F.col("subj_kind") == KIND_IRI, _compact(F.col("subj"), prefixes)
-    ).otherwise(subj_expr())
-    pairs = F.sort_array(
-        F.collect_list(F.concat(pred_str, F.lit(" "), obj_str))
-    )
-    return (
-        triples.groupBy(subj_str.alias("subj"))
-        .agg(pairs.alias("pairs"))
-        .select(
-            "subj",
-            F.concat(
-                F.col("subj"), F.lit(" "),
-                F.array_join(F.col("pairs"), " ;\n  "),
-                F.lit(" ."),
-            ).alias("value"),
-        )
-    )
+    return _subject_blocks(triples, prefixes, *_pred_obj_str(prefixes))
 
 
 def scope_bnodes(triples: DataFrame, scope_col: str = "url") -> DataFrame:
@@ -186,15 +196,10 @@ def serialize_turtle_nested(triples: DataFrame,
     An export/debug sink: the leaf-at-a-time loop runs one small join
     round per nesting level on the driver; route bulk exports through
     serialize_ntriples."""
-    from ..terms import RDF_FIRST, RDF_NIL, RDF_REST, RDF_TYPE
+    from ..terms import RDF_FIRST, RDF_NIL, RDF_REST
 
     prefixes = prefixes or {}
-    pred_str = F.when(F.col("pred") == RDF_TYPE, F.lit("a")).otherwise(
-        _compact(F.col("pred"), prefixes)
-    )
-    obj_str = F.when(
-        F.col("obj_kind") == KIND_IRI, _compact(F.col("obj_lex"), prefixes)
-    ).otherwise(obj_expr())
+    pred_str, obj_str = _pred_obj_str(prefixes)
     cur = triples.select(
         "subj_kind", "subj", F.col("pred"), pred_str.alias("p_str"),
         "obj_kind", "obj_lex", obj_str.alias("o_str"),
@@ -298,24 +303,7 @@ def serialize_turtle_nested(triples: DataFrame,
         )
         pending = pending.join(leaves, "label", "left_anti").localCheckpoint()
 
-    subj_str = F.when(
-        F.col("subj_kind") == KIND_IRI, _compact(F.col("subj"), prefixes)
-    ).otherwise(term_expr(F.col("subj_kind"), F.col("subj")))
-    pairs = F.sort_array(
-        F.collect_list(F.concat(F.col("p_str"), F.lit(" "), F.col("o_str")))
-    )
-    return (
-        cur.groupBy(subj_str.alias("subj"))
-        .agg(pairs.alias("pairs"))
-        .select(
-            "subj",
-            F.concat(
-                F.col("subj"), F.lit(" "),
-                F.array_join(F.col("pairs"), " ;\n  "),
-                F.lit(" ."),
-            ).alias("value"),
-        )
-    )
+    return _subject_blocks(cur, prefixes, F.col("p_str"), F.col("o_str"))
 
 
 def serialize_trig(quads: DataFrame,
@@ -328,35 +316,12 @@ def serialize_trig(quads: DataFrame,
     a whole graph section materializes in one row, so route truly
     massive default graphs through serialize_turtle/serialize_ntriples
     instead."""
-    from ..terms import RDF_TYPE
-
     prefixes = prefixes or {}
-    pred_str = F.when(F.col("pred") == RDF_TYPE, F.lit("a")).otherwise(
-        _compact(F.col("pred"), prefixes)
-    )
-    obj_str = F.when(
-        F.col("obj_kind") == KIND_IRI, _compact(F.col("obj_lex"), prefixes)
-    ).otherwise(obj_expr())
-    subj_str = F.when(
-        F.col("subj_kind") == KIND_IRI, _compact(F.col("subj"), prefixes)
-    ).otherwise(subj_expr())
     graph_str = F.when(
         F.col("graph_kind").isNull(), F.lit(None).cast("string")
     ).otherwise(term_expr(F.col("graph_kind"), F.col("graph")))
-
-    blocks = (
-        quads.groupBy(graph_str.alias("graph"), subj_str.alias("subj"))
-        .agg(F.sort_array(
-            F.collect_list(F.concat(pred_str, F.lit(" "), obj_str))
-        ).alias("pairs"))
-        .select(
-            "graph",
-            F.concat(F.col("subj"), F.lit(" "),
-                     F.array_join(F.col("pairs"), " ;\n  "),
-                     F.lit(" .")).alias("block"),
-        )
-    )
-    body = F.array_join(F.sort_array(F.collect_list(F.col("block"))), "\n")
+    blocks = _subject_blocks(quads, prefixes, *_pred_obj_str(prefixes), graph=graph_str)
+    body = F.array_join(F.sort_array(F.collect_list(F.col("value"))), "\n")
     return blocks.groupBy("graph").agg(body.alias("body")).select(
         "graph",
         F.when(

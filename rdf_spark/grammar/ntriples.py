@@ -16,10 +16,11 @@ Behavioral parity targets in the reference (0x51-dev/rdf):
   and ntriples/grammar/ntriples.ebnf
 - N-Quads statement: nquads/grammar/grammar.go:9-33 (the N-Triples
   triple plus an optional graph label, IRI or blank node)
-- ParseDocument: trailing-newline append, empty input -> empty doc,
-  canonical sort on parse (ntriples/doc.go:56-88); for quads the
-  default graph first, then serialized-string order
-  (nquads/doc.go:30-62, 97-104)
+- ParseDocument: trailing-newline append, empty input -> empty doc
+  (ntriples/doc.go:56-88, nquads/doc.go:30-62). Statements come out in
+  document order; the reference's canonical sort on parse
+  (ntriples/doc.go:86, nquads/doc.go:97-104) only feeds its equality
+  check, so it lives in that check here (``terms.documents_equal``)
 - RDF-star: star/ntriples/doc.go:28-59, star/nquads/doc.go:16-47;
   grammars star/*/grammar/grammar.go
 - IRI validation (RFC 3987 absolute + fragment) toggleable; ON by
@@ -31,7 +32,6 @@ from __future__ import annotations
 import re
 
 from .chars import BNODE_LABEL, IRIREF_BODY, LANGTAG, STRING_BODY_DQ, is_valid_iri
-from ..terms import sort_document, sort_quads
 
 __all__ = ["RDFSyntaxError", "parse_document"]
 
@@ -187,8 +187,7 @@ def parse_document(doc: str, validate: bool = True, quads: bool = False,
     Returns triples, or quads with graph ``None`` for the default graph.
     Mirrors reference ParseDocument (ntriples/doc.go:56-88): empty input
     is an empty document and a missing trailing newline is tolerated.
-    Triples come out in canonical (serialized-string) order, quads
-    default graph first (nquads/doc.go:97-104).
+    Statements come out in document order.
     """
     if not doc:
         return []
@@ -200,4 +199,4 @@ def parse_document(doc: str, validate: bool = True, quads: bool = False,
             out.append(_StarLine(line, validate).statement(quads))
         else:
             out.append(_flat_statement(line, validate, i, quads))
-    return sort_quads(out) if quads else sort_document(out)
+    return out

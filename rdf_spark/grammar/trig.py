@@ -18,8 +18,8 @@ Turtle's `Context`, so blank-node counters are shared across graphs
 
 - @base/@prefix are set verbatim, NOT base-resolved as in Turtle
   (trig/evaluate.go:14-17)
-- output is UNSORTED, in document order (trig/evaluate.go:250), unlike
-  Turtle
+- output is unsorted, in document order (trig/evaluate.go:250); here
+  every grammar returns document order
 
 Deviations (same rationale as turtle.py, invisible to the count-based
 TriG eval golden check): correct rdf:first/rest chains; an empty
@@ -135,8 +135,8 @@ def parse_document(doc: str):
 
 
 def evaluate_document(stmts):
-    """Statement AST -> list of quads, document order (unsorted,
-    trig/evaluate.go:250). Nested-structure triples stay in the graph
+    """Statement AST -> list of quads in document order
+    (trig/evaluate.go:250). Nested-structure triples stay in the graph
     of the statement that holds them."""
     ctx = Context("")
     out = []

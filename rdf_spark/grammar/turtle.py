@@ -82,7 +82,6 @@ from ..terms import (
     XSD_DECIMAL,
     XSD_DOUBLE,
     XSD_INTEGER,
-    sort_document,
 )
 
 __all__ = [
@@ -682,7 +681,7 @@ class Context:
 
 
 def evaluate_document(stmts, base: str = ""):
-    """Statement AST -> sorted flat triples (reference
+    """Statement AST -> flat triples in document order (reference
     turtle/evaluate.go:454-482; `base` = the reference's `cwd`)."""
     ctx = Context(base)
     out = []
@@ -703,7 +702,7 @@ def evaluate_document(stmts, base: str = ""):
             ctx.evaluate_triples(stmt, out)
         else:
             raise RDFEvalError(f"unknown statement {k!r}")
-    return sort_document(out)
+    return out
 
 
 def _walk_iris(node, hit):
@@ -755,5 +754,5 @@ def validate_document(stmts) -> bool:
 
 
 def parse_and_evaluate(doc: str, base: str = ""):
-    """Convenience: text -> sorted triples (the UDF entry point)."""
+    """Convenience: text -> triples (the UDF entry point)."""
     return evaluate_document(parse_document(doc), base)

@@ -1,5 +1,6 @@
-"""RDF term model, serialization, canonical ordering and the
-blank-node-normalized equality oracle.
+"""RDF term model, serialization, and the blank-node-normalized
+equality oracle, the one place that knows the reference's canonical
+order.
 
 Terms are plain tuples (no classes) so they are cheap to build inside
 Arrow-batched UDFs and trivially picklable:
@@ -17,13 +18,16 @@ Semantics replicated from the reference (0x51-dev/rdf):
   star/ntriples/doc.go:211-213
 - canonical sort: lexicographic on the serialized triple string
   (ntriples/doc.go:106-112); quads: default-graph-first then string
-  (nquads/doc.go:97-104)
+  (nquads/doc.go:97-104). The reference sorts on every parse, but only
+  its equality checks read the order, so here the grammars return
+  document order and only the oracle below sorts
 - blank-node normalization: first-occurrence relabeling to b0,b1,...
   in document order, subjects before objects (ntriples/doc.go:114-145);
   per-graph with first-seen graph order for quads (nquads/doc.go:106-130)
-- document equality: length check, normalize both, pairwise compare
-  with lexical literal equality and IRI unicode-unescape equality
-  (ntriples/doc.go:92-104, 214-224, 281-289)
+- document equality: sort, length check, normalize both, pairwise
+  compare with lexical literal equality and IRI unicode-unescape
+  equality (ntriples/doc.go:92-104, 214-224, 281-289); the Turtle eval
+  tests' normalize -> sort -> Equal wrapper (turtle/doc_test.go:196-215)
 """
 
 from __future__ import annotations
@@ -192,13 +196,14 @@ def term_equal(a, b, check_blank_node=True) -> bool:
 
 
 def documents_equal(a, b) -> bool:
-    """Reference ``Document.Equal``: length check on the *sorted*
-    documents, then normalize both in sorted order, then pairwise
-    compare (ntriples/doc.go:92-104). Inputs must already be sorted
-    (parse/eval return sorted docs)."""
+    """Reference ``Document.Equal`` on the documents as its
+    ParseDocument returns them: sort both (ntriples/doc.go:86), length
+    check, normalize both in sorted order, then pairwise compare
+    (ntriples/doc.go:92-104). Inputs may come in any order."""
     if len(a) != len(b):
         return False
-    na, nb = normalize_blank_nodes(a), normalize_blank_nodes(b)
+    na = normalize_blank_nodes(sort_document(a))
+    nb = normalize_blank_nodes(sort_document(b))
     return all(
         term_equal(x[0], y[0]) and term_equal(x[1], y[1]) and term_equal(x[2], y[2])
         for x, y in zip(na, nb)
@@ -208,7 +213,8 @@ def documents_equal(a, b) -> bool:
 def quad_documents_equal(a, b) -> bool:
     """Reference nquads ``Document.Equal``: group by graph-label string,
     graphs must match exactly, per-graph triple docs compared with
-    bnode normalization (nquads/doc.go:64-79)."""
+    bnode normalization (nquads/doc.go:64-79). Inputs may come in any
+    order: each graph is sorted by :func:`documents_equal`."""
     if len(a) != len(b):
         return False
 
@@ -223,6 +229,14 @@ def quad_documents_equal(a, b) -> bool:
     if set(ga) != set(gb):
         return False
     return all(documents_equal(ga[k], gb[k]) for k in ga)
+
+
+def eval_documents_equal(golden, mine) -> bool:
+    """The Turtle eval tests' comparison (turtle/doc_test.go:196-215):
+    each side sorted as parsed and normalized, then ``Document.Equal``
+    (which re-sorts on the normalized labels)."""
+    return documents_equal(normalize_blank_nodes(sort_document(golden)),
+                           normalize_blank_nodes(sort_document(mine)))
 
 
 # --- Spark-boundary flattening ---------------------------------------------

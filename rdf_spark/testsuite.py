@@ -1,10 +1,11 @@
 """W3C conformance-suite manifest loading.
 
 The reference dogfoods its own Turtle parser to read each suite's
-``manifest.ttl`` (internal/testsuite/manifest.go:21-113). We do the
-same once the Turtle parser is available (:func:`load_manifest`);
-until then :func:`load_manifest_regex` extracts the same fields with
-a regex fallback so the NT/NQ suites can gate early.
+``manifest.ttl`` (internal/testsuite/manifest.go:21-113).
+:func:`load_manifest_regex` extracts the same fields (entry type,
+``mf:name``, ``mf:action``, ``mf:result``) with one regex over the
+manifest text instead, so reading a suite does not depend on the
+grammar that suite tests.
 
 Suites are read in place from the read-only reference checkout
 (``/root/reference/<suite>/testdata/suite``) — they are the vendored
@@ -105,60 +106,3 @@ def load_manifest_regex(suite: str) -> list[SuiteTest]:
         )
     return tests
 
-
-def load_manifest(suite: str) -> list[SuiteTest]:
-    """Dogfooded manifest load via our own Turtle parser (mirrors
-    reference internal/testsuite/manifest.go): parse manifest.ttl,
-    follow the mf:entries rdf:first/rest collection, read per-entry
-    rdf:type / mf:name / mf:action / mf:result."""
-    from .grammar import turtle as ttl
-
-    d = SUITE_DIRS[suite]
-    with open(manifest_path(suite), encoding="utf-8") as f:
-        text = f.read()
-    triples = ttl.evaluate_document(ttl.parse_document(text), base="")
-
-    MF = "http://www.w3.org/2001/sw/DataAccess/tests/test-manifest#"
-    RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-    RDFT = "http://www.w3.org/ns/rdftest#"
-
-    spo: dict = {}
-    for s, p, o in triples:
-        spo.setdefault(s, {}).setdefault(p[1], []).append(o)
-
-    # find manifest root: subject with mf:entries
-    head = None
-    for s, props in spo.items():
-        if MF + "entries" in props:
-            head = props[MF + "entries"][0]
-            break
-    entries = []
-    while head is not None and head != ("i", RDF + "nil"):
-        props = spo.get(head, {})
-        first = props.get(RDF + "first")
-        if first:
-            entries.append(first[0])
-        rest = props.get(RDF + "rest")
-        head = rest[0] if rest else None
-
-    tests = []
-    for e in entries:
-        props = spo.get(e, {})
-        ttype = next(
-            (o[1] for o in props.get(RDF + "type", []) if o[1].startswith(RDFT)), None
-        )
-        name = next((o[1] for o in props.get(MF + "name", [])), None)
-        action = next((o[1] for o in props.get(MF + "action", [])), None)
-        result = next((o[1] for o in props.get(MF + "result", [])), None)
-        if action is None or ttype is None:
-            continue
-        tests.append(
-            SuiteTest(
-                suite=suite,
-                name=name or action,
-                test_type="rdft:" + ttype[len(RDFT):],
-                action_path=os.path.join(d, os.path.basename(action)),
-                result_path=os.path.join(d, os.path.basename(result)) if result else None,
-            )
-        )
-    return tests

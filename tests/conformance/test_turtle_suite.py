@@ -5,8 +5,8 @@ validation off; dispatch mirrors turtle/doc_test.go:118-246).
   reparse as N-Triples.
 - NegativeSyntax: parse must fail OR validation must return False.
 - Eval: evaluate with base http://www.w3.org/2013/TurtleTests/<name>.ttl,
-  compare against golden .nt via normalize -> sort -> normalized equality
-  (exact procedure of doc_test.go:196-215).
+  compare against golden .nt with ``terms.eval_documents_equal`` (the
+  procedure of doc_test.go:196-215).
 - NegativeEval: if parse succeeds, evaluation must error.
 """
 
@@ -21,14 +21,6 @@ if not suite_available("turtle"):
     pytest.skip(f"W3C suite file absent: {manifest_path('turtle')}",
                 allow_module_level=True)
 TESTS = load_manifest_regex("turtle")
-
-
-def eval_docs_equal(golden, mine) -> bool:
-    # normalize both, re-sort on normalized labels, compare with the
-    # (re-normalizing) Document.Equal — doc_test.go:196-215
-    a = T.sort_document(T.normalize_blank_nodes(golden))
-    b = T.sort_document(T.normalize_blank_nodes(mine))
-    return T.documents_equal(a, b)
 
 
 @pytest.mark.parametrize("t", TESTS, ids=[t.name for t in TESTS])
@@ -49,7 +41,7 @@ def test_turtle_suite(t):
         ast = ttl.parse_document(text)
         mine = ttl.evaluate_document(ast, base=t.base_iri)
         golden = parse_nt(t.result_text(), validate=False)
-        assert eval_docs_equal(golden, mine), (
+        assert T.eval_documents_equal(golden, mine), (
             "golden:\n"
             + "".join(T.triple_str(x) + "\n" for x in golden)
             + "mine:\n"

@@ -20,7 +20,7 @@ XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
 FLAGS = {"nt": (False, False), "nq": (True, False),
          "nt-star": (False, True), "nq-star": (True, True)}
 
-# N-Triples documents -> their triples, in canonical order
+# N-Triples documents -> their triples, in document order
 NT_DOCS = {
     "iri": ("<http://ex/s> <http://ex/p> <http://ex/o> .", [(S, P, O)]),
     "bnode-lang-comment": ('_:b1 <http://ex/p> "v"@en-GB . # c',
@@ -29,7 +29,7 @@ NT_DOCS = {
                                 [(S, P, ("l", "1", XSD_INT, None))]),
     "escapes-two-lines": ('<http://ex/s> <http://ex/p> _:o .\n'
                           '<http://ex/s> <http://ex/p> "a\\"b\\u00E9" .\n',
-                          [(S, P, ("l", 'a\\"b\\u00E9', None, None)), (S, P, ("b", "o"))]),
+                          [(S, P, ("b", "o")), (S, P, ("l", 'a\\"b\\u00E9', None, None))]),
 }
 
 LINE4 = ["<http://ex/s> <http://ex/p> <http://ex/o> .", "# c", "", "bad line"]

@@ -12,7 +12,7 @@ from hypothesis import given, settings, strategies as st
 
 from rdf_spark.grammar import turtle
 from rdf_spark.grammar.ntriples import parse_document
-from rdf_spark.terms import escape_literal_lex, quad_str, sort_document, triple_str
+from rdf_spark.terms import escape_literal_lex, quad_str, triple_str
 
 parse_nq = partial(parse_document, quads=True)
 
@@ -45,7 +45,7 @@ triple_st = st.tuples(subj_st, iri_st, obj_st)
 def test_ntriples_roundtrip(triples):
     doc = "".join(triple_str(t) + "\n" for t in triples)
     parsed = parse_document(doc, validate=False)
-    assert parsed == sort_document(triples)
+    assert parsed == triples
 
 
 @settings(max_examples=100, deadline=None)
@@ -55,10 +55,7 @@ def test_ntriples_roundtrip(triples):
 def test_nquads_roundtrip(quads):
     doc = "".join(quad_str(q) + "\n" for q in quads)
     parsed = parse_nq(doc, validate=False)
-    # nquads parse returns quads sorted default-graph-first then string
-    from rdf_spark.terms import sort_quads
-
-    assert parsed == sort_quads(quads)
+    assert parsed == quads
 
 
 @settings(max_examples=100, deadline=None)

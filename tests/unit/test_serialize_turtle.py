@@ -146,14 +146,14 @@ def test_nested_roundtrip_documents_equal(spark):
     Document.Equal semantics, terms.documents_equal)."""
     from rdf_spark.functions.serialize import prefix_header, serialize_turtle_nested
     from rdf_spark.grammar.turtle import parse_and_evaluate
-    from rdf_spark.terms import documents_equal, sort_document
+    from rdf_spark.terms import documents_equal
 
     t = _parse_pages_df(spark, TTL_NESTED)
     blocks = [r["value"] for r in
               serialize_turtle_nested(t, {"ex": "http://ex/"}).collect()]
     doc = "\n".join(prefix_header({"ex": "http://ex/"}) + sorted(blocks)) + "\n"
-    got = sort_document(parse_and_evaluate(doc, "http://u/1"))
-    want = sort_document(parse_and_evaluate(TTL_NESTED, "http://u/1"))
+    got = parse_and_evaluate(doc, "http://u/1")
+    want = parse_and_evaluate(TTL_NESTED, "http://u/1")
     assert documents_equal(want, got)
 
 
@@ -197,7 +197,7 @@ def test_collections_roundtrip_documents_equal(spark):
         serialize_turtle_nested,
     )
     from rdf_spark.grammar.turtle import parse_and_evaluate
-    from rdf_spark.terms import documents_equal, sort_document
+    from rdf_spark.terms import documents_equal
 
     prefixes = {"ex": "http://ex/",
                 "rdf": "http://www.w3.org/1999/02/22-rdf-syntax-ns#"}
@@ -205,8 +205,8 @@ def test_collections_roundtrip_documents_equal(spark):
     blocks = [r["value"] for r in
               serialize_turtle_nested(t, prefixes).collect()]
     doc = "\n".join(prefix_header(prefixes) + sorted(blocks)) + "\n"
-    got = sort_document(parse_and_evaluate(doc, "http://u/1"))
-    want = sort_document(parse_and_evaluate(TTL_COLLECTIONS, "http://u/1"))
+    got = parse_and_evaluate(doc, "http://u/1")
+    want = parse_and_evaluate(TTL_COLLECTIONS, "http://u/1")
     assert documents_equal(want, got)
 
 
@@ -221,7 +221,7 @@ def test_collections_randomized_roundtrip(spark):
         serialize_turtle_nested,
     )
     from rdf_spark.grammar.turtle import parse_and_evaluate
-    from rdf_spark.terms import documents_equal, sort_document
+    from rdf_spark.terms import documents_equal
 
     rng = random.Random(7)
     prefixes = {"ex": "http://ex/",
@@ -254,8 +254,8 @@ def test_collections_randomized_roundtrip(spark):
         blocks = [r["value"] for r in
                   serialize_turtle_nested(t, prefixes).collect()]
         out = "\n".join(prefix_header(prefixes) + sorted(blocks)) + "\n"
-        got = sort_document(parse_and_evaluate(out, "http://u/1"))
-        want = sort_document(parse_and_evaluate(doc, "http://u/1"))
+        got = parse_and_evaluate(out, "http://u/1")
+        want = parse_and_evaluate(doc, "http://u/1")
         assert documents_equal(want, got), doc
 
 

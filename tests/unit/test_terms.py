@@ -43,9 +43,20 @@ def test_iri_equality_unescapes_unicode():
 
 
 def test_quad_sort_default_graph_first():
-    doc = "<http://a/s> <http://a/p> <http://a/o> <http://a/g> .\n<http://z/s> <http://a/p> <http://a/o> .\n"
-    quads = parse_nq(doc)
-    assert quads[0][3] is None and quads[1][3] is not None
+    g = ("i", "http://a/g")
+    named = (("i", "http://a/s"), ("i", "http://a/p"), ("i", "http://a/o"), g)
+    default = (("i", "http://z/s"), ("i", "http://a/p"), ("i", "http://a/o"), None)
+    assert T.sort_quads([named, default]) == [default, named]
+
+
+def test_equality_ignores_input_order():
+    a = parse_document("_:x <http://a/p> _:y .\n<http://a/s> <http://a/p> _:x .\n"
+                       "_:y <http://a/q> \"v\" .\n")
+    assert T.documents_equal(a, a[::-1])
+    assert T.eval_documents_equal(a, a[::-1])
+    q = parse_nq("_:x <http://a/p> _:y <http://a/g> .\n<http://a/s> <http://a/p> _:x .\n"
+                 "_:y <http://a/q> \"v\" <http://a/g> .\n_:z <http://a/p> _:x .\n")
+    assert T.quad_documents_equal(q, q[::-1])
 
 
 def test_quad_documents_equal_per_graph_bnodes():
