@@ -203,7 +203,7 @@ def q_rdf_parse_star_nq(spark, sf_dir):
 def q_rdf_parse_rdfxml(spark, sf_dir):
     """RDF/XML-lite pages (sources/rdfxml.py: typed node elements,
     property elements, rdf:resource refs) -> triples through the same
-    mapInPandas parse kernel. Oracle replays the generation rules."""
+    mapInArrow parse kernel. Oracle replays the generation rules."""
     from rdf_spark.operators.parse import good_triples, parse_pages
 
     n = _read(spark, sf_dir, "nation")

@@ -45,7 +45,7 @@ def _norm_quad_keys(quads) -> Counter:
 
 
 def _matched(golden, mine, quads: bool) -> int:
-    """Matched-triple count, bnode-isomorphism-aware."""
+    """Matched-triple count, bnode-aware; labels as parsed, not skolemized."""
     if quads:
         if T.quad_documents_equal(golden, mine):
             return len(golden)

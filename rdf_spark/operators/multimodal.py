@@ -6,14 +6,12 @@ UDF signatures — are real and tested; the actual codec work is stubbed
 behind a deterministic fake (no image/audio libraries are assumed).
 Swap `_decode_stub` / `_decode_image_fake` for PIL/torchaudio/ffmpeg
 calls in production: each operator is a per-row function run through
-:func:`rdf_spark.submit.map_rows`, and that plumbing is unchanged.
+:func:`rdf_spark.submit.map_rows` (a null arrives as ``None``).
 """
 
 from __future__ import annotations
 
 import hashlib
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -61,11 +59,11 @@ def _decode_stub(media_type: str, content: bytes) -> str:
 
 def extract_features(media: DataFrame) -> DataFrame:
     """media -> typed per-item features through :func:`map_rows`.
-    Binary stays binary end-to-end (Arrow passes bytes zero-copy);
+    Binary stays binary end-to-end (it reaches the row as ``bytes``);
     partition-preserving, no shuffle."""
 
     def row(mid, mtype, content):
-        b = bytes(content) if content is not None else b""
+        b = content or b""
         return [(mid, mtype, len(b), hashlib.sha256(b).hexdigest(),
                  _decode_stub(mtype, b))]
 
@@ -86,11 +84,11 @@ DECODED_SCHEMA = StructType(
 
 def _decode_image_fake(content: bytes, meta_w, meta_h):
     """Deterministic fake: dimensions from metadata (fallback 8x8 where
-    it is null or NaN), pixel bytes derived from the content hash —
+    it is null), pixel bytes derived from the content hash —
     stable across runs and engines, so downstream ops (resize, feature
     hash) are testable."""
-    w = 8 if pd.isna(meta_w) else int(meta_w)
-    h = 8 if pd.isna(meta_h) else int(meta_h)
+    w = 8 if meta_w is None else meta_w
+    h = 8 if meta_h is None else meta_h
     seed = hashlib.sha256(content).digest()
     n = w * h * 3
     px = (seed * (n // len(seed) + 1))[:n]
@@ -99,12 +97,10 @@ def _decode_image_fake(content: bytes, meta_w, meta_h):
 
 def decode_images(media: DataFrame) -> DataFrame:
     """image rows -> decoded pixel buffers through :func:`map_rows`
-    (Arrow moves the binary columns without copies; partition-
-    preserving)."""
+    (binary columns as ``bytes``; partition-preserving)."""
 
     def row(mid, content, w, h):
-        b = bytes(content) if content is not None else b""
-        return [(mid, *_decode_image_fake(b, w, h))]
+        return [(mid, *_decode_image_fake(content or b"", w, h))]
 
     src = media.where(F.col("media_type") == "image").select(
         "media_id", "content", "width", "height"
@@ -120,8 +116,7 @@ def resize_images(decoded: DataFrame, out_w: int, out_h: int) -> DataFrame:
     import numpy as np
 
     def row(mid, w, h, c, px):
-        w, h, c = int(w), int(h), int(c)
-        arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(h, w, c)
+        arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w, c)
         ys = np.minimum(np.arange(out_h) * h // out_h, h - 1)
         xs = np.minimum(np.arange(out_w) * w // out_w, w - 1)
         out = np.ascontiguousarray(arr[ys][:, xs])

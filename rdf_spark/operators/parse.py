@@ -10,7 +10,7 @@ input_hint).
 
 Scale design:
 - one Python parse call per document, batched via Arrow
-  (spark.sql.execution.arrow.maxRecordsPerBatch sizes the batch);
+  (spark.sql.execution.arrow.maxRecordsPerBatch sizes the input batch);
   raw html pages are extracted and parsed in the same Python pass, so
   a crawl page crosses the Arrow boundary once;
 - parse failures become rows with ``error`` set (bad documents at web

@@ -13,9 +13,9 @@ Supported embeddings (media types per the reference registry,
 ``application/n-quads``, ``application/trig``, ``application/ld+json``,
 plus the RDF-star variants.
 
-Runs per page through :func:`rdf_spark.submit.map_rows`: one Arrow
-batch of pages in, one batch of (url, block_index, format, text, lang)
-out; partition-preserving (no shuffle).
+Runs per page through :func:`rdf_spark.submit.map_rows`: Arrow batches
+of pages in, batches of (url, block_index, format, text, lang) out;
+partition-preserving (no shuffle).
 """
 
 from __future__ import annotations
@@ -157,9 +157,7 @@ def extract_metadata(pages: DataFrame) -> DataFrame:
     pipeline's page metadata table)."""
 
     def row(url, html):
-        m = page_metadata_from_html(
-            bytes(html) if html is not None else b"", base=url or ""
-        )
+        m = page_metadata_from_html(html or b"", base=url or "")
         return [(url, m["title"], m["description"], m["canonical"],
                  m["html_lang"])]
 

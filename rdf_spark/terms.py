@@ -199,7 +199,8 @@ def documents_equal(a, b) -> bool:
     """Reference ``Document.Equal`` on the documents as its
     ParseDocument returns them: sort both (ntriples/doc.go:86), length
     check, normalize both in sorted order, then pairwise compare
-    (ntriples/doc.go:92-104). Inputs may come in any order."""
+    (ntriples/doc.go:92-104). Inputs may come in any order, but blank-node
+    labels must be as parsed, not skolemized: the sort keys hold them."""
     if len(a) != len(b):
         return False
     na = normalize_blank_nodes(sort_document(a))
@@ -234,7 +235,7 @@ def quad_documents_equal(a, b) -> bool:
 def eval_documents_equal(golden, mine) -> bool:
     """The Turtle eval tests' comparison (turtle/doc_test.go:196-215):
     each side sorted as parsed and normalized, then ``Document.Equal``
-    (which re-sorts on the normalized labels)."""
+    (which re-sorts on the normalized labels); bnode labels as parsed."""
     return documents_equal(normalize_blank_nodes(sort_document(golden)),
                            normalize_blank_nodes(sort_document(mine)))
 

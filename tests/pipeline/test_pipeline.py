@@ -195,7 +195,7 @@ def test_fused_html_parse_equals_extract_then_parse(spark, mixed_pages):
                .distinct().collect()}
     assert formats >= {"turtle", "jsonld", "nquads", "microdata", "rdfa"}
     plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
 
 
 def _triples_side_exchanges(plan: str) -> list[str]:

@@ -133,4 +133,4 @@ def test_stream_with_dictionary_links_and_keeps_errors(spark, dirs):
     assert Counter(map(tuple, out.collect())) == \
         Counter(map(tuple, expected.select(*out.columns).collect()))
     plan = expected._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan

@@ -36,6 +36,20 @@ def test_bnode_structure_mismatch():
     assert not T.documents_equal(a, b)
 
 
+def test_equality_depends_on_parsed_bnode_labels():
+    # Document.Equal as written sorts on the labels before normalizing,
+    # so it expects labels as parsed: a relabelling that reverses their
+    # order compares unequal, one that keeps it compares equal
+    doc = parse_document('_:a <http://a/p> "1" .\n_:b <http://a/p> "2" .\n')
+    relabel = lambda t, m: tuple(("b", m[x[1]]) if x[0] == "b" else x for x in t)
+    reversed_ = [relabel(t, {"a": "r1", "b": "r0"}) for t in doc]
+    kept = [relabel(t, {"a": "xa", "b": "xb"}) for t in doc]
+    assert not T.documents_equal(doc, reversed_)
+    assert not T.eval_documents_equal(doc, reversed_)
+    assert T.documents_equal(doc, kept)
+    assert T.eval_documents_equal(doc, kept)
+
+
 def test_iri_equality_unescapes_unicode():
     a = parse_document("<http://a/\\u0041> <http://a/p> <http://a/o> .\n", validate=False)
     b = parse_document("<http://a/A> <http://a/p> <http://a/o> .\n", validate=False)
