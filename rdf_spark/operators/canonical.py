@@ -25,11 +25,18 @@ TRIPLE_KEY = [
     "graph_kind", "graph",
 ]
 
+_WRITE_ORDER = ["subj", "pred", "obj_lex"]
+_GROUP_KEY = _WRITE_ORDER + [c for c in TRIPLE_KEY if c not in _WRITE_ORDER]
 
-def canonicalize(triples: DataFrame, url_col: str = "url") -> DataFrame:
+
+def canonicalize(triples: DataFrame, url_col: str = "url",
+                 within: tuple[str, ...] = ()) -> DataFrame:
     """Dedupe identical (s,p,o,g) across all documents, keeping scalable
     provenance aggregates. Literal comparison is lexical — no numeric
     normalization in the key (reference semantics, SURVEY.md §1.2/§4.3.4).
+    ``within`` columns scope the dedupe: they lead the group key and
+    come last in the output. Then come subj, pred, obj_lex, so the
+    sort-based aggregate already emits :func:`cluster_for_write`'s order.
 
     Plan note: min(url) has a variable-length aggregation buffer, which
     drops the whole aggregate from HashAggregate to SortAggregate
@@ -38,11 +45,11 @@ def canonicalize(triples: DataFrame, url_col: str = "url") -> DataFrame:
     kept, because a first-seen provenance URL per canonical triple is
     worth 2 %. If it ever matters, the fixed-width min(xxhash64(url))
     variant restores HashAggregate at the cost of an opaque exemplar."""
-    return triples.groupBy(*TRIPLE_KEY).agg(
+    return triples.groupBy(*within, *_GROUP_KEY).agg(
         F.count(F.lit(1)).alias("support"),
         F.min(url_col).alias("first_url"),
         F.approx_count_distinct(url_col).alias("approx_sources"),
-    )
+    ).select(*TRIPLE_KEY, "support", "first_url", "approx_sources", *within)
 
 
 def canonicalize_sketched(triples: DataFrame, url_col: str = "url",
@@ -82,12 +89,13 @@ def with_source_estimates(canonical: DataFrame) -> DataFrame:
     )
 
 
-def cluster_for_write(rows: DataFrame, buckets: int = 32) -> DataFrame:
+def cluster_for_write(rows: DataFrame, buckets: int = 32,
+                      within: tuple[str, ...] = ()) -> DataFrame:
     """Layout for materialization, with ONE Exchange of its own:
     hash-partition on subject (co-locates each entity's triples ->
     downstream entity-local joins are shuffle-free with the same
     bucketing), then sort within partitions for parquet min-max pruning
-    on (subj, pred).
+    on (subj, pred), after the ``within`` columns of :func:`canonicalize`.
 
     Rows without a ``support`` column are raw triples: they are
     canonicalized between the exchange and the sort. The triple key
@@ -99,8 +107,8 @@ def cluster_for_write(rows: DataFrame, buckets: int = 32) -> DataFrame:
     ``cluster_for_write(canonicalize(triples))``."""
     by_subj = rows.repartition(buckets, "subj")
     if "support" not in rows.columns:
-        by_subj = canonicalize(by_subj)
-    return by_subj.sortWithinPartitions("subj", "pred", "obj_lex")
+        by_subj = canonicalize(by_subj, within=within)
+    return by_subj.sortWithinPartitions(*within, *_WRITE_ORDER)
 
 
 def exact_duplicate_docs(triples: DataFrame, url_col: str = "url") -> DataFrame:

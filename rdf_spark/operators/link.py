@@ -33,16 +33,15 @@ def link_entities(
     """Rewrite IRI subjects/objects that match dictionary surfaces to
     their canonical IRIs. Broadcast-hash join; big side not shuffled.
 
-    The dictionary is deduplicated in one partition: the broadcast
-    collects it whole to the driver anyway, and a single-partition
-    child already satisfies the aggregate's distribution, so the plan
-    needs no ``Exchange hashpartitioning(__surface, ...)`` (and no
-    shuffle-map job) under either broadcast."""
+    A surface listed with several canonicals links to the smallest, in
+    any row order. The dictionary is deduplicated in one partition: the
+    broadcast collects it whole to the driver anyway, and a
+    single-partition child already satisfies the aggregate's
+    distribution, so the plan needs no ``Exchange
+    hashpartitioning(__surface, ...)`` (and no shuffle-map job)."""
     d = F.broadcast(
-        dictionary.coalesce(1).select(
-            F.col(surface_col).alias("__surface"),
-            F.col(canonical_col).alias("__canonical"),
-        ).dropDuplicates(["__surface"])
+        dictionary.coalesce(1).groupBy(F.col(surface_col).alias("__surface"))
+        .agg(F.min(canonical_col).alias("__canonical"))
     )
     out = (
         triples.join(d, F.col("subj") == F.col("__surface"), "left")

@@ -26,20 +26,8 @@ def skolemize(triples: DataFrame, url_col: str = "url") -> DataFrame:
     """Rewrite bnode subj/obj/graph labels to global deterministic
     labels. Partition-preserving; no shuffle."""
     url = F.col(url_col)
-    return (
-        triples.withColumn(
-            "subj",
-            F.when(F.col("subj_kind") == KIND_BNODE, _skol(url, F.col("subj")))
-            .otherwise(F.col("subj")),
-        )
-        .withColumn(
-            "obj_lex",
-            F.when(F.col("obj_kind") == KIND_BNODE, _skol(url, F.col("obj_lex")))
-            .otherwise(F.col("obj_lex")),
-        )
-        .withColumn(
-            "graph",
-            F.when(F.col("graph_kind") == KIND_BNODE, _skol(url, F.col("graph")))
-            .otherwise(F.col("graph")),
-        )
-    )
+    return triples.withColumns({
+        c: F.when(F.col(kind) == KIND_BNODE, _skol(url, F.col(c))).otherwise(F.col(c))
+        for c, kind in (("subj", "subj_kind"), ("obj_lex", "obj_kind"),
+                        ("graph", "graph_kind"))
+    })

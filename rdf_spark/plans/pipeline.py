@@ -14,16 +14,17 @@ the resume protocol are implemented over directories — the logic
 (skip-completed-partitions, idempotent re-run) is identical.
 
 Resume protocol:
-  input is bucketed into `n_buckets` by hash(url). Each bucket is an
-  independent unit of work: parse -> ... -> overwrite `part=<bucket>`
-  of the output, then write `_lineage/<bucket>.json` and
-  `_progress/<bucket>.json` LAST (write-ahead on data, commit on
-  watermark). Two buckets are in flight at once (one is planned while
-  the other runs), but the commits are made in bucket order, so the
-  committed buckets are always a prefix of the pending ones. A re-run
-  skips buckets whose watermark exists; a killed run re-processes its
-  in-flight buckets, overwriting the same partition directories
-  (idempotent: a bucket's output is a pure function of its input).
+  input is bucketed into `n_buckets` by hash(url), and the pending
+  buckets are taken in waves of `_WAVE`. A wave is ONE Spark action: a
+  `partitionBy("part")` write that dynamically overwrites the wave's
+  `part=<bucket>` directories of the output and nothing else. Then,
+  bucket by bucket in order, `_lineage/<bucket>.json` and
+  `_progress/<bucket>.json` are written LAST (write-ahead on data,
+  commit on watermark), so the committed buckets are always a prefix of
+  the pending ones. A re-run skips buckets whose watermark exists; a
+  killed run re-processes the buckets of its last wave, overwriting the
+  same partition directories (idempotent: a bucket's output is a pure
+  function of its input).
 """
 
 from __future__ import annotations
@@ -31,10 +32,10 @@ from __future__ import annotations
 import json
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
-from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.canonical import canonicalize, cluster_for_write
@@ -42,9 +43,28 @@ from ..operators.link import link_entities
 from ..operators.parse import good_triples, parse_pages
 from ..operators.skolemize import skolemize
 
-# Buckets in flight at once: one is planned on the driver while the
-# other's jobs run, which hides the plan-building gap between them.
-_IN_FLIGHT = 2
+# Buckets per write: a wave pays a Spark job's fixed cost once for all
+# its buckets, and a killed run loses at most one wave of work.
+_WAVE = 2
+_LINEAGE_COUNTS = ("docs_in", "docs_failed", "raw_triples", "triples_out")
+_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+
+
+@contextmanager
+def _observations_kept(spark: SparkSession) -> Iterator[None]:
+    """Turn off AQE's empty-relation pruning, which drops the plan above
+    an empty shuffle stage (a wave whose pages give no triples) and the
+    Observations inside it."""
+    old = spark.conf.get(_EXCLUDED_RULES, None)
+    rule = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+    spark.conf.set(_EXCLUDED_RULES, ",".join(filter(None, [old, rule])))
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(_EXCLUDED_RULES)
+        else:
+            spark.conf.set(_EXCLUDED_RULES, old)
 
 
 def parse_stage(pages: DataFrame, from_html: bool = True,
@@ -91,25 +111,36 @@ def bucket_write_plan(
     dictionary: DataFrame | None = None,
     from_html: bool = True,
     text_format: str = "turtle",
+    buckets: Sequence[int] = (0,),
+    n_buckets: int = 1,
 ) -> tuple[DataFrame, list[Observation]]:
-    """One checkpoint bucket: the canonical, subj-clustered rows to
-    write, plus the Observations that fill its lineage. Writing the
-    frame is the bucket's only action — one Python pass (extract +
-    parse), one Exchange (``cluster_for_write`` on raw triples) — and the
-    counts ride along on it: ``docs_in`` on the pages, ``docs_failed``
-    (error rows) and ``raw_triples`` on the parsed rows,
-    ``triples_out`` on the rows written."""
+    """One wave of checkpoint buckets: the canonical, subj-clustered
+    rows of the pages in ``buckets`` (of ``n_buckets``), each with its
+    bucket as ``part``, plus the Observations that fill their lineage.
+    Writing the frame is the wave's only action — one Python pass
+    (extract + parse), one Exchange (``cluster_for_write`` on raw
+    triples) — and the counts ride along on it, one per bucket
+    (``<name>_<bucket>``): ``docs_in`` on the pages, ``docs_failed``
+    (error rows) and ``raw_triples`` on the parsed rows, ``triples_out``
+    on the rows written. ``part`` is derived from each row's ``url``, so
+    a triple seen in two buckets stays two rows."""
+    def per_bucket(name: str, cond: Column, part: Column) -> list[Column]:
+        return [F.count(F.when(cond & (part == b), 1)).alias(f"{name}_{b}")
+                for b in buckets]
+
     obs = [Observation() for _ in range(3)]
-    pages = pages.observe(obs[0], F.count(F.lit(1)).alias("docs_in"))
+    page_part = F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+    pages = pages.where(page_part.isin(*buckets)).observe(
+        obs[0], *per_bucket("docs_in", F.lit(True), page_part))
     err = F.col("error")
     parsed = parse_stage(pages, from_html, text_format).observe(
         obs[1],
-        F.count(F.when(err.isNotNull(), 1)).alias("docs_failed"),
-        F.count(F.when(err.isNull(), 1)).alias("raw_triples"),
+        *per_bucket("docs_failed", err.isNotNull(), page_part),
+        *per_bucket("raw_triples", err.isNull(), page_part),
     )
-    out = cluster_for_write(link_stage(good_triples(parsed), dictionary),
-                            buckets=4)
-    return out.observe(obs[2], F.count(F.lit(1)).alias("triples_out")), obs
+    triples = link_stage(good_triples(parsed), dictionary).withColumn("part", page_part)
+    out = cluster_for_write(triples, buckets=4, within=("part",))
+    return out.observe(obs[2], *per_bucket("triples_out", F.lit(True), F.col("part"))), obs
 
 
 class PipelineRun:
@@ -144,66 +175,33 @@ class PipelineRun:
         of the finished output, call :meth:`finalize_bucketed`."""
         done = self.completed_buckets()
         stats = {"processed": [], "skipped": sorted(done), "triples_out": 0}
-        bucketed = pages.withColumn(
-            "__bucket", F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int")
-        )
-
-        # Per bucket: ONE Spark action, the parquet write of
-        # bucket_write_plan — one Python pass over the pages (extract +
-        # parse fused in parse_pages) and one Exchange (hash on subj,
-        # shared by the canonical aggregate and the file layout). The
-        # lineage counts are Observations collected by that same write:
-        # no persisted parse, no side counts, no re-read of the output.
-        # At real scale each bucket is an Iceberg partition-filtered
-        # scan instead of the hash filter.
-        def write_bucket(b: int) -> tuple[dict, int]:
+        pending = [b for b in range(self.n_buckets) if b not in done]
+        # Per wave: ONE Spark action, the parquet write of bucket_write_plan,
+        # whose Observations carry the lineage counts (no side counts, no
+        # re-read). At real scale a wave is an Iceberg partition-filtered scan.
+        for i in range(0, len(pending), _WAVE):
+            wave = pending[i:i + _WAVE]
             t0 = time.monotonic()
-            part = bucketed.where(F.col("__bucket") == b).drop("__bucket")
-            out, obs = bucket_write_plan(part, dictionary, from_html=from_html,
-                                         text_format=text_format)
-            out.write.mode("overwrite").parquet(
-                os.path.join(self.data_dir, f"part={b}"))
+            out, obs = bucket_write_plan(pages, dictionary, from_html, text_format,
+                                         buckets=wave, n_buckets=self.n_buckets)
+            with _observations_kept(self.spark):
+                out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+                    .partitionBy("part").parquet(self.data_dir)
+            wall_ms = int((time.monotonic() - t0) * 1000)
             counts = {k: v for o in obs for k, v in o.get.items()}
-            return counts, int((time.monotonic() - t0) * 1000)
-
-        # _IN_FLIGHT buckets are planned and written at once on pool
-        # threads that inherit this thread's job group and local
-        # properties: each bucket is wrapped here, on the calling
-        # thread, so it gets its own copy of them. This thread
-        # commits them in bucket order; on the first failure the
-        # buckets not yet started are cancelled, the running writes
-        # finish, nothing after the failed bucket is committed and the
-        # error propagates. A bucket's wall_ms is its own plan-and-write
-        # wall, which overlaps its neighbour's.
-        pool = ThreadPoolExecutor(_IN_FLIGHT, thread_name_prefix="bucket")
-        try:
-            futures = [
-                (b, pool.submit(inheritable_thread_target(self.spark)(write_bucket), b))
-                for b in range(self.n_buckets) if b not in done
-            ]
-            for b, fut in futures:
-                counts, wall_ms = fut.result()
-                triples_out = counts["triples_out"]
-                lineage = {
-                    "input_partition": b,
-                    "job_run_id": self.run_id,
-                    "docs_in": counts["docs_in"],
-                    "docs_failed": counts["docs_failed"],
-                    "raw_triples": counts["raw_triples"],
-                    "triples_out": triples_out,
-                    "dedupe_ratio": (triples_out / counts["raw_triples"]
-                                     if counts["raw_triples"] else None),
-                    "wall_ms": wall_ms,
-                }
+            for b in wave:
+                c = {k: counts[f"{k}_{b}"] for k in _LINEAGE_COUNTS}
+                lineage = {"input_partition": b, "job_run_id": self.run_id, **c,
+                           "dedupe_ratio": (c["triples_out"] / c["raw_triples"]
+                                            if c["raw_triples"] else None),
+                           "wall_ms": wall_ms}
                 with open(os.path.join(self.lineage_dir, f"{b}.json"), "w") as f:
                     json.dump(lineage, f)
                 # watermark LAST: commit point for this bucket
                 with open(os.path.join(self.progress_dir, f"{b}.json"), "w") as f:
                     json.dump({"bucket": b, "run_id": self.run_id}, f)
                 stats["processed"].append(b)
-                stats["triples_out"] += triples_out
-        finally:
-            pool.shutdown(cancel_futures=True)
+                stats["triples_out"] += c["triples_out"]
         return stats
 
     def finalize_bucketed(self, table: str, n_buckets: int = 16,
@@ -225,9 +223,9 @@ class PipelineRun:
 
     def lineage(self) -> list[dict]:
         """The committed buckets' lineage records. A record's
-        ``wall_ms`` is its bucket's own plan-and-write wall, which
-        overlaps its neighbour's (two buckets are in flight at once),
-        so the records' sum exceeds the run's wall."""
+        ``wall_ms`` is its wave's plan-and-write wall, shared by all the
+        buckets of the wave, so the records' sum exceeds the run's
+        wall."""
         out = []
         for f in sorted(os.listdir(self.lineage_dir)):
             if f.endswith(".json"):

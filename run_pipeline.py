@@ -15,11 +15,13 @@ The input is a pages table (url, warc_ts, html, text, lang) — html
 binary is used when --from-html (default), else `text` is parsed with
 --text-format (a `format` column overrides it per row; `auto` sniffs).
 Each bucket goes through PipelineRun: parse -> skolemize -> link ->
-canonical dedupe. Output layout: <out>/triples/part=N parquet +
-<out>/_progress watermarks + <out>/_lineage manifests; documents that
-fail to parse are counted per bucket as `docs_failed` in the lineage.
-Re-running with the same --output resumes: completed buckets are
-skipped.
+canonical dedupe (per bucket). Buckets are written two at a time, each
+pair as one partitioned parquet write. Output layout:
+<out>/triples/part=N parquet + <out>/_progress watermarks +
+<out>/_lineage manifests; documents that fail to parse are counted per
+bucket as `docs_failed` in the lineage. Re-running with the same
+--output resumes: completed buckets are skipped, and a killed run
+redoes at most the two buckets it was writing.
 """
 
 from __future__ import annotations

@@ -84,10 +84,11 @@ def test_rerun_is_idempotent_noop(spark, pages, tmp_path):
 
 def test_bucket_loop_parses_once_per_bucket(spark, pages, tmp_path, monkeypatch):
     """Plan regression: the bucket loop must build exactly one parse
-    plan per bucket (the triples written and the observed error and
-    raw-triple counts all derive from the one parsed DataFrame of the
-    bucket's single write — a second parse_pages call per bucket
-    doubles the dominant cost at scale)."""
+    plan per wave of buckets (the triples written and the observed error
+    and raw-triple counts of all the wave's buckets derive from the one
+    parsed DataFrame of the wave's single write — a second parse_pages
+    call doubles the dominant cost at scale). Two buckets are one
+    wave."""
     import rdf_spark.plans.pipeline as pl
 
     calls = []
@@ -100,7 +101,7 @@ def test_bucket_loop_parses_once_per_bucket(spark, pages, tmp_path, monkeypatch)
     monkeypatch.setattr(pl, "parse_pages", counting)
     p = PipelineRun(spark, str(tmp_path / "once"), n_buckets=2, run_id="a")
     p.run(pages)
-    assert len(calls) == 2
+    assert len(calls) == 1
 
 
 def test_lineage_recorded(spark, tmp_path):
@@ -268,56 +269,48 @@ def test_bucket_is_one_action_with_observed_lineage(spark, mixed_pages, tmp_path
     assert stats["triples_out"] == sum(x["triples_out"] for x in lineage)
 
 
-def test_buckets_are_planned_concurrently(spark, pages, tmp_path, monkeypatch):
-    """Two buckets are in flight at once: each bucket's plan build waits
-    on a two-party barrier, which only a concurrent second bucket can
-    release (a serial bucket loop breaks it on the timeout)."""
-    import rdf_spark.plans.pipeline as pl
-
-    barrier = threading.Barrier(2, timeout=60)
-    real = pl.bucket_write_plan
-
-    def meet(*a, **k):
-        barrier.wait()
-        return real(*a, **k)
-
-    monkeypatch.setattr(pl, "bucket_write_plan", meet)
-    p = PipelineRun(spark, str(tmp_path / "overlap"), n_buckets=2, run_id="a")
-    assert p.run(pages)["processed"] == [0, 1]
-    assert p.completed_buckets() == {0, 1}
-
-
 def test_failed_bucket_commits_prefix_and_resumes(spark, pages, tmp_path,
                                                   monkeypatch):
-    """A write that raises in bucket 1 of 4 propagates, leaves only
-    bucket 0 committed (no lineage after the failure, although later
-    buckets may have run), and a resumed run finishes the rest with
-    the output of an uninterrupted run."""
+    """A write that raises in the second wave (buckets {2} of 3, {2,3}
+    of 4) propagates and leaves only the first wave {0,1} committed and
+    written (no lineage after the failure), and a resumed run finishes
+    the rest with the output and lineage of an uninterrupted run."""
     from pyspark.sql import DataFrameWriter
 
-    full = PipelineRun(spark, str(tmp_path / "full"), n_buckets=4, run_id="full")
-    full.run(pages)
-
     real = DataFrameWriter.parquet
+    strip = lambda xs: [{k: v for k, v in x.items() if k not in ("wall_ms", "job_run_id")}
+                        for x in xs]  # noqa: E731
+    for n in (3, 4):
+        full = PipelineRun(spark, str(tmp_path / f"full{n}"), n_buckets=n, run_id="full")
+        full.run(pages)
 
-    def fail_bucket_1(self, path, *a, **k):
-        if path.endswith("part=1"):
-            raise RuntimeError("injected write failure in bucket 1")
-        return real(self, path, *a, **k)
+        writes = []
 
-    crash = PipelineRun(spark, str(tmp_path / "crash"), n_buckets=4, run_id="r1")
-    with monkeypatch.context() as m:
-        m.setattr(DataFrameWriter, "parquet", fail_bucket_1)
-        with pytest.raises(RuntimeError, match="injected write failure"):
-            crash.run(pages)
-    assert crash.completed_buckets() == {0}
-    assert [x["input_partition"] for x in crash.lineage()] == [0]
+        def fail_second_wave(self, path, *a, **k):
+            writes.append(path)
+            if len(writes) == 2:
+                raise RuntimeError("injected write failure in the second wave")
+            return real(self, path, *a, **k)
 
-    resumed = PipelineRun(spark, str(tmp_path / "crash"), n_buckets=4, run_id="r2")
-    stats = resumed.run(pages)
-    assert stats["skipped"] == [0]
-    assert stats["processed"] == [1, 2, 3]
-    assert _normalized(resumed.read_output()) == _normalized(full.read_output())
+        crash = PipelineRun(spark, str(tmp_path / f"crash{n}"), n_buckets=n, run_id="r1")
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", fail_second_wave)
+            with pytest.raises(RuntimeError, match="injected write failure"):
+                crash.run(pages)
+        assert crash.completed_buckets() == {0, 1}
+        assert [x["input_partition"] for x in crash.lineage()] == [0, 1]
+        assert sorted(d for d in os.listdir(crash.data_dir) if d.startswith("part=")) \
+            == ["part=0", "part=1"]
+
+        resumed = PipelineRun(spark, str(tmp_path / f"crash{n}"), n_buckets=n, run_id="r2")
+        stats = resumed.run(pages)
+        assert stats["skipped"] == [0, 1]
+        assert stats["processed"] == list(range(2, n))
+        # each wave's write leaves the other waves' buckets in place
+        out = resumed.read_output()
+        assert out.count() == sum(x["triples_out"] for x in resumed.lineage())
+        assert _normalized(out) == _normalized(full.read_output())
+        assert strip(resumed.lineage()) == strip(full.lineage())
 
 
 def test_bucket_jobs_run_under_callers_job_group(spark, pages, tmp_path):
@@ -350,3 +343,64 @@ def test_run_leaves_no_threads_behind(spark, pages, tmp_path):
     for i in range(3):
         PipelineRun(spark, str(tmp_path / f"t{i}"), n_buckets=2, run_id="t").run(pages)
     assert threading.active_count() == start
+
+
+def test_empty_bucket_is_committed_with_zero_lineage(spark, tmp_path):
+    """More buckets than pages: a bucket no page hashes to still gets a
+    lineage file with zero counts and a watermark, and the output holds
+    exactly the rows of the other buckets."""
+    few = generate_pages(spark, 3, seed=5, partitions=1, bad_fraction=0)
+    bucket = F.pmod(F.xxhash64("url"), F.lit(8))
+    used = {r.b for r in few.select(bucket.alias("b")).collect()}
+    assert len(used) < 8
+    run = PipelineRun(spark, str(tmp_path / "sparse"), n_buckets=8, run_id="a")
+    assert run.run(few)["processed"] == list(range(8))
+    assert run.completed_buckets() == set(range(8))
+    lineage = {x["input_partition"]: x for x in run.lineage()}
+    assert sorted(lineage) == list(range(8))
+    for b in set(range(8)) - used:
+        x = lineage[b]
+        assert (x["docs_in"], x["docs_failed"], x["raw_triples"], x["triples_out"]) \
+            == (0, 0, 0, 0)
+        assert x["dedupe_ratio"] is None
+    # each used bucket's output is its pages' canonical triples
+    expected = None
+    for b in sorted(used):
+        rows = build_triples(few.where(bucket == b)).withColumn("part", F.lit(b))
+        expected = rows if expected is None else expected.unionByName(rows)
+    out = run.read_output()
+    assert out.columns == expected.columns
+    assert _normalized(out) == _normalized(expected)
+    assert out.count() == sum(x["triples_out"] for x in lineage.values())
+
+
+def test_wave_without_triples_keeps_its_lineage(spark, tmp_path):
+    """Pages that all fail to parse give a wave no triples to shuffle;
+    its buckets' lineage still counts their pages and failures."""
+    bad = generate_pages(spark, 4, seed=5, partitions=2, bad_fraction=1.0,
+                         suite_fraction=0)
+    run = PipelineRun(spark, str(tmp_path / "bad"), n_buckets=2, run_id="a")
+    assert run.run(bad) == {"processed": [0, 1], "skipped": [], "triples_out": 0}
+    lineage = run.lineage()
+    assert sum(x["docs_in"] for x in lineage) == 4
+    assert all(x["docs_failed"] == x["docs_in"] for x in lineage)
+    assert all(x["raw_triples"] == x["triples_out"] == 0 for x in lineage)
+
+
+def test_more_buckets_start_no_more_jobs(spark, pages, tmp_path):
+    """A wave is one write: two buckets start no more Spark jobs than
+    one bucket over the same pages."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(n):
+        group = f"wave-jobs-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            PipelineRun(spark, str(tmp_path / group), n_buckets=n, run_id="j").run(pages)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    one, two = jobs(1), jobs(2)
+    assert 0 < two <= one, (one, two)

@@ -163,6 +163,43 @@ def test_entity_linking_broadcast(spark):
     assert rows[0].subj in canon
 
 
+_LINK_TRIPLE = ("u", 0, "http://e/a", "http://e/p", 0, "http://e/a", None, None, None, None)
+_LINK_SCHEMA = ("url string, subj_kind tinyint, subj string, pred string, obj_kind tinyint,"
+                "obj_lex string, obj_datatype string, obj_lang string, graph_kind tinyint,"
+                " graph string")
+
+
+@pytest.mark.parametrize("partitions", [1, 3])
+def test_link_ambiguous_surface_takes_smallest_canonical(spark, partitions):
+    """A surface listed with two canonicals links to the smaller one,
+    whatever the dictionary's row order and partitioning."""
+    triples = spark.createDataFrame([_LINK_TRIPLE], _LINK_SCHEMA)
+    rows = [("http://e/a", "http://c/2"), ("http://e/b", "http://c/0"),
+            ("http://e/a", "http://c/1"), ("http://e/a", "http://c/3")]
+    for order in (rows, rows[::-1]):
+        d = spark.createDataFrame(order, "surface string, canonical_iri string") \
+            .repartition(partitions)
+        assert d.rdd.getNumPartitions() == partitions
+        got = link_entities(triples, d).collect()
+        assert [(r.subj, r.obj_lex) for r in got] == [("http://c/1", "http://c/1")]
+
+
+def test_link_broadcasts_the_dictionary_once(spark):
+    """The subject and object joins share one broadcast of an uncached
+    dictionary: the final plan holds one BroadcastExchange, and the
+    other join reads it through a ReusedExchange."""
+    triples = spark.createDataFrame([_LINK_TRIPLE], _LINK_SCHEMA)
+    d = spark.createDataFrame([("http://e/a", "http://c/1")],
+                              "surface string, canonical_iri string")
+    linked = link_entities(triples, d)
+    linked.collect()
+    plan = linked._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    ops = [line.strip(" :+-").lstrip("*(0123456789) ") for line in final.splitlines()]
+    assert sum(op.startswith("BroadcastExchange") for op in ops) == 1, final
+    assert sum(op.startswith("ReusedExchange") for op in ops) == 1, final
+
+
 def test_salted_count_equals_plain(spark):
     df = spark.range(0, 1000).selectExpr("cast(id % 7 as string) as k")
     salted = {(r.k, r.cnt) for r in salted_count(df, ["k"]).collect()}
