@@ -37,7 +37,7 @@ domain and yields ''.
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -173,13 +173,13 @@ def public_suffix_df(spark, suffixes=PSL_SUFFIXES) -> DataFrame:
 
 
 def idna_ascii_host():
-    """Arrow-batched UDF: punycode (IDNA ASCII) form of a host —
+    """Arrow UDF: punycode (IDNA ASCII) form of a host —
     ``пример.рф`` -> ``xn--e1afmkfd.xn--p1ai``. ASCII hosts (the
     overwhelming majority of a web corpus) pass through with one
     C-level isascii() check per value; hosts the codec rejects (empty
     labels, brackets, over-long labels) are returned unchanged rather
     than erroring — for a grouping key, a stable passthrough beats a
-    poisoned batch. Built lazily: a module-level @pandas_udf would
+    poisoned batch. Built lazily: a module-level @arrow_udf would
     need an active SparkSession at import time."""
 
     def enc(h):
@@ -190,10 +190,10 @@ def idna_ascii_host():
         except UnicodeError:
             return h
 
-    @F.pandas_udf("string")
-    def _udf(hosts: pd.Series) -> pd.Series:
+    @F.arrow_udf("string")
+    def _udf(hosts: pa.Array) -> pa.Array:
         _prune_zip_importers()
-        return hosts.map(enc)
+        return pa.array([enc(h) for h in hosts.to_pylist()], pa.string())
 
     return _udf
 

@@ -19,7 +19,7 @@ vector has no cosine, so it is never anyone's neighbor.
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -283,23 +283,24 @@ def _broadcast_centroids(df: DataFrame, centroids: list[list[float]]):
 
 
 def _centroid_d2_udf(bc, n: int):
-    """Vectorized pandas UDF: top-``n`` nearest-centroid indices per
-    row (squared-euclidean, distances rounded to 9dp for engine-stable
+    """Arrow UDF: top-``n`` nearest-centroid indices per row
+    (squared-euclidean, distances rounded to 9dp for engine-stable
     ties, stable index ordering). One (batch x k) GEMM per Arrow batch;
     plan size and codegen are O(1) in k. (The literal-inlining
     alternative builds one Catalyst struct per centroid and blows up
     whole-stage codegen at the nlist≈4k-64k a 100 TB IVF index
     needs.) No shuffle, no join."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("array<int>")
-    def top_centroids(v: pd.Series) -> pd.Series:
+    @F.arrow_udf("array<int>")
+    def top_centroids(v: pa.Array) -> pa.Array:
         _prune_zip_importers()
         cm = bc.value
-        X = np.asarray(v.tolist(), dtype=np.float64)       # B x dim
-        if X.size == 0:
-            return pd.Series([], dtype="object")
+        dim = cm.shape[1]
+        if v.null_count or (np.diff(v.offsets.to_numpy()) != dim).any():
+            raise ValueError("vectors must be non-null and of the centroids' size")
+        # B x dim straight from the Arrow value buffer (0 x dim for an empty batch)
+        X = np.asarray(v.flatten(), dtype=np.float64).reshape(-1, dim)
         # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2 (B x k, one GEMM)
         d2 = np.round(
             (X * X).sum(axis=1, keepdims=True)
@@ -309,7 +310,8 @@ def _centroid_d2_udf(bc, n: int):
         )
         nn = min(n, d2.shape[1])
         idx = np.argsort(d2, axis=1, kind="stable")[:, :nn].astype("int32")
-        return pd.Series(list(idx))
+        offsets = np.arange(0, idx.size + 1, nn, dtype=np.int32)
+        return pa.ListArray.from_arrays(offsets, idx.ravel())
 
     return top_centroids
 
@@ -318,12 +320,8 @@ def _assign_nearest(df: DataFrame, centroids: list[list[float]],
                     vec_col: str, out_col: str = "centroid",
                     bc=None) -> DataFrame:
     """Add `out_col` = index of the nearest centroid (squared-euclidean
-    argmin, first-index tie-break). Pass an existing broadcast via
-    ``bc`` to reuse it across calls (and own its unpersist); with
-    ``bc=None`` the returned DataFrame's UDF closure owns the new
-    broadcast for its lifetime (freed by the ContextCleaner when the
-    DataFrame is collected, not at action completion — loopers must
-    pass their own bc, see _assign_topn)."""
+    argmin, first-index tie-break). ``bc`` is owned as in
+    :func:`_assign_topn`."""
     if bc is None:
         bc = _broadcast_centroids(df, centroids)
     udf = _centroid_d2_udf(bc, 1)

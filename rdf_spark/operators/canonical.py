@@ -18,12 +18,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from .parse import TRIPLES_SCHEMA
 
 TRIPLE_KEY = [
     "subj_kind", "subj", "pred",
     "obj_kind", "obj_lex", "obj_datatype", "obj_lang",
     "graph_kind", "graph",
 ]
+# canonicalize's columns, before its ``within`` columns
+CANONICAL_SCHEMA = StructType(
+    [TRIPLES_SCHEMA[c] for c in TRIPLE_KEY]
+    + [StructField("support", LongType()), StructField("first_url", StringType()),
+       StructField("approx_sources", LongType())])
 
 _WRITE_ORDER = ["subj", "pred", "obj_lex"]
 _GROUP_KEY = _WRITE_ORDER + [c for c in TRIPLE_KEY if c not in _WRITE_ORDER]
@@ -49,7 +57,7 @@ def canonicalize(triples: DataFrame, url_col: str = "url",
         F.count(F.lit(1)).alias("support"),
         F.min(url_col).alias("first_url"),
         F.approx_count_distinct(url_col).alias("approx_sources"),
-    ).select(*TRIPLE_KEY, "support", "first_url", "approx_sources", *within)
+    ).select(*CANONICAL_SCHEMA.names, *within)
 
 
 def canonicalize_sketched(triples: DataFrame, url_col: str = "url",

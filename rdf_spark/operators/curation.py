@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from ..submit import _prune_zip_importers
 
@@ -155,48 +156,49 @@ def pack_sequences(docs: DataFrame, max_tokens: int = 2048,
     """Greedy token-budget sequence packing for training-data prep:
     (doc_id, n_tokens, bucket, seq_id, seq_offset) with per-(bucket,
     seq_id) token totals <= max_tokens (a doc longer than the budget
-    gets its own sequence).
+    gets its own sequence). ``id_col`` must be integral.
 
     Packing is inherently sequential, so the corpus is first split
     into md5-hash buckets (deterministic, uniform) and the greedy scan
-    runs per bucket inside applyInPandas — parallelism = `buckets`,
+    runs per bucket inside applyInArrow — parallelism = `buckets`,
     each group's state is one running counter. Deterministic end to
     end: bucket = hash(doc_id), scan order = doc_id order. A resumed
     or re-run job packs identically (no RNG, no partition-order
     dependence).
 
-    Sizing: applyInPandas materializes one bucket (3 narrow columns)
+    Sizing: applyInArrow materializes one bucket (3 narrow columns)
     per task, so choose ``buckets ≈ corpus_rows / 5M`` at scale — at
-    10^12 documents that is ~200k buckets, each a ~100 MB pandas
-    frame; the 256 default fits corpora up to the low billions."""
-    import pandas as pd
+    10^12 documents that is ~200k buckets, each a ~100 MB Arrow
+    table; the 256 default fits corpora up to the low billions."""
+    import pyarrow as pa
 
     from ..functions.text import token_count
 
+    id_type = docs.select(id_col).schema[0].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(f"pack_sequences needs an integral {id_col!r}, not {id_type}")
     src = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col(id_col).cast("long").alias("doc_id"),
         token_count(F.col(text_col)).alias("n_tokens"),
         (stratum_hash(F.col(id_col)) % buckets).cast("int").alias("bucket"),
     )
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(t: pa.Table) -> pa.Table:
         _prune_zip_importers()
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
+        t = t.sort_by("doc_id")
         seq_ids, offsets = [], []
         seq, acc = 0, 0
-        for nt in pdf["n_tokens"]:
-            nt = int(nt)
+        for nt in t.column("n_tokens").to_pylist():
             if acc > 0 and acc + nt > max_tokens:
                 seq += 1
                 acc = 0
             offsets.append(acc)
             seq_ids.append(seq)
             acc += nt
-        pdf["seq_id"] = seq_ids
-        pdf["seq_offset"] = offsets
-        return pdf
+        return (t.append_column("seq_id", pa.array(seq_ids, pa.int64()))
+                .append_column("seq_offset", pa.array(offsets, pa.int64())))
 
-    return src.groupBy("bucket").applyInPandas(
+    return src.groupBy("bucket").applyInArrow(
         pack,
         schema="doc_id long, n_tokens int, bucket int, seq_id long, seq_offset long",
     )

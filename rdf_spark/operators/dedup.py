@@ -5,7 +5,7 @@
   join; candidate generation never compares all pairs: cost is
   O(sum of bucket sizes squared) with tiny buckets at scale;
 - n-gram Jaccard (exact verification of candidate pairs);
-- SimHash (vectorized Pandas UDF, Arrow-batched);
+- SimHash (a per-document kernel through ``submit.map_rows``);
 - embedding-cosine near-duplicates.
 
 MinHash-LSH, SimHash and both embedding near-dup paths form their
@@ -20,14 +20,18 @@ oracle in __spark_entry__ runs the identical computation).
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
+import hashlib
 
-import pandas as pd
-
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-from ..submit import _prune_zip_importers
+from ..submit import map_rows
+
+_SIMHASH_SCHEMA = StructType([StructField("doc_id", LongType()),
+                              StructField("simhash", LongType())])
 
 
 def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
@@ -413,68 +417,48 @@ def dup_clusters(pairs: DataFrame, max_iters: int = 25,
     return labels
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = 64) -> DataFrame:
-    """64-bit SimHash over casefolded word tokens — mapInPandas with a
-    numpy-vectorized bit-vote kernel.
+_TOKEN_HASHES = 1 << 16  # md5 digests each worker keeps, most recently used first
+
+
+@functools.lru_cache(maxsize=_TOKEN_HASHES)
+def _token_md5(token: str) -> bytes:
+    return hashlib.md5(token.encode("utf-8")).digest()
+
+
+def simhash_text(text: str | None, bits: int = 64) -> int:
+    """SimHash of one document's lowercased whitespace tokens.
 
     Semantics (engine-portable, mirrored by the DuckDB oracle in
     __spark_entry__): token hash = first ``bits/8`` bytes of
     md5(token), big-endian; bit j of the signature is set iff strictly
-    more than half the tokens have bit j set (votes +1/-1, ties -> 0).
-    The per-token x per-bit voting loop is a single ``unpackbits`` +
-    column sum per document (~10-50x the scalar-Python formulation),
-    and md5 runs once per UNIQUE token per Arrow batch (dict-encode,
-    gather): natural-language corpora repeat most tokens heavily, so
-    the per-occurrence Python md5 call — the part that would dominate
-    at 100 TB — drops to the batch's vocabulary size."""
-    import hashlib
-
-    import numpy as np
-
+    more than half the tokens have bit j set (votes +1/-1, ties -> 0);
+    a 64-bit signature wraps to a signed long; a null or token-free text
+    hashes to 0. The bit vote is one ``unpackbits`` + column sum, and
+    md5 runs once per distinct token while it stays in the bounded
+    per-worker cache."""
+    toks = (text or "").lower().split()
+    if not toks:
+        return 0
     nbytes = bits // 8
+    # byte-reverse each hash so unpackbits column j == bit j (LSB
+    # index) of the big-endian integer
+    mat = np.frombuffer(b"".join(map(_token_md5, toks)), dtype=np.uint8)
+    mat = mat.reshape(-1, 16)[:, nbytes - 1::-1]
+    ones = np.unpackbits(mat, axis=1, bitorder="little").sum(axis=0)
+    sig = np.packbits(ones * 2 > len(toks), bitorder="little").tobytes()
+    return int.from_bytes(sig, "little", signed=bits == 64)
+
+
+def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+            bits: int = 64) -> DataFrame:
+    """(doc_id, simhash): :func:`simhash_text` of each document, run
+    per row through :func:`rdf_spark.submit.map_rows`. The md5 cache is
+    per worker, so a corpus's frequent tokens are hashed about once per
+    Python worker."""
     src = _spread_small_input(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _prune_zip_importers()
-        for pdf in batches:
-            toks_per_doc = [str(t).lower().split() for t in pdf["text"]]
-            vocab: dict[str, int] = {}
-            idx_per_doc = []
-            for toks in toks_per_doc:
-                idx_per_doc.append(
-                    np.fromiter(
-                        (vocab.setdefault(t, len(vocab)) for t in toks),
-                        dtype=np.int64, count=len(toks),
-                    )
-                )
-            if vocab:
-                raw = b"".join(
-                    hashlib.md5(t.encode("utf-8")).digest()[:nbytes]
-                    for t in vocab
-                )
-                # byte-reverse each hash so unpackbits column j == bit j
-                # (LSB index) of the big-endian integer
-                mat = np.frombuffer(raw, dtype=np.uint8).reshape(-1, nbytes)[:, ::-1]
-                vocab_bits = np.unpackbits(mat, axis=1, bitorder="little")
-            out = []
-            for doc_id, idx in zip(pdf["doc_id"], idx_per_doc):
-                if idx.size == 0:
-                    out.append((doc_id, 0))
-                    continue
-                ones = vocab_bits[idx].sum(axis=0, dtype=np.int64)
-                set_bits = np.nonzero(ones * 2 > idx.size)[0]
-                sig = 0
-                for j in set_bits:
-                    sig |= 1 << int(j)
-                if bits == 64 and sig >= 1 << 63:
-                    sig -= 1 << 64  # wrap to signed long for Arrow/Spark
-                out.append((doc_id, sig))
-            yield pd.DataFrame(out, columns=["doc_id", "simhash"])
-
-    return src.mapInPandas(run, schema="doc_id long, simhash long")
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")))
+    return map_rows(src, lambda doc_id, text: [(doc_id, simhash_text(text, bits))],
+                    _SIMHASH_SCHEMA)
 
 
 def simhash_near_dups(sig: DataFrame, max_hamming: int = 3,

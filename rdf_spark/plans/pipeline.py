@@ -37,8 +37,9 @@ from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..operators.canonical import canonicalize, cluster_for_write
+from ..operators.canonical import CANONICAL_SCHEMA, canonicalize, cluster_for_write
 from ..operators.link import link_entities
 from ..operators.parse import good_triples, parse_pages
 from ..operators.skolemize import skolemize
@@ -48,6 +49,9 @@ from ..operators.skolemize import skolemize
 _WAVE = 2
 _LINEAGE_COUNTS = ("docs_in", "docs_failed", "raw_triples", "triples_out")
 _EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+# What a wave writes, read back with the partition column last; an
+# output with no triples has no parquet file to infer it from.
+_OUTPUT_SCHEMA = StructType([*CANONICAL_SCHEMA, StructField("part", IntegerType())])
 
 
 @contextmanager
@@ -219,7 +223,7 @@ class PipelineRun:
         return read_bucketed_triples(self.spark, table)
 
     def read_output(self) -> DataFrame:
-        return self.spark.read.parquet(self.data_dir)
+        return self.spark.read.schema(_OUTPUT_SCHEMA).parquet(self.data_dir)
 
     def lineage(self) -> list[dict]:
         """The committed buckets' lineage records. A record's

@@ -128,7 +128,9 @@ def page_metadata_from_html(html: bytes | str, base: str = ""):
     out = {"title": None, "description": None, "canonical": None,
            "html_lang": None}
 
-    def walk(node):
+    for node in root.iter():
+        if not isinstance(node, _Node):
+            continue
         a = node.attrs
         if node.tag == "html" and out["html_lang"] is None and a.get("lang"):
             out["html_lang"] = a["lang"]
@@ -143,11 +145,6 @@ def page_metadata_from_html(html: bytes | str, base: str = ""):
             rels = (a.get("rel") or "").lower().split()
             if "canonical" in rels and a.get("href"):
                 out["canonical"] = urljoin(base, a["href"]) if base else a["href"]
-        for c in node.children:
-            if isinstance(c, _Node):
-                walk(c)
-
-    walk(root)
     return out
 
 

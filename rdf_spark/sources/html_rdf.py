@@ -68,18 +68,18 @@ class _Node:
         self.attrs = dict(attrs)
         self.children = []  # _Node or str (text)
 
+    def iter(self):
+        """This node, then every descendant (a ``_Node`` or a text
+        string) in document order; an explicit stack, so any depth."""
+        stack = [self]
+        while stack:
+            n = stack.pop()
+            yield n
+            if isinstance(n, _Node):
+                stack.extend(reversed(n.children))
+
     def text(self) -> str:
-        out = []
-
-        def walk(n):
-            for c in n.children:
-                if isinstance(c, str):
-                    out.append(c)
-                else:
-                    walk(c)
-
-        walk(self)
-        return "".join(out)
+        return "".join(c for c in self.iter() if isinstance(c, str))
 
 
 class _TreeBuilder(HTMLParser):
@@ -251,15 +251,11 @@ def parse_microdata(html: bytes | str, base: str = ""):
     # matching getElementById)
     ids: dict = {}
 
-    def index_ids(node):
-        nid = node.attrs.get("id")
+    for node in root.iter():
+        nid = isinstance(node, _Node) and node.attrs.get("id")
         if nid and nid not in ids:
             ids[nid] = node
-        for c in node.children:
-            if isinstance(c, _Node):
-                index_ids(c)
 
-    index_ids(root)
     active: set = set()  # items currently being crawled (cycle guard)
 
     def fresh():

@@ -1,9 +1,14 @@
 """Where rdf_spark's Python runs on executors.
 
-- :func:`map_rows` is the one Arrow boundary for per-row Python work.
-  The parse, extraction and multimodal operators each pass it a
-  per-row function, so a change to that boundary (worker setup, the one
-  conversion each way, output chunking) is made once.
+- :func:`map_rows` is the one Arrow boundary for per-row Python work:
+  the parse, extraction and multimodal operators and ``dedup.simhash``
+  pass it a per-row function, so a change to that boundary (worker
+  setup, the one conversion each way, output chunking) is made once.
+  Whole-batch bodies take PySpark's Arrow forms: ``ann``'s centroid UDF
+  and ``psl.idna_ascii_host`` are ``arrow_udf``s, and
+  ``curation.pack_sequences`` is a ``groupBy().applyInArrow``. Every
+  body sees ``None`` for a null; only the streaming sessionizer
+  (``applyInPandasWithState``) still runs on pandas.
 - :func:`ship_package` is the ``spark-submit --py-files`` contract
   (BASELINE.json north_rule) as a library call: from a plain
   SparkSession (notebooks, tests, the ``__spark_entry__`` queries) it
@@ -22,9 +27,9 @@ one for the spark-core jar (5,359 entries) and its ``org`` package: about
 0.2 s of directory reads per task before any user code runs.
 :func:`_prune_zip_importers` drops those importers and takes the jar off
 ``sys.path``, so the next task re-reads only the top-level zips, which
-later imports resolve through. It starts every Python body here
-(:func:`map_rows`, ``dedup.simhash``, ``ann``'s centroid UDF,
-``psl.idna_ascii_host``, ``curation.pack_sequences``) on every task,
+later imports resolve through. It starts every Arrow body above
+(:func:`map_rows`, ``ann``'s centroid UDF, ``psl.idna_ascii_host``,
+``curation.pack_sequences``) on every task,
 with no "already pruned" flag: the scan is a few dozen dict entries,
 and an import between two tasks may rebuild a sub-package importer
 (cheaply, from ``zipimport._zip_directory_cache``).

@@ -228,3 +228,14 @@ def test_ivf_exact_within_cluster(emb):
     want = [r["neighbor_id"] for r in
             brute_force_topk(cluster, q, k=3).collect()]
     assert got == want
+
+
+@pytest.mark.parametrize("bad", [[0.0, 1.0, 2.0], None])
+def test_transform_refuses_ragged_or_null_vectors(spark, bad):
+    """A batch's vectors are read as one B x dim matrix: a vector not
+    of the centroids' size, or a null one, fails the job rather than
+    being misread."""
+    df = spark.createDataFrame([(1, [1.0, 0.0]), (2, bad)],
+                               "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="non-null and of the centroids' size"):
+        kmeans_transform(df, [[1.0, 0.0], [0.0, 1.0]]).collect()

@@ -1,5 +1,6 @@
 """Token-budget sequence packing (curation.pack_sequences)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from rdf_spark.operators.curation import pack_sequences
@@ -57,3 +58,17 @@ def test_oversized_doc_gets_own_sequence(spark):
     same_seq = [d for d, r in out.items()
                 if r["seq_id"] == seq_of_1 and d != 1 and r["seq_offset"] > 0]
     assert same_seq == []
+
+
+def test_bucket_of_one_document(spark):
+    # an int doc_id is read as the declared long
+    docs = spark.createDataFrame([(7, "a b c"), (8, "d e")], "doc_id int, text string")
+    out = sorted(tuple(r) for r in pack_sequences(docs, max_tokens=4, buckets=64).collect())
+    assert [r[0] for r in out] == [7, 8] and out[0][2] != out[1][2]  # one document per bucket
+    assert [(r[0], r[1], r[3], r[4]) for r in out] == [(7, 3, 0, 0), (8, 2, 0, 0)]
+
+
+def test_non_integral_ids_are_refused(spark):
+    docs = spark.createDataFrame([(7.2, "a b"), (7.8, "c")], "doc_id double, text string")
+    with pytest.raises(TypeError, match="integral .doc_id., not DoubleType"):
+        pack_sequences(docs)

@@ -385,6 +385,20 @@ def test_wave_without_triples_keeps_its_lineage(spark, tmp_path):
     assert sum(x["docs_in"] for x in lineage) == 4
     assert all(x["docs_failed"] == x["docs_in"] for x in lineage)
     assert all(x["raw_triples"] == x["triples_out"] == 0 for x in lineage)
+    # no parquet file was written, and the output still reads: 0 rows
+    out = run.read_output()
+    assert out.count() == 0 and "part" == out.columns[-1]
+
+
+def test_read_output_reads_with_the_written_schema(spark, pages, tmp_path):
+    """read_output's declared schema is the one parquet infers from a
+    run's files: same columns, types and rows."""
+    run = PipelineRun(spark, str(tmp_path / "full"), n_buckets=2, run_id="a")
+    run.run(pages)
+    inferred = spark.read.parquet(run.data_dir)
+    out = run.read_output()
+    assert out.schema == inferred.schema
+    assert _normalized(out) == _normalized(inferred)
 
 
 def test_more_buckets_start_no_more_jobs(spark, pages, tmp_path):

@@ -454,3 +454,35 @@ def test_jsonld_container_list_without_id_via_vocab():
     heads2 = [q[2] for q in got2 if q[1] == ("i", "http://v/steps")]
     assert _walk_list(got2, heads2[0]) == [
         ("l", "a", None, None), ("l", "b", None, None)]
+
+
+_DEEP = 1200  # nested <div>s: deeper than Python's default recursion limit
+_DEEP_PAGE = ('<html lang="en"><head><title>Deep</title></head><body>'
+              + '<div id="d">' * _DEEP + "inner text" + "</div>" * _DEEP
+              + "</body></html>")
+
+
+def test_node_iter_is_document_order_preorder():
+    from rdf_spark.sources.html_rdf import _Node, build_tree
+
+    root = build_tree("<p>a<b>b<i>c</i></b>d</p><br>e")
+    got = [n.tag if isinstance(n, _Node) else n for n in root.iter()]
+    assert got == ["#root", "p", "a", "b", "b", "i", "c", "d", "br", "e"]
+    assert root.text() == "abcde"
+
+
+def test_deep_page_walks_without_recursion():
+    from rdf_spark.sources.extract import page_metadata_from_html
+    from rdf_spark.sources.html_rdf import build_tree
+
+    m = page_metadata_from_html(_DEEP_PAGE, base=BASE)
+    assert (m["title"], m["html_lang"]) == ("Deep", "en")
+    assert build_tree(_DEEP_PAGE).text() == "Deep" + "inner text"
+
+
+def test_extract_metadata_keeps_a_deep_page(spark):
+    from rdf_spark.sources.extract import extract_metadata
+
+    pages = spark.createDataFrame([(BASE, _DEEP_PAGE.encode())], "url string, html binary")
+    rows = extract_metadata(pages).collect()
+    assert [(r.url, r.title, r.html_lang) for r in rows] == [(BASE, "Deep", "en")]

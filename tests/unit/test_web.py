@@ -94,15 +94,19 @@ def test_registrable_domain_psl(spark):
 def test_registrable_domain_psl_idna(spark):
     from rdf_spark.functions.psl import registrable_domain_psl
 
+    long_label = "ü" * 64  # over IDNA's 63-character label limit
     rows = [("http://пример.рф/x",), ("http://xn--e1afmkfd.xn--p1ai/x",),
-            ("http://sub.Пример.рф/",), ("http://a.b.example.com/",)]
+            ("http://sub.Пример.рф/",), ("http://a.b.example.com/",),
+            (None,), (f"http://www.{long_label}.de/",)]
     df = spark.createDataFrame(rows, "url string")
     got = [r["domain"]
            for r in registrable_domain_psl(df, "url", idna=True).collect()]
-    # both spellings of the IDN host key to ONE punycode domain, and
-    # ASCII hosts take the unchanged fast path
+    # both spellings of the IDN host key to ONE punycode domain, ASCII
+    # hosts take the unchanged fast path, a null url has no domain, and
+    # a host the codec rejects passes through unchanged
     assert got == ["xn--e1afmkfd.xn--p1ai", "xn--e1afmkfd.xn--p1ai",
-                   "xn--e1afmkfd.xn--p1ai", "example.com"]
+                   "xn--e1afmkfd.xn--p1ai", "example.com",
+                   "", f"{long_label}.de"]
     # default (idna=False) keeps the pure-JVM plan: Unicode spelling
     # stays Unicode, so the two spellings do NOT merge
     plain = [r["domain"] for r in registrable_domain_psl(df, "url").collect()]
