@@ -980,10 +980,11 @@ def q_rdf_serialize_turtle(spark, sf_dir):
 def q_rdf_serialize_turtle_nested(spark, sf_dir):
     """Nested Turtle pretty-printer (S9 structural form, reference
     turtle/doc.go:849-858): single-use bnodes inline as [ ... ].
-    Per-document bnode labels are scoped first (scope_bnodes) since
+    Per-document bnode labels are made global first (skolemize) since
     the corpus merges many documents into one table."""
-    from rdf_spark.functions.serialize import scope_bnodes, serialize_turtle_nested
+    from rdf_spark.functions.serialize import serialize_turtle_nested
     from rdf_spark.operators.parse import good_triples, parse_pages
+    from rdf_spark.operators.skolemize import skolemize
 
     n = _read(spark, sf_dir, "nation")
     text = F.concat(
@@ -999,7 +1000,7 @@ def q_rdf_serialize_turtle_nested(spark, sf_dir):
                  F.col("n_nationkey").cast("string")).alias("url"),
         F.lit("turtle").alias("format"), text.alias("text"),
     )
-    t = scope_bnodes(good_triples(parse_pages(pages)))
+    t = skolemize(good_triples(parse_pages(pages)))
     return serialize_turtle_nested(t, {"ex": EX}).select("subj", "value")
 
 

@@ -135,34 +135,6 @@ def serialize_turtle(triples: DataFrame,
     return _subject_blocks(triples, prefixes, *_pred_obj_str(prefixes))
 
 
-def scope_bnodes(triples: DataFrame, scope_col: str = "url") -> DataFrame:
-    """Make per-document blank-node labels globally unique before
-    merging documents into one graph: label -> md5(scope)[:8]_label.
-    Required before serialize_turtle / serialize_turtle_nested on a
-    multi-document table — RDF bnode labels are document-scoped, so
-    flattening without relabeling would merge distinct nodes (the
-    pipeline's skolemize() is the production form of this)."""
-    from ..terms import KIND_BNODE
-
-    tag = F.concat(F.substring(F.md5(F.col(scope_col)), 1, 8), F.lit("_"))
-    out = triples.withColumn(
-        "subj",
-        F.when(F.col("subj_kind") == KIND_BNODE,
-               F.concat(tag, F.col("subj"))).otherwise(F.col("subj")),
-    ).withColumn(
-        "obj_lex",
-        F.when(F.col("obj_kind") == KIND_BNODE,
-               F.concat(tag, F.col("obj_lex"))).otherwise(F.col("obj_lex")),
-    )
-    if "graph_kind" in triples.columns:
-        out = out.withColumn(
-            "graph",
-            F.when(F.col("graph_kind") == KIND_BNODE,
-                   F.concat(tag, F.col("graph"))).otherwise(F.col("graph")),
-        )
-    return out
-
-
 def serialize_turtle_nested(triples: DataFrame,
                             prefixes: dict[str, str] | None = None,
                             max_depth: int = 10) -> DataFrame:
@@ -189,8 +161,9 @@ def serialize_turtle_nested(triples: DataFrame,
     prints as the compacted rdf:nil IRI — equivalent Turtle.
 
     Bnode labels must be globally unique across the input (they are
-    document-scoped in RDF): run scope_bnodes()/skolemize() first when
-    the table merges multiple documents, or colliding labels from
+    document-scoped in RDF): run
+    :func:`rdf_spark.operators.skolemize.skolemize` first when the
+    table merges multiple documents, or colliding labels from
     different documents read as one multi-referenced node.
 
     An export/debug sink: the leaf-at-a-time loop runs one small join

@@ -156,7 +156,8 @@ def pack_sequences(docs: DataFrame, max_tokens: int = 2048,
     """Greedy token-budget sequence packing for training-data prep:
     (doc_id, n_tokens, bucket, seq_id, seq_offset) with per-(bucket,
     seq_id) token totals <= max_tokens (a doc longer than the budget
-    gets its own sequence). ``id_col`` must be integral.
+    gets its own sequence; a null text counts as 0 tokens). ``id_col``
+    must be integral.
 
     Packing is inherently sequential, so the corpus is first split
     into md5-hash buckets (deterministic, uniform) and the greedy scan
@@ -179,7 +180,7 @@ def pack_sequences(docs: DataFrame, max_tokens: int = 2048,
         raise TypeError(f"pack_sequences needs an integral {id_col!r}, not {id_type}")
     src = docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
-        token_count(F.col(text_col)).alias("n_tokens"),
+        F.coalesce(token_count(F.col(text_col)), F.lit(0)).alias("n_tokens"),
         (stratum_hash(F.col(id_col)) % buckets).cast("int").alias("bucket"),
     )
 

@@ -19,8 +19,16 @@ Scope (documented subset, deterministic):
   document; circular references cut with an active-item guard —
   invalid microdata per spec, never an infinite loop).
 
-Determinism: a pure function of the HTML bytes — parse order is
-document order, blank-node labels are per-document counters
+Walks: pre-order (document order) with an explicit stack, so element
+depth is bounded by memory, not the recursion limit; RDFa carries its
+scoped context on the stack. A Microdata top-level item is every
+``itemscope`` element without ``itemprop``, nested in another item or
+not, in document order. The one recursion left is a property whose
+value is an item (``item_node`` <-> ``prop_value``): its depth is the
+nesting depth of items, not of elements.
+
+Determinism: a pure function of the HTML bytes — quads come in walk
+order, blank-node labels are per-document counters in that order
 (``ra%d`` / ``md%d``; skolemization makes them globally unique
 downstream, SURVEY.md §2.4 R8). Runs inside the same Arrow-batched
 per-row pass as the grammar parsers (operators/parse.py, through
@@ -30,6 +38,7 @@ per-row pass as the grammar parsers (operators/parse.py, through
 from __future__ import annotations
 
 from html.parser import HTMLParser
+from itertools import count
 from urllib.parse import urljoin
 
 from ..terms import RDF_TYPE, bnode, escape_literal_lex, iri, literal
@@ -139,39 +148,43 @@ def _rdfa_expand(name: str, vocab: str | None, prefixes: dict) -> str | None:
 
 def _parse_prefix_attr(value: str, into: dict) -> None:
     toks = value.split()
-    i = 0
-    while i + 1 < len(toks):
-        p = toks[i]
+    for p, v in zip(toks[::2], toks[1::2]):
         if p.endswith(":"):
-            into[p[:-1]] = toks[i + 1]
-        i += 2
+            into[p[:-1]] = v
+
+
+def _ref(base: str, ref: str):
+    """IRI term of ``ref``, resolved against the page ``base`` when
+    there is one."""
+    return iri(urljoin(base, ref) if base else ref)
 
 
 def parse_rdfa(html: bytes | str, base: str = ""):
-    """HTML with RDFa-lite markup -> list of (s, p, o, None) quads."""
-    root = build_tree(html)
+    """HTML with RDFa-lite markup -> list of (s, p, o, None) quads.
+
+    One pre-order walk with an explicit stack; each entry carries the
+    element with the context it inherits (subject, vocab, prefixes,
+    lang), so scoping needs no recursion."""
     quads: list = []
-    counter = [0]
+    labels = count()
 
     def fresh():
-        counter[0] += 1
-        return bnode(f"ra{counter[0] - 1}")
+        return bnode(f"ra{next(labels)}")
 
-    def resolve(ref: str):
-        return iri(urljoin(base, ref) if base else ref)
-
-    def walk(node, subject, vocab, prefixes, lang):
+    doc_subject = iri(base) if base else fresh()
+    stack = [(build_tree(html), doc_subject, None, RDFA_INITIAL_PREFIXES, None)]
+    while stack:
+        node, subject, vocab, prefixes, lang = stack.pop()
         a = node.attrs
-        if "vocab" in a and a["vocab"]:
+        if a.get("vocab"):
             vocab = a["vocab"]
-        if "prefix" in a and a["prefix"]:
-            prefixes = dict(prefixes)
+        if a.get("prefix"):
+            prefixes = dict(prefixes)  # copy on write: the parent's map is shared
             _parse_prefix_attr(a["prefix"], prefixes)
         lang = a.get("lang") or a.get("xml:lang") or lang
 
-        new_subject = None
-        if a.get("about") is not None:
-            new_subject = resolve(a["about"])
+        about = a.get("about")
+        new_subject = _ref(base, about) if about is not None else None
         prop_names = (a.get("property") or "").split()
         types = (a.get("typeof") or "").split()
 
@@ -179,7 +192,7 @@ def parse_rdfa(html: bytes | str, base: str = ""):
         obj_ref = None
         for key in ("resource", "href", "src"):
             if a.get(key) is not None:
-                obj_ref = resolve(a[key])
+                obj_ref = _ref(base, a[key])
                 break
 
         if types and new_subject is None:
@@ -188,44 +201,32 @@ def parse_rdfa(html: bytes | str, base: str = ""):
 
         here = new_subject if new_subject is not None else subject
 
-        if types:
-            for t in types:
-                ti = _rdfa_expand(t, vocab, prefixes)
-                if ti:
-                    quads.append((here, iri(RDF_TYPE), iri(ti), None))
+        for t in types:
+            ti = _rdfa_expand(t, vocab, prefixes)
+            if ti:
+                quads.append((here, iri(RDF_TYPE), iri(ti), None))
 
         if prop_names:
             preds = [
                 pi for pi in (_rdfa_expand(p, vocab, prefixes) for p in prop_names) if pi
             ]
-            if new_subject is not None and a.get("about") is None:
+            if new_subject is not None and about is None:
                 # property + typeof/resource: link parent -> new node
                 for pi in preds:
                     quads.append((subject, iri(pi), here, None))
             else:
                 if a.get("content") is not None:
                     obj = _lit(a["content"], None, lang or None)
-                elif obj_ref is not None and "resource" not in a:
-                    obj = obj_ref
-                elif a.get("resource") is not None:
-                    obj = resolve(a["resource"])
+                elif obj_ref is not None and a.get("resource", "") is not None:
+                    obj = obj_ref  # a bare ``resource`` attribute keeps the literal
                 else:
                     dt = _rdfa_expand(a.get("datatype") or "", vocab, prefixes)
                     obj = _lit(node.text(), dt, None if dt else (lang or None))
                 for pi in preds:
                     quads.append((here, iri(pi), obj, None))
-                # a pure-literal property element does not change subject ctx
-                for c in node.children:
-                    if isinstance(c, _Node):
-                        walk(c, here, vocab, prefixes, lang)
-                return
 
-        for c in node.children:
-            if isinstance(c, _Node):
-                walk(c, here, vocab, prefixes, lang)
-
-    doc_subject = iri(base) if base else fresh()
-    walk(root, doc_subject, None, dict(RDFA_INITIAL_PREFIXES), None)
+        stack.extend((c, here, vocab, prefixes, lang)
+                     for c in reversed(node.children) if isinstance(c, _Node))
     return quads
 
 
@@ -241,26 +242,42 @@ def _md_vocab(itemtype: str) -> str:
     return itemtype
 
 
+def _item_props(starts):
+    """The ``itemprop`` elements among ``starts`` and their descendants,
+    in document order. Does not go inside an ``itemscope`` element:
+    what is below it belongs to that item."""
+    stack = list(reversed(starts))
+    while stack:
+        n = stack.pop()
+        if (n.attrs.get("itemprop") or "").split():
+            yield n
+        if "itemscope" not in n.attrs:
+            stack.extend(c for c in reversed(n.children) if isinstance(c, _Node))
+
+
 def parse_microdata(html: bytes | str, base: str = ""):
-    """HTML with Microdata markup -> list of (s, p, o, None) quads."""
-    root = build_tree(html)
+    """HTML with Microdata markup -> list of (s, p, o, None) quads.
+
+    An item's properties are the ``itemprop`` elements that
+    :func:`_item_props` finds below it and below its ``itemref``
+    targets. ``item_node`` and ``prop_value`` recurse once per nested
+    property item; the ``active`` guard cuts ``itemref`` cycles."""
     quads: list = []
-    counter = [0]
-
-    # id -> element index for @itemref resolution (first id wins,
-    # matching getElementById)
-    ids: dict = {}
-
-    for node in root.iter():
-        nid = isinstance(node, _Node) and node.attrs.get("id")
-        if nid and nid not in ids:
-            ids[nid] = node
+    labels = count()
+    ids: dict = {}  # id -> element for @itemref (first id wins, as getElementById)
+    tops = []
+    for node in build_tree(html).iter():
+        if isinstance(node, _Node):
+            a = node.attrs
+            if a.get("id") and a["id"] not in ids:
+                ids[a["id"]] = node
+            if "itemscope" in a and "itemprop" not in a:
+                tops.append(node)
 
     active: set = set()  # items currently being crawled (cycle guard)
 
     def fresh():
-        counter[0] += 1
-        return bnode(f"md{counter[0] - 1}")
+        return bnode(f"md{next(labels)}")
 
     def item_node(node):
         if id(node) in active:
@@ -268,39 +285,32 @@ def parse_microdata(html: bytes | str, base: str = ""):
             # fresh item with no properties rather than recursing
             return fresh()
         active.add(id(node))
-        try:
-            a = node.attrs
-            if a.get("itemid"):
-                subj = iri(urljoin(base, a["itemid"]) if base
-                           else a["itemid"])
-            else:
-                subj = fresh()
-            types = (a.get("itemtype") or "").split()
-            vocab = _md_vocab(types[0]) if types else ""
-            for t in types:
-                quads.append((subj, iri(RDF_TYPE), iri(t), None))
-            for c in node.children:
-                if isinstance(c, _Node):
-                    walk_props(c, subj, vocab)
-            for ref in (a.get("itemref") or "").split():
-                tgt = ids.get(ref)
-                if tgt is not None:
-                    walk_props(tgt, subj, vocab)
-            return subj
-        finally:
-            active.discard(id(node))
+        a = node.attrs
+        subj = _ref(base, a["itemid"]) if a.get("itemid") else fresh()
+        types = (a.get("itemtype") or "").split()
+        vocab = _md_vocab(types[0]) if types else ""
+        for t in types:
+            quads.append((subj, iri(RDF_TYPE), iri(t), None))
+        starts = [c for c in node.children if isinstance(c, _Node)]
+        starts += [ids[r] for r in (a.get("itemref") or "").split() if r in ids]
+        for el in _item_props(starts):
+            val = prop_value(el)
+            for p in el.attrs["itemprop"].split():
+                quads.append((subj, iri(p if ":" in p else vocab + p), val, None))
+        active.discard(id(node))
+        return subj
 
     def prop_value(node):
         a = node.attrs
         if "itemscope" in a:
             return item_node(node)
         if node.tag in ("a", "area", "link") and a.get("href") is not None:
-            return iri(urljoin(base, a["href"]) if base else a["href"])
+            return _ref(base, a["href"])
         if node.tag in ("img", "audio", "video", "embed", "iframe", "source",
                         "track") and a.get("src") is not None:
-            return iri(urljoin(base, a["src"]) if base else a["src"])
+            return _ref(base, a["src"])
         if node.tag == "object" and a.get("data") is not None:
-            return iri(urljoin(base, a["data"]) if base else a["data"])
+            return _ref(base, a["data"])
         if node.tag == "meta" or a.get("content") is not None:
             return _lit(a.get("content") or "")
         if node.tag in ("time",) and a.get("datetime") is not None:
@@ -309,30 +319,6 @@ def parse_microdata(html: bytes | str, base: str = ""):
             return _lit(a["value"])
         return _lit(node.text())
 
-    def walk_props(node, subj, vocab):
-        a = node.attrs
-        props = (a.get("itemprop") or "").split()
-        if props:
-            val = prop_value(node)
-            for p in props:
-                pred = p if ":" in p else vocab + p
-                quads.append((subj, iri(pred), val, None))
-            if "itemscope" in a:
-                return  # nested item handled its own subtree
-        if "itemscope" in a and not props:
-            return  # a nested top-level item; handled by top-level scan
-        for c in node.children:
-            if isinstance(c, _Node):
-                walk_props(c, subj, vocab)
-
-    def scan_top(node):
-        a = node.attrs
-        if "itemscope" in a and "itemprop" not in a:
-            item_node(node)
-            return
-        for c in node.children:
-            if isinstance(c, _Node):
-                scan_top(c)
-
-    scan_top(root)
+    for node in tops:
+        item_node(node)
     return quads

@@ -72,3 +72,9 @@ def test_non_integral_ids_are_refused(spark):
     docs = spark.createDataFrame([(7.2, "a b"), (7.8, "c")], "doc_id double, text string")
     with pytest.raises(TypeError, match="integral .doc_id., not DoubleType"):
         pack_sequences(docs)
+
+
+def test_null_text_packs_as_zero_tokens(spark):
+    docs = spark.createDataFrame([(1, "a b"), (2, None)], "doc_id long, text string")
+    out = sorted(tuple(r) for r in pack_sequences(docs, max_tokens=4, buckets=1).collect())
+    assert [(r[0], r[1], r[3], r[4]) for r in out] == [(1, 2, 0, 0), (2, 0, 0, 2)]

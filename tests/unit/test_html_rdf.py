@@ -106,6 +106,23 @@ def test_microdata_deterministic():
     assert parse_microdata(html, base=BASE) == parse_microdata(html, base=BASE)
 
 
+def test_microdata_top_level_item_inside_another_item():
+    # an itemscope without itemprop is a top-level item wherever it
+    # sits; its properties are its own, not the enclosing item's
+    html = (
+        '<div itemscope itemtype="http://schema.org/Person"><span itemprop="name">A</span>'
+        '<div itemscope itemtype="http://schema.org/Place"><span itemprop="name">P</span>'
+        '</div></div>'
+    )
+    a, p = ("b", "md0"), ("b", "md1")
+    assert parse_microdata(html, base=BASE) == [
+        (a, ("i", RDF_TYPE), ("i", "http://schema.org/Person"), None),
+        (a, ("i", "http://schema.org/name"), ("l", "A", None, None), None),
+        (p, ("i", RDF_TYPE), ("i", "http://schema.org/Place"), None),
+        (p, ("i", "http://schema.org/name"), ("l", "P", None, None), None),
+    ]
+
+
 def test_rdfa_vocab_about_typeof_property():
     html = (
         '<div vocab="http://schema.org/" about="http://ex/b" typeof="Person">'
@@ -486,3 +503,100 @@ def test_extract_metadata_keeps_a_deep_page(spark):
     pages = spark.createDataFrame([(BASE, _DEEP_PAGE.encode())], "url string, html binary")
     rows = extract_metadata(pages).collect()
     assert [(r.url, r.title, r.html_lang) for r in rows] == [(BASE, "Deep", "en")]
+
+
+# markup deeper than the recursion limit: one microdata item and one
+# RDFa node whose property elements sit _DEEP levels below them
+_DEEP_MARKUP_PAGE = (
+    '<html><body><div vocab="http://schema.org/" typeof="Person"'
+    ' itemscope itemtype="http://schema.org/Person">' + "<div>" * _DEEP
+    + '<span property="name" itemprop="name">Alice</span>' + "</div>" * _DEEP
+    + "</div></body></html>")
+_DEEP_TRIPLES = {  # format -> (subj, pred, obj_lex) of its rows
+    fmt: [(label, RDF_TYPE, "http://schema.org/Person"),
+          (label, "http://schema.org/name", "Alice")]
+    for fmt, label in (("microdata", "md0"), ("rdfa", "ra0"))
+}
+
+
+def test_deep_page_gives_its_markup_triples():
+    from rdf_spark.operators.parse import doc_to_rows
+
+    for fmt, want in _DEEP_TRIPLES.items():
+        rows = doc_to_rows(BASE, fmt, _DEEP_MARKUP_PAGE)
+        assert [r[-1] for r in rows] == [None, None]  # no error row
+        assert [(r[2], r[3], r[5]) for r in rows] == want
+
+
+def test_parse_pages_keeps_a_deep_page(spark):
+    from rdf_spark.operators.parse import parse_pages
+
+    pages = spark.createDataFrame([(BASE, _DEEP_MARKUP_PAGE.encode())], "url string, html binary")
+    rows = parse_pages(pages).collect()
+    assert [r.error for r in rows] == [None] * 4
+    assert [(r.subj, r.pred, r.obj_lex) for r in rows] == (
+        _DEEP_TRIPLES["microdata"] + _DEEP_TRIPLES["rdfa"])
+
+
+def test_mixed_page_order_and_labels_are_pinned():
+    # nested property items, itemref, an itemref cycle (c1 refers to
+    # itself) and RDFa prefix/vocab/lang scoping; the expected lists
+    # are the recursive extractors' output, labels included
+    html = (
+        '<html><body vocab="http://schema.org/" prefix="ex: http://ex/ns#">'
+        '<div typeof="Person" about="#alice"><span property="name">Alice</span>'
+        '<div prefix="ex: http://other/ns#" lang="de"><span property="ex:nick">Ali</span>'
+        '<a property="knows" typeof="Person" href="/bob"><span property="name">Bob</span></a>'
+        '<span property="ex:made" typeof="ex:Work"><span property="name">W</span></span></div>'
+        '<span property="ex:nick">A</span>'
+        '<div vocab="http://xmlns.com/foaf/0.1/" typeof="Document">'
+        '<span property="title">T</span></div></div>'
+        '<div itemscope itemtype="http://schema.org/Person" itemref="addr c1">'
+        '<span itemprop="name">Carol</span>'
+        '<div itemprop="knows" itemscope itemtype="http://schema.org/Person">'
+        '<span itemprop="name">Dan</span>'
+        '<div itemprop="knows" itemscope itemtype="http://ex/v#Agent" itemref="c1">'
+        '<span itemprop="name">Eve</span></div></div></div>'
+        '<p id="addr" itemprop="address">Main St</p>'
+        '<div id="c1" itemprop="colleague" itemscope itemtype="http://ex/v#Agent" itemref="c1">'
+        '<span itemprop="name">Cy</span></div></body></html>'
+    )
+    S, V = "http://schema.org/", "http://ex/v#"
+    b = lambda n: ("b", n)  # noqa: E731
+    i = lambda v: ("i", v)  # noqa: E731
+    lit = lambda v, lang=None: ("l", v, None, lang)  # noqa: E731
+    typ = i(RDF_TYPE)
+    assert parse_microdata(html, base=BASE) == [
+        (b("md0"), typ, i(S + "Person"), None),
+        (b("md0"), i(S + "name"), lit("Carol"), None),
+        (b("md1"), typ, i(S + "Person"), None),
+        (b("md1"), i(S + "name"), lit("Dan"), None),
+        (b("md2"), typ, i(V + "Agent"), None),
+        (b("md2"), i(V + "name"), lit("Eve"), None),
+        (b("md3"), typ, i(V + "Agent"), None),
+        (b("md3"), i(V + "name"), lit("Cy"), None),
+        (b("md3"), i(V + "colleague"), b("md4"), None),
+        (b("md2"), i(V + "colleague"), b("md3"), None),
+        (b("md1"), i(S + "knows"), b("md2"), None),
+        (b("md0"), i(S + "knows"), b("md1"), None),
+        (b("md0"), i(S + "address"), lit("Main St"), None),
+        (b("md5"), typ, i(V + "Agent"), None),
+        (b("md5"), i(V + "name"), lit("Cy"), None),
+        (b("md5"), i(V + "colleague"), b("md6"), None),
+        (b("md0"), i(S + "colleague"), b("md5"), None),
+    ]
+    alice, bob = i(BASE + "#alice"), i("http://crawl.example/bob")
+    assert parse_rdfa(html, base=BASE) == [
+        (alice, typ, i(S + "Person"), None),
+        (alice, i(S + "name"), lit("Alice"), None),
+        (alice, i("http://other/ns#nick"), lit("Ali", "de"), None),
+        (bob, typ, i(S + "Person"), None),
+        (alice, i(S + "knows"), bob, None),
+        (bob, i(S + "name"), lit("Bob", "de"), None),
+        (b("ra0"), typ, i("http://other/ns#Work"), None),
+        (alice, i("http://other/ns#made"), b("ra0"), None),
+        (b("ra0"), i(S + "name"), lit("W", "de"), None),
+        (alice, i("http://ex/ns#nick"), lit("A"), None),
+        (b("ra1"), typ, i("http://xmlns.com/foaf/0.1/Document"), None),
+        (b("ra1"), i("http://xmlns.com/foaf/0.1/title"), lit("T"), None),
+    ]
